@@ -96,69 +96,13 @@ object Decontam {
     * derive the duplicate fraction n_dup_grams / n_grams; docs shorter
     * than `n` tokens emit (0, 0). */
   def dupNgramStats(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 8, preHash: Boolean = false): DataFrame = {
-    if (preHash)
-      return dupNgramStatsPreHashed(df, idCol, textCol, n)
+      n: Int = 8): DataFrame = {
     val grams = docGrams(df, idCol, textCol, n)
     // gram frequency across docs = distinct-doc count per gram (the
     // docGrams dedup makes count(*) exactly that); map-side partial agg,
     // one gram-hash shuffle
     val freq = grams.groupBy("gram").agg(count(lit(1)).as("gf"))
     statsOver(df.select(col(idCol).as("doc_id")), grams, freq)
-  }
-
-  /** `preHash = true` (round-6 verdict item 8): the frequency shuffle
-    * carries xxhash64 KEYS instead of raw gram strings (~8 bytes vs
-    * ~50+ on long grams), and exactness is restored by a STRING
-    * verification pass over just the collision-candidate keys (hash
-    * keys seen >= 2 times — a gram is dup iff its STRING count is
-    * >= 2, so a cross-gram hash collision can never flip a verdict:
-    * candidates are verified per (hash, gram), and a doc's dup grams
-    * are counted through a semi-join on the verified dup set, which is
-    * duplication-scale and broadcast by AQE). Output is bit-identical
-    * to the string-keyed path; opt-in because the win is shuffle BYTES
-    * (a deployment-scale concern the toy bench cannot see — the
-    * GramHashProbe tool reports the measured ratio). */
-  private def dupNgramStatsPreHashed(df: DataFrame, idCol: String,
-      textCol: String, n: Int): DataFrame = {
-    val grams = docGrams(df, idCol, textCol, n)
-    val hashed = grams.select(col("doc_id"), col("gram"),
-      xxhash64(col("gram")).as("gh"))
-    // hash-only frequency shuffle: 8-byte keys, no strings
-    val cand = hashed.groupBy("gh").agg(count(lit(1)).as("ghf"))
-      .where(col("ghf") > 1).select("gh")
-    // the candidate semi MUST be an explicit broadcast: left to the
-    // planner, the big side's shuffle-map output (every gram string) is
-    // written before AQE can convert the join, defeating the option's
-    // whole point (measured: the hash path shuffled MORE than the
-    // string path). The broadcast is guarded by an exact count — a
-    // duplication-heavy corpus (many repeated keys) falls back to the
-    // string-keyed path, where it belongs anyway: its verification pass
-    // would be corpus-scale
-    val nCand = cand.count()
-    if (nCand > 10000000L) {
-      System.err.println(
-        s"[graft.curate.Decontam] preHash: $nCand candidate keys exceed the " +
-          "broadcast budget (duplication-heavy corpus) — using the " +
-          "string-keyed path")
-      return dupNgramStats(df, idCol, textCol, n, preHash = false)
-    }
-    val candRows = hashed.join(broadcast(cand), Seq("gh"), "left_semi")
-    // string verification: a key is a TRUE dup gram iff one string
-    // under it repeats (a cross-gram collision never flips a verdict)
-    val verifiedDup = candRows
-      .groupBy("gh", "gram").agg(count(lit(1)).as("gf"))
-      .where(col("gf") > 1)
-      .select("gh", "gram")
-    val perDoc = candRows
-      .join(verifiedDup, Seq("gh", "gram"), "left_semi")
-      .groupBy("doc_id").agg(count(lit(1)).as("n_dup_grams"))
-    // n_grams is doc-local (distinct grams per doc) — no shuffle at all
-    val totals = df.select(col(idCol).as("doc_id"),
-      size(array_distinct(tokenNgrams(col(textCol), n))).cast("bigint").as("n_grams"))
-    totals.join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_grams"),
-        coalesce(col("n_dup_grams"), lit(0L)).as("n_dup_grams"))
   }
 
   /** The (doc_id, n_grams, n_dup_grams) rollup shared by the one-shot

@@ -88,9 +88,10 @@ object Dedup {
       banded.groupBy("bucket").agg(count(lit(1)).as("bsz")), maxBucket)
 
   /** [[capBuckets]] against a CALLER-SUPPLIED census (bucket, bsz) — the
-    * index-at-rest shape: [[survivorsIncremental]] maintains the standing
-    * bucket sizes incrementally and derives the union census from the
-    * batch's band deltas alone, so the cap never re-counts the corpus.
+    * index-at-rest shape: [[survivorsIncrementalDelta]] maintains the
+    * standing bucket sizes incrementally and derives the union census
+    * from the batch's band deltas alone, so the cap never re-counts the
+    * corpus.
     * Rows whose bucket is absent from `sizes` pass through uncapped
     * (left join → nb = 1), so a census restricted to the buckets a probe
     * can reach is sufficient. */
@@ -219,8 +220,8 @@ object Dedup {
   }
 
   /** The banded self-join half of [[minhashPairs]], over a caller-persisted
-    * signature table (the index-at-rest shape [[survivorsIncremental]]'s
-    * standing state uses). */
+    * signature table (the index-at-rest shape
+    * [[survivorsIncrementalDelta]]'s standing state uses). */
   private[graft] def minhashPairsFromSigs(
       sigs: DataFrame,
       nHashes: Int,
@@ -250,8 +251,8 @@ object Dedup {
   }
 
   /** (id, sig) MinHash signature table — the LSH index relation a
-    * deployment persists (and [[survivorsIncremental]] treats as standing
-    * state). */
+    * deployment persists (and [[survivorsIncrementalDelta]] treats as
+    * standing state). */
   private[graft] def minhashSigs(
       df: DataFrame, idCol: String, textCol: String,
       shingleK: Int, nHashes: Int): DataFrame = {
@@ -387,11 +388,11 @@ object Dedup {
     * edges only (|edges| << |corpus| after blocking) — no stage touches
     * the full pair space.
     *
-    * Precondition (also for [[survivorsIncremental]]): `textCol` must be
-    * non-null — md5(NULL) is NULL and the content-hash equi-joins drop
-    * such rows from the decision table entirely (no keep AND no drop),
-    * exactly as the SQL oracle's join does. Filter or impute null text
-    * upstream. */
+    * Precondition (also for [[survivorsIncrementalDelta]]): `textCol`
+    * must be non-null — md5(NULL) is NULL and the content-hash
+    * equi-joins drop such rows from the decision table entirely (no keep
+    * AND no drop), exactly as the SQL oracle's join does. Filter or
+    * impute null text upstream. */
   def survivors(
       df: DataFrame,
       idCol: String,
@@ -455,18 +456,26 @@ object Dedup {
       _.select(col("doc_a").as("a"), col("doc_b").as("b")))
     val edges = contEdges.foldLeft(exactEdges.unionByName(nearEdges))(_ unionByName _)
     val cc = graft.er.Clustering.connectedComponents(spark, edges)
-    // containment victims (pair-table scale, distinct doc ids ≤ corpus):
-    // flagged via a left join, NOT a broadcast hint — victim volume is
-    // corpus-derived (the no-forced-broadcast audit rule); AQE broadcasts
-    // it from runtime stats while it fits
-    val victims = cont.map(
-      _.select(col("doc_a").as("id")).distinct().withColumn("is_contained", lit(true)))
-    val base = victims.foldLeft(withG.join(cc, Seq("id"), "left"))(
-      (d, v) => d.join(v, Seq("id"), "left"))
+    // containment victims: pair-table scale, distinct doc ids ≤ corpus
+    withTiers(withG.join(cc, Seq("id"), "left"),
+      cont.map(_.select(col("doc_a").as("id")).distinct()))
+  }
+
+  /** The tier policy, written once for the batch table, the index
+    * bootstrap and both folds: survivor_id = coalesce(cluster, id), tier
+    * precedence keep > exact > contained > near (see [[survivors]]).
+    * `base` carries (id, has_exact, cluster); `victims` (id) is the
+    * containment-victim set when the containment tier is maintained —
+    * flagged via a left join, NOT a broadcast hint: victim volume is
+    * corpus-derived (the no-forced-broadcast audit rule); AQE broadcasts
+    * it from runtime stats while it fits. */
+  private def withTiers(base: DataFrame, victims: Option[DataFrame]): DataFrame = {
+    val withV = victims.foldLeft(base)((d, v) =>
+      d.join(v.withColumn("is_contained", lit(true)), Seq("id"), "left"))
     val contained =
-      if (containmentPairs.isDefined) coalesce(col("is_contained"), lit(false))
+      if (victims.isDefined) coalesce(col("is_contained"), lit(false))
       else lit(false)
-    base
+    withV
       .withColumn("survivor_id", coalesce(col("cluster"), col("id")))
       .withColumn(
         "tier",
@@ -478,9 +487,9 @@ object Dedup {
   }
 
   /** The standing dedup state a deployment maintains between crawl
-    * increments — the relations [[survivorsIncremental]] folds a document
-    * batch into. All frames should be persisted by the caller (they are
-    * each read multiple times per fold):
+    * increments — the relations [[survivorsIncrementalDelta]] folds a
+    * document batch into. All frames should be persisted by the caller
+    * (they are each read multiple times per fold):
     *   - `hashed` (id, content_hash): node-scale narrow table;
     *   - `sigs` (id, sig): the MinHash signature table;
     *   - `banded` (bucket, id, sig): the BANDED LSH index at rest — the
@@ -520,19 +529,19 @@ object Dedup {
         * fold can emit only the CHANGED rows and pass every other row
         * through untouched (round-6 verdict item 3: fold output volume
         * must track the batch, not re-derive the corpus-scale table). */
-      decisions: DataFrame = null) {
+      decisions: DataFrame) {
     /** Every frame a caller should persist/unpersist as a unit. */
     def frames: Seq[DataFrame] =
-      Seq(hashed, sigs, banded, bucketSizes, groups, clusters) ++
-        Option(decisions).toSeq
+      Seq(hashed, sigs, banded, bucketSizes, groups, clusters, decisions)
   }
 
   /** Build the standing index from a document table (the one-time batch
     * bootstrap; every later increment goes through
-    * [[survivorsIncremental]]). `cache` is applied to each index frame
-    * BEFORE downstream use — pass `_.persist(...)` so the bootstrap's CC
-    * (which references sigs several times) and every later fold read the
-    * materialized frames instead of re-shingling the standing corpus. */
+    * [[survivorsIncrementalDelta]]). `cache` is applied to each index
+    * frame BEFORE downstream use — pass `_.persist(...)` so the
+    * bootstrap's CC (which references sigs several times) and every later
+    * fold read the materialized frames instead of re-shingling the
+    * standing corpus. */
   def buildSurvivorIndex(
       df: DataFrame,
       idCol: String,
@@ -542,8 +551,27 @@ object Dedup {
       rowsPerBand: Int = 8,
       minJaccard: Double = 0.5,
       maxBucket: Int = DefaultMaxBucket,
-      cache: DataFrame => DataFrame = identity,
-      extraEdges: Option[DataFrame] = None): SurvivorIndex = {
+      cache: DataFrame => DataFrame = identity): SurvivorIndex =
+    buildIndex(df, idCol, textCol, shingleK, nHashes, rowsPerBand,
+      minJaccard, maxBucket, cache, extraEdges = None, victims = None)
+
+  /** [[buildSurvivorIndex]] with the containment tier of
+    * [[buildFullSurvivorIndex]] folded in: `extraEdges` (a, b) are
+    * contracted into the standing clusters with the exact and near edges,
+    * and the standing decisions are assembled against `victims` — so the
+    * one decision table the bootstrap persists is the one it returns. */
+  private def buildIndex(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      shingleK: Int,
+      nHashes: Int,
+      rowsPerBand: Int,
+      minJaccard: Double,
+      maxBucket: Int,
+      cache: DataFrame => DataFrame,
+      extraEdges: Option[DataFrame],
+      victims: Option[DataFrame]): SurvivorIndex = {
     val spark = df.sparkSession
     val nBands = nHashes / rowsPerBand
     val hashed = cache(df.select(
@@ -564,50 +592,51 @@ object Dedup {
       minhashPairsFromBanded(
         capBucketsWith(banded, bucketSizes, maxBucket), nHashes, minJaccard)
         .select(col("id_a").as("a"), col("id_b").as("b"))
-    // extraEdges: additional (a, b) duplicate evidence the standing
-    // cluster state should contract at bootstrap — the containment tier
-    // of [[buildFullSurvivorIndex]] feeds its edges through here so
     // idx.clusters is CC over the SAME edge classes every later fold adds
     val clusters = cache(graft.er.Clustering.connectedComponents(
       spark, extraEdges.foldLeft(exactEdges.unionByName(nearEdges))(_ unionByName _)))
     SurvivorIndex(hashed, sigs, banded, bucketSizes, groups, clusters,
       shingleK, nHashes, rowsPerBand, minJaccard, maxBucket,
-      decisions = cache(assembleDecisions(hashed, groups, clusters, victims = None)))
+      decisions = cache(assembleDecisions(hashed, groups, clusters, victims)))
   }
 
-  /** The (id, survivor_id, tier) assembly over a standing state — the
-    * survivors() tail factored out so the bootstrap can seed
-    * [[SurvivorIndex.decisions]] with exactly the rules every fold
-    * applies (tier precedence keep > exact > contained > near). */
+  /** The (id, survivor_id, tier) assembly over a state — `hashed`
+    * (id, content_hash) joined to its group sizes in `groups`
+    * (content_hash, gsz) and its labels in `clusters` (id, cluster),
+    * then [[withTiers]]. Seeds [[SurvivorIndex.decisions]] at bootstrap
+    * and assembles every fold's rows, so all of them apply one rule. */
   private def assembleDecisions(
       hashed: DataFrame,
       groups: DataFrame,
       clusters: DataFrame,
-      victims: Option[DataFrame]): DataFrame = {
-    val base = hashed.join(groups, Seq("content_hash"))
-      .select(col("id"), (col("gsz") > 1).as("has_exact"))
-      .join(clusters, Seq("id"), "left")
-    val withV = victims.foldLeft(base)((d, v) =>
-      d.join(v.withColumn("is_contained", lit(true)), Seq("id"), "left"))
-    val contained =
-      if (victims.isDefined) coalesce(col("is_contained"), lit(false))
-      else lit(false)
-    withV
-      .withColumn("survivor_id", coalesce(col("cluster"), col("id")))
-      .withColumn(
-        "tier",
-        when(col("survivor_id") === col("id"), lit("keep"))
-          .when(col("has_exact"), lit("exact"))
-          .when(contained, lit("contained"))
-          .otherwise(lit("near")))
-      .select(col("id"), col("survivor_id"), col("tier"))
-  }
+      victims: Option[DataFrame]): DataFrame =
+    withTiers(
+      hashed.join(groups, Seq("content_hash"))
+        .select(col("id"), (col("gsz") > 1).as("has_exact"))
+        .join(clusters, Seq("id"), "left"),
+      victims)
+
+  /** A fold's result as (changed rows, full view) — round-6 verdict item
+    * 3: the decision table is node-scale but only batch-scale pieces of
+    * it can change per fold, so the fold emits exactly those CHANGED
+    * rows and the full table is the standing decisions with the changed
+    * ids passed over (anti-join + union — "touched rows + unchanged
+    * passthrough"). `changed` covers precisely the ids whose row CAN
+    * differ from the standing table: the batch's own ids, standing
+    * members of content-hash groups the batch touched (has_exact can
+    * flip, group-min relabels), standing ids whose cluster label merged
+    * (survivor_id changes), and new containment victims (tier flips to
+    * "contained"). Every other row is provably bit-unchanged: its union
+    * group equals its standing group, its label was not relabeled, and
+    * victimhood is monotone. */
+  final case class SurvivorDelta(changed: DataFrame, full: DataFrame)
 
   /** Incremental survivors fold — the training-data refresh twin of
-    * [[graft.er.Clustering.incrementalClusters]]: fold a batch of NEW
-    * documents into the standing index and return the refreshed
-    * (id, survivor_id, tier) decision table over the union, WITHOUT
-    * re-shingling or re-clustering the standing corpus.
+    * [[graft.er.Clustering.incrementalClustersWithDelta]]: fold a batch
+    * of NEW documents into the standing index and return the refreshed
+    * (id, survivor_id, tier) decision table over the union (`full`) and
+    * its changed rows, WITHOUT re-shingling or re-clustering the
+    * standing corpus.
     *
     * Per-fold cost tracks the batch: batch signatures + a touched-bucket
     * probe of the banded LSH index at rest (standing rows reached through
@@ -630,28 +659,6 @@ object Dedup {
     * already makes; an oversized bucket sub-buckets by a census that
     * differs between the two builds, and both paths are then declared
     * approximations. The gate proves equality at catalog scale. */
-  def survivorsIncremental(
-      idx: SurvivorIndex,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String): DataFrame =
-    survivorsIncrementalDelta(idx, batch, idCol, textCol).full
-
-  /** A fold's result as (changed rows, full view) — round-6 verdict item
-    * 3: the decision table is node-scale but only batch-scale pieces of
-    * it can change per fold, so the fold emits exactly those CHANGED
-    * rows and the full table is the standing decisions with the changed
-    * ids passed over (anti-join + union — "touched rows + unchanged
-    * passthrough"). `changed` covers precisely the ids whose row CAN
-    * differ from the standing table: the batch's own ids, standing
-    * members of content-hash groups the batch touched (has_exact can
-    * flip, group-min relabels), standing ids whose cluster label merged
-    * (survivor_id changes), and new containment victims (tier flips to
-    * "contained"). Every other row is provably bit-unchanged: its union
-    * group equals its standing group, its label was not relabeled, and
-    * victimhood is monotone. */
-  final case class SurvivorDelta(changed: DataFrame, full: DataFrame)
-
   def survivorsIncrementalDelta(
       idx: SurvivorIndex,
       batch: DataFrame,
@@ -664,8 +671,8 @@ object Dedup {
     incrAssembleDelta(idx, c, ccd, unionVictims = None, newVictims = None)
   }
 
-  /** The batch-scale pieces shared by [[survivorsIncremental]] and
-    * [[survivorsFullIncremental]]: batch hashes, the merged exact-dedup
+  /** The batch-scale pieces shared by [[survivorsIncrementalDelta]] and
+    * [[survivorsFullIncrementalDelta]]: batch hashes, the merged exact-dedup
     * index, and the new exact/relink/near edges (UN-truncated — the
     * caller checkpoints after unioning any extra edge tiers). */
   private final case class IncrCore(
@@ -686,7 +693,7 @@ object Dedup {
     // exact-dedup index merge: min of mins, sum of counts (hash-scale).
     // localCheckpoint: merged feeds FOUR consumers (eBatch, eRelink, and
     // the tier pass twice through the edge plans) and the edges feed
-    // incrementalClusters' three terminal points — without eager
+    // incrementalClustersWithDelta's three terminal points — without eager
     // materialization the corpus-scale index scans re-run per consumer
     // (blocks reclaimed by the ContextCleaner, the EvalParagraphs
     // pattern; at deployment this materialization IS the next index
@@ -783,43 +790,11 @@ object Dedup {
     IncrCore(bHashed, merged, eBatch.unionByName(eRelink).unionByName(near))
   }
 
-  /** The refreshed decision table over the union (same rules — and the
-    * same tier precedence keep > exact > contained > near — as
-    * [[survivors]]). `victims` carries the union containment-victim set
-    * when the fold maintains the containment tier. */
-  private def incrAssemble(
-      idx: SurvivorIndex,
-      c: IncrCore,
-      clusters2: DataFrame,
-      victims: Option[DataFrame]): DataFrame = {
-    val base = idx.hashed.unionByName(c.bHashed)
-      .join(c.merged.select(col("content_hash"), col("gsz")), Seq("content_hash"))
-      .select(col("id"), (col("gsz") > 1).as("has_exact"))
-      .join(clusters2, Seq("id"), "left")
-    // victim flag via a left join, NOT a broadcast hint (the survivors()
-    // rule): victim volume is corpus-derived; AQE broadcasts it from
-    // runtime stats while it fits
-    val withV = victims.foldLeft(base)((d, v) =>
-      d.join(v.withColumn("is_contained", lit(true)), Seq("id"), "left"))
-    val contained =
-      if (victims.isDefined) coalesce(col("is_contained"), lit(false))
-      else lit(false)
-    withV
-      .withColumn("survivor_id", coalesce(col("cluster"), col("id")))
-      .withColumn(
-        "tier",
-        when(col("survivor_id") === col("id"), lit("keep"))
-          .when(col("has_exact"), lit("exact"))
-          .when(contained, lit("contained"))
-          .otherwise(lit("near")))
-      .select(col("id"), col("survivor_id"), col("tier"))
-  }
-
   // ---------- containment-aware incremental index -----------------------------
 
   /** [[SurvivorIndex]] extended with the CONTAINMENT index at rest — the
-    * standing state behind [[survivorsFullIncremental]] (the incremental
-    * twin of `survivors(..., containmentPairs = ...)`):
+    * standing state behind [[survivorsFullIncrementalDelta]] (the
+    * incremental twin of `survivors(..., containmentPairs = ...)`):
     *   - `tokFreq` (tok, tf): the FROZEN rare-first token order (standing
     *     corpus frequencies). Frozen deliberately: the prefix filter is
     *     lossless under ANY total order applied consistently, so folds
@@ -836,7 +811,7 @@ object Dedup {
     *   - `victims` (id): standing containment victims. Monotone — docs
     *     never leave the corpus, so a standing victim stays one.
     * `core.clusters` is CC over exact ∪ near ∪ CONTAINMENT edges (built
-    * via buildSurvivorIndex's extraEdges hook), matching the edge classes
+    * via buildIndex's extraEdges hook), matching the edge classes
     * every fold adds. */
   final case class FullSurvivorIndex(
       core: SurvivorIndex,
@@ -911,6 +886,11 @@ object Dedup {
     val cp = Queries.containmentPairsFrom(toks)
       .select("doc_a", "doc_b").localCheckpoint(true)
     val contEdges = cp.select(col("doc_a").as("a"), col("doc_b").as("b"))
+    val victimsFrame = cache(cp.select(col("doc_a").as("id")).distinct())
+    // the FULL index's standing decisions are CONTAINMENT-AWARE (victims
+    // flagged, clusters over all three edge tiers) — they must not share
+    // the plain core's decision table (two cluster states, two decision
+    // tables; the reuseCore shape shares only the at-rest LSH frames)
     val core = reuseCore match {
       case Some(c) =>
         require(c.shingleK == shingleK && c.nHashes == nHashes &&
@@ -933,11 +913,12 @@ object Dedup {
         val clusters = cache(graft.er.Clustering.connectedComponents(
           df.sparkSession,
           exactEdges.unionByName(nearEdges).unionByName(contEdges)))
-        c.copy(clusters = clusters)
+        c.copy(clusters = clusters, decisions = cache(assembleDecisions(
+          c.hashed, c.groups, clusters, victims = Some(victimsFrame))))
       case None =>
-        buildSurvivorIndex(df, idCol, textCol, shingleK, nHashes,
+        buildIndex(df, idCol, textCol, shingleK, nHashes,
           rowsPerBand, minJaccard, maxBucket, cache,
-          extraEdges = Some(contEdges))
+          extraEdges = Some(contEdges), victims = Some(victimsFrame))
     }
     // posting-list cap at rest (round-6 verdict): census the inverted
     // index, trim above-cap keys to the maxPosting hash-smallest
@@ -970,15 +951,7 @@ object Dedup {
           .where(col("rn") <= maxPosting)
           .drop("pk", "rn"))
       }
-    val victimsFrame = cache(cp.select(col("doc_a").as("id")).distinct())
-    // the FULL index's standing decisions are CONTAINMENT-AWARE (victims
-    // flagged, clusters over all three edge tiers) — they must not share
-    // the plain core's decision table (two cluster states, two decision
-    // tables; the reuseCore shape shares only the at-rest LSH frames)
-    val coreWithDecisions = core.copy(decisions =
-      cache(assembleDecisions(core.hashed, core.groups, core.clusters,
-        victims = Some(victimsFrame))))
-    FullSurvivorIndex(coreWithDecisions, tokFreq, toks,
+    FullSurvivorIndex(core, tokFreq, toks,
       cache(Queries.contPrefixExplode(toks)),
       contFull,
       victimsFrame,
@@ -1059,16 +1032,8 @@ object Dedup {
     * exactly (the token ORDER differs — frozen vs union frequencies —
     * but order affects only candidate generation, which is lossless
     * under any consistent total order; the integer verification and the
-    * tier rules are identical). The oracle gates that equality. */
-  def survivorsFullIncremental(
-      fidx: FullSurvivorIndex,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String): DataFrame =
-    survivorsFullIncrementalDelta(fidx, batch, idCol, textCol).full
-
-  /** The containment-aware fold with its changed-row set exposed (see
-    * [[SurvivorDelta]]). */
+    * tier rules are identical). The oracle gates that equality. Returns
+    * the refreshed table with its changed-row set (see [[SurvivorDelta]]). */
   def survivorsFullIncrementalDelta(
       fidx: FullSurvivorIndex,
       batch: DataFrame,
@@ -1078,7 +1043,7 @@ object Dedup {
     val c = incrCore(idx, batch, idCol, textCol)
     // localCheckpoint: the new pair table feeds edges + victims (the
     // survivors() two-consumer rule); edges checkpoint so the banded and
-    // containment probes run once, not per incrementalClusters terminal
+    // containment probes run once, not per CC-fold terminal
     val newCont = incrContainmentPairs(fidx, batch, idCol, textCol)
       .localCheckpoint(true)
     val newEdges = c.newEdges
@@ -1092,18 +1057,18 @@ object Dedup {
       unionVictims = Some(victims), newVictims = Some(newVictims))
   }
 
-  /** The delta-emitting assembly behind both folds. Falls back to the
-    * legacy full re-derivation when the index carries no standing
-    * decision table or the CC fold hit the fallback (corpus-sized batch)
-    * regime — there `changed == full`. */
+  /** The delta-emitting assembly behind both folds. When the CC fold hit
+    * its fallback (corpus-sized batch) regime the whole union table is
+    * re-assembled — there `changed == full`. */
   private def incrAssembleDelta(
       idx: SurvivorIndex,
       c: IncrCore,
       ccd: graft.er.Clustering.IncrementalCc,
       unionVictims: Option[DataFrame],
       newVictims: Option[DataFrame]): SurvivorDelta = {
-    if (idx.decisions == null || ccd.changedIsFull) {
-      val f = incrAssemble(idx, c, ccd.assignment, victims = unionVictims)
+    if (ccd.changedIsFull) {
+      val f = assembleDecisions(idx.hashed.unionByName(c.bHashed), c.merged,
+        ccd.assignment, unionVictims)
       return SurvivorDelta(f, f)
     }
     // ids whose decision row can differ from the standing table
@@ -1119,34 +1084,17 @@ object Dedup {
       .localCheckpoint(true)
     // cluster labels for the changed ids: relabeled/new ids carry their
     // fold label; the rest keep their standing label (narrow broadcast
-    // probes of the node-scale tables — the incrementalClusters shape)
+    // probes of the node-scale tables — the CC fold's own shape)
     val fromCc = ccd.changed
     val standingAssign = idx.clusters
       .join(broadcast(changedIds), Seq("id"), "left_semi")
       .join(broadcast(fromCc.select("id")), Seq("id"), "left_anti")
     val assignForChanged = fromCc.unionByName(standingAssign)
     // tier assembly restricted to the changed ids (the survivors() rules)
-    val restricted = idx.hashed.unionByName(c.bHashed)
-      .join(broadcast(changedIds), Seq("id"), "left_semi")
-    val base = restricted
-      .join(c.merged.select(col("content_hash"), col("gsz")), Seq("content_hash"))
-      .select(col("id"), (col("gsz") > 1).as("has_exact"))
-      .join(assignForChanged, Seq("id"), "left")
-    val withV = unionVictims.foldLeft(base)((d, v) =>
-      d.join(v.join(broadcast(changedIds), Seq("id"), "left_semi")
-        .withColumn("is_contained", lit(true)), Seq("id"), "left"))
-    val contained =
-      if (unionVictims.isDefined) coalesce(col("is_contained"), lit(false))
-      else lit(false)
-    val changed = withV
-      .withColumn("survivor_id", coalesce(col("cluster"), col("id")))
-      .withColumn(
-        "tier",
-        when(col("survivor_id") === col("id"), lit("keep"))
-          .when(col("has_exact"), lit("exact"))
-          .when(contained, lit("contained"))
-          .otherwise(lit("near")))
-      .select(col("id"), col("survivor_id"), col("tier"))
+    def onChanged(d: DataFrame) = d.join(broadcast(changedIds), Seq("id"), "left_semi")
+    val changed = assembleDecisions(
+      onChanged(idx.hashed.unionByName(c.bHashed)), c.merged,
+      assignForChanged, unionVictims.map(onChanged))
     // full view = unchanged standing rows passed through + the changed rows
     val full = idx.decisions
       .join(broadcast(changedIds), Seq("id"), "left_anti")

@@ -60,47 +60,83 @@ object Clustering {
     * loop's cost at small scale is its FIXED per-round scheduler latency
     * (each round = several shuffles + a signature job; a converged toy
     * graph still pays 3-5 rounds ≈ seconds), while a bounded collect +
-    * union-find is one job and microseconds of CPU. 2M contracted edges
-    * ≈ 32 MB of packed longs on the driver — the same order as the
-    * incremental fold's broadcastMaxEndpoints guard. Exact: union-by-min
-    * with path compression assigns every node the component minimum,
-    * the identical label the star loop converges to. Scale-adaptive, not
-    * local-mode-tuned: on a real cluster the threshold bounds driver
-    * memory, and corpus-scale edge sets (> threshold after the narrow
-    * localContract pass) still take the shuffle loop. Override with
-    * spark.graft.cc.driverMaxEdges (0 disables the fast path). */
+    * union-find is one job and microseconds of CPU.
+    *
+    * Driver memory paid (64-bit JVM, compressed oops; E contracted edges
+    * over N nodes, E < N ≤ 2E): 16 B/edge of packed edges, plus ~32
+    * B/edge of transient collect buffers; 40–64 B/node for the
+    * union-find map (boxed values at 25–50% load); then, while the
+    * result is built, ~32 B/node of (id, cluster) tuples and ~72 B/node
+    * of local-relation rows, the rows held for as long as the returned
+    * plan lives. At the 2M-edge default that peaks at ~0.4 GB (N ≈ E)
+    * to ~0.7 GB (N = 2E), with 0.15–0.3 GB retained.
+    *
+    * Exact: union-by-min with path compression assigns every node the
+    * component minimum, the identical label the star loop converges to.
+    * Scale-adaptive, not local-mode-tuned: on a real cluster the
+    * threshold bounds driver memory, and corpus-scale edge sets
+    * (> threshold after the narrow localContract pass) still take the
+    * shuffle loop. Override with spark.graft.cc.driverMaxEdges (0
+    * disables the fast path). */
   val DefaultDriverCcMaxEdges: Long = 2000000L
 
   private def driverCcMaxEdges(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.cc.driverMaxEdges")
       .map(_.toLong).getOrElse(DefaultDriverCcMaxEdges)
 
-  /** Bounded driver-side union-find over an already-contracted edge set
-    * (caller guarantees nEdges <= driverCcMaxEdges — a declared, bounded
-    * collect, the dimension-map discipline). Emits (id, cluster) for
-    * every node appearing in an edge, cluster = component minimum —
-    * bit-identical to starsToClusters after a converged star loop. */
-  private def driverUnionFind(spark: SparkSession, e: DataFrame): DataFrame = {
-    import spark.implicits._
-    val edges = e.select(col("a"), col("b")).as[(Long, Long)].collect()
-    val parent = scala.collection.mutable.LongMap.empty[Long]
-    def find(x: Long): Long = {
+  /** Union-by-min with path compression: the root of every component is
+    * its minimum node, so `foreachLabel` reports each node seen with its
+    * component minimum. The one union-find behind both the
+    * partition-local contraction and the driver-side finish. */
+  private final class MinUnionFind {
+    private val parent = scala.collection.mutable.LongMap.empty[Long]
+
+    private def find(x: Long): Long = {
       var r = x
       while (parent(r) != r) r = parent(r)
       var c = x
       while (c != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    edges.foreach { case (a, b) =>
+
+    def union(a: Long, b: Long): Unit = {
       if (!parent.contains(a)) parent(a) = a
       if (!parent.contains(b)) parent(b) = b
       val ra = find(a); val rb = find(b)
       if (ra < rb) parent(rb) = ra
       else if (rb < ra) parent(ra) = rb
     }
-    val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-    parent.foreachKey { n => out += ((n, find(n))) }
-    spark.createDataset(out.toSeq).toDF("id", "cluster")
+
+    def size: Int = parent.size
+
+    def foreachLabel(f: (Long, Long) => Unit): Unit =
+      parent.foreachKey(n => f(n, find(n)))
+  }
+
+  /** Bounded driver-side union-find over an already-contracted edge set
+    * (caller guarantees nEdges <= driverCcMaxEdges — a declared, bounded
+    * collect, the dimension-map discipline). Each partition ships its
+    * edges as ONE packed Array[Long] (a0, b0, a1, b1, …), so the driver
+    * holds 16 bytes per edge and no per-edge object. Emits (id, cluster)
+    * for every node appearing in an edge, cluster = component minimum —
+    * bit-identical to starsToClusters after a converged star loop. */
+  private def driverUnionFind(spark: SparkSession, e: DataFrame): DataFrame = {
+    import spark.implicits._
+    val packed = e.select(col("a"), col("b")).as[(Long, Long)].mapPartitions { it =>
+      val buf = Array.newBuilder[Long]
+      it.foreach { case (a, b) => buf += a; buf += b }
+      Iterator.single(buf.result())
+    }.collect()
+    val uf = new MinUnionFind
+    packed.foreach { p =>
+      var i = 0
+      while (i < p.length) { uf.union(p(i), p(i + 1)); i += 2 }
+    }
+    val out = new Array[(Long, Long)](uf.size)
+    var k = 0
+    uf.foreachLabel { (n, r) => out(k) = (n, r); k += 1 }
+    spark.createDataset(scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
+      .toDF("id", "cluster")
   }
 
   /** Loud non-convergence warning (round-4 advice): a loop that exhausts
@@ -140,24 +176,10 @@ object Clustering {
   private def localContract(e: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
     e.select(col("a"), col("b")).as[(Long, Long)].mapPartitions { it =>
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (c != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      it.foreach { case (a, b) =>
-        if (!parent.contains(a)) parent(a) = a
-        if (!parent.contains(b)) parent(b) = b
-        val ra = find(a); val rb = find(b)
-        // union-by-min: the root is always the component minimum
-        if (ra < rb) parent(rb) = ra
-        else if (rb < ra) parent(ra) = rb
-      }
+      val uf = new MinUnionFind
+      it.foreach { case (a, b) => uf.union(a, b) }
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      parent.foreachKey { n => val r = find(n); if (n != r) out += ((n, r)) }
+      uf.foreachLabel((n, r) => if (n != r) out += ((n, r)))
       out.iterator
     }.toDF("a", "b")
   }
@@ -459,6 +481,24 @@ object Clustering {
     CcRun(clusters, resumedFrom, computed, converged)
   }
 
+  /** An incremental CC fold's result: the assignment together with its
+    * CHANGED-ROW set — what a touched-range state writer persists per
+    * fold (round-7: the streaming sink's per-fold write volume must track
+    * the batch, not the corpus-scale assignment):
+    *   - `assignment`: the full refreshed (id, cluster) table (lazy —
+    *     only pay for it if you materialize it);
+    *   - `changed`: exactly the rows whose (id, cluster) differs from
+    *     `oldClusters` plus the brand-new ids — in the broadcast regime
+    *     an old row changes iff its cluster label is relabeled by the
+    *     contracted CC (merged != label), so `changed` is one narrow
+    *     assignment probe of a broadcast relabel map plus the batch-new
+    *     ids (batch-scale by the incremental premise);
+    *   - `changedIsFull`: true in the batch-CC fallback regime (a
+    *     corpus-sized batch), where deriving a delta would cost a full
+    *     compare — the caller should rewrite fully there anyway. */
+  final case class IncrementalCc(
+      assignment: DataFrame, changed: DataFrame, changedIsFull: Boolean)
+
   /** G7 (incremental maintenance): fold a NEW batch of match edges into a
     * CONVERGED cluster assignment without re-clustering the old graph —
     * the daily-crawl shape at corpus scale, where the standing assignment
@@ -467,10 +507,11 @@ object Clustering {
     *
     * `oldClusters`: DataFrame(id, cluster) whose labels are component
     * MINIMA — the invariant every CC entry point here guarantees.
-    * `newEdges`: DataFrame(a, b). Returns (id, cluster) for the union
-    * graph (old ids plus new-edge endpoints), identical to running batch
-    * CC over (old edges ∪ new edges) — see ClusteringSpec's incremental
-    * property tests and PlanAuditSpec's broadcast-only plan pin.
+    * `newEdges`: DataFrame(a, b). The result's `assignment` is
+    * (id, cluster) for the union graph (old ids plus new-edge endpoints),
+    * identical to running batch CC over (old edges ∪ new edges) — see
+    * ClusteringSpec's incremental property tests and PlanAuditSpec's
+    * broadcast-only plan pin.
     *
     * Why it is exact: contracting every old component to its label
     * preserves connectivity between representatives (each old component
@@ -500,33 +541,6 @@ object Clustering {
     * ClusteringSpec drives both regimes to equal assignments). The
     * default (5M endpoints ≈ 40 MB of packed longs) marks the crossover
     * where two corpus-scale wide passes beat a giant broadcast. */
-  def incrementalClusters(
-      spark: SparkSession,
-      oldClusters: DataFrame,
-      newEdges: DataFrame,
-      checkpointDir: Option[String] = None,
-      broadcastMaxEndpoints: Long = 5000000L): DataFrame =
-    incrementalClustersWithDelta(spark, oldClusters, newEdges,
-      checkpointDir, broadcastMaxEndpoints).assignment
-
-  /** [[incrementalClusters]]' result together with its CHANGED-ROW set —
-    * what a touched-range state writer persists per fold (round-7: the
-    * streaming sink's per-fold write volume must track the batch, not
-    * the corpus-scale assignment):
-    *   - `assignment`: the full refreshed (id, cluster) table (lazy —
-    *     only pay for it if you materialize it);
-    *   - `changed`: exactly the rows whose (id, cluster) differs from
-    *     `oldClusters` plus the brand-new ids — in the broadcast regime
-    *     an old row changes iff its cluster label is relabeled by the
-    *     contracted CC (merged != label), so `changed` is one narrow
-    *     assignment probe of a broadcast relabel map plus the batch-new
-    *     ids (batch-scale by the incremental premise);
-    *   - `changedIsFull`: true in the batch-CC fallback regime (a
-    *     corpus-sized batch), where deriving a delta would cost a full
-    *     compare — the caller should rewrite fully there anyway. */
-  final case class IncrementalCc(
-      assignment: DataFrame, changed: DataFrame, changedIsFull: Boolean)
-
   def incrementalClustersWithDelta(
       spark: SparkSession,
       oldClusters: DataFrame,
@@ -597,9 +611,9 @@ object Clustering {
       changedIsFull = false)
   }
 
-  /** The guarded fallback of [[incrementalClusters]] for batches too big
-    * to broadcast: batch CC over {standing-assignment star edges ∪ new
-    * edges}. Exact by the same min-label argument — each (id, cluster)
+  /** The guarded fallback of [[incrementalClustersWithDelta]] for batches
+    * too big to broadcast: batch CC over {standing-assignment star edges ∪
+    * new edges}. Exact by the same min-label argument — each (id, cluster)
     * assignment row with id ≠ cluster is an edge of a star whose center
     * is the component minimum, so the union graph has the same connected
     * components (and hence the same min labels) as {old edges ∪ new

@@ -257,15 +257,16 @@ object ErQueries {
     * (xxhash64 of the pair — partition-invariant), cluster the standing
     * graph (memoized — pre-existing state in a real maintenance
     * deployment), then fold the batch in with
-    * [[graft.er.Clustering.incrementalClusters]]. The result must be
-    * IDENTICAL to `er_clusters` (incremental maintenance is exact), so
-    * the DuckDB oracle replays full-graph CC over the union — a
-    * non-circular gate on the incremental path. */
+    * [[graft.er.Clustering.incrementalClustersWithDelta]]. The result
+    * must be IDENTICAL to `er_clusters` (incremental maintenance is
+    * exact), so the DuckDB oracle replays full-graph CC over the union —
+    * a non-circular gate on the incremental path. */
   def erClustersIncr(spark: SparkSession, dir: String): DataFrame = {
     val sh = shared(spark, dir)
     val batch = sh.scoredPairs.where(col("is_match") && incrIsNewEdge)
       .select(col("a"), col("b"))
-    Clustering.incrementalClusters(spark, sh.standingClusters, batch)
+    Clustering.incrementalClustersWithDelta(spark, sh.standingClusters, batch)
+      .assignment
   }
 
   /** One-row pairwise eval — the headline metric (F1 vs gold clusters).

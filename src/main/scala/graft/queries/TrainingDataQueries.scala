@@ -293,9 +293,9 @@ object TrainingDataQueries {
     * the SAME batch-survivors SQL over the full table, so the gate
     * proves incremental == batch exactly. */
   def ddSurvivorsIncr(spark: SparkSession, dir: String): DataFrame =
-    Dedup.survivorsIncremental(
+    Dedup.survivorsIncrementalDelta(
       survivorIndexShared(spark, dir),
-      docs(spark, dir).where(incrIsNewDoc), "doc_id", "text")
+      docs(spark, dir).where(incrIsNewDoc), "doc_id", "text").full
 
   /** Session memo of the CONTAINMENT-AWARE standing index (the
     * survivorIdxMemo pattern — one bootstrap per session). */
@@ -324,9 +324,9 @@ object TrainingDataQueries {
     * full containment dump, so the gate proves incremental == batch for
     * the fused verdict exactly. */
   def ddSurvivorsFullIncr(spark: SparkSession, dir: String): DataFrame =
-    Dedup.survivorsFullIncremental(
+    Dedup.survivorsFullIncrementalDelta(
       fullSurvivorIndexShared(spark, dir),
-      docs(spark, dir).where(incrIsNewDoc), "doc_id", "text")
+      docs(spark, dir).where(incrIsNewDoc), "doc_id", "text").full
 
   def ddEmbeddingDups(spark: SparkSession, dir: String): DataFrame =
     Dedup.embeddingDupPairs(embs(spark, dir), "vec_id", "embedding",

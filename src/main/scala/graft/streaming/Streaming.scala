@@ -175,7 +175,8 @@ object Streaming {
   }
 
   /** Streaming CLUSTER MAINTENANCE — the streaming twin of G7
-    * ([[graft.er.Clustering.incrementalClusters]]): match edges stream in
+    * ([[graft.er.Clustering.incrementalClustersWithDelta]]): match edges
+    * stream in
     * (e.g. from [[streamingMinhashPairs]] or a streaming scorer) and every
     * micro-batch is folded into a standing (id, cluster) assignment kept
     * as Parquet state-at-rest under `stateDir`.
@@ -184,11 +185,11 @@ object Streaming {
     * global fixpoint, not a per-key fold — `mapGroupsWithState` cannot
     * express a merge that spans keys, so the engine-sanctioned shape is a
     * micro-batch sink that runs the batch-scale contracted CC and
-    * rewrites the assignment via incrementalClusters' two narrow passes.
+    * rewrites the assignment via the incremental fold's two narrow passes.
     *
     * Exactness and recovery:
     *   - After every batch the standing assignment equals batch CC over
-    *     ALL edges seen so far (induction over incrementalClusters'
+    *     ALL edges seen so far (induction over the incremental fold's
     *     min-label proof; StreamingSpec checks two-wave == batch).
     *   - Versions are keyed by Structured Streaming's `batchId`, so a
     *     replayed batch (crash between sink commit and offset-log commit)
@@ -220,6 +221,14 @@ object Streaming {
         foldClusterBatch(batch.toDF(), stateDir, batchId))
       .start()
 
+  /** Manifest entry kinds for [[VersionedState]]'s `_PARTS` file. */
+  private sealed trait Entry { def refs: Set[Long] }
+  private final case class FullE(ver: Long) extends Entry { def refs = Set(ver) }
+  private final case class ChainE(base: Long, deltas: Seq[Long], compactEvery: Int)
+      extends Entry { def refs = deltas.toSet + base }
+  private final case class RangedE(r: Int, holders: Map[Long, Long])
+      extends Entry { def refs = holders.values.toSet }
+
   /** How a relation lands in a version (round-7: per-fold write volume
     * must track the BATCH, not the state — the round-6 verdict's top
     * item; the former full rewrite per micro-batch was the scale-killer
@@ -237,14 +246,6 @@ object Streaming {
     *     version. `content` must carry the `_r` range column; `full`
     *     marks a whole-relation write (bootstrap / rescale /
     *     compaction). */
-  /** Manifest entry kinds for [[VersionedState]]'s `_PARTS` file. */
-  private sealed trait Entry { def refs: Set[Long] }
-  private final case class FullE(ver: Long) extends Entry { def refs = Set(ver) }
-  private final case class ChainE(base: Long, deltas: Seq[Long], compactEvery: Int)
-      extends Entry { def refs = deltas.toSet + base }
-  private final case class RangedE(r: Int, holders: Map[Long, Long])
-      extends Entry { def refs = holders.values.toSet }
-
   private[graft] sealed trait PartWrite { def name: String }
   private[graft] final case class FullWrite(name: String, df: DataFrame) extends PartWrite
   private[graft] final case class DeltaWrite(
@@ -253,8 +254,9 @@ object Streaming {
       name: String, content: DataFrame, nRanges: Int, touchedRanges: Seq[Long],
       full: Boolean, keyCol: String, maxReferencedVersions: Int = 16) extends PartWrite
 
-  /** Versioned Parquet state-at-rest shared by the streaming maintenance
-    * sinks (cluster and source-cap folds): batchId-keyed version dirs, an
+  /** Versioned Parquet state-at-rest shared by the four streaming
+    * maintenance sinks (cluster, source-cap, dup-ngram and IVF folds), all
+    * committed through [[commitWrites]]: batchId-keyed version dirs, an
     * atomic `_LATEST` pointer (temp file + rename, the CC-manifest
     * protocol), previous version retained as the recovery target for a
     * crash before the pointer rename, older versions pruned (minus any
@@ -278,110 +280,79 @@ object Streaming {
       * (mapreduce …marksuccessfuljobs) and lands mid-commit. */
     private def markerPath(v: Long) = new Path(new Path(versionPath(v)), "_GRAFT_COMMITTED")
 
+    /** The latest committed version, or None for a fresh state dir. Only
+      * a MISSING pointer means "no pointer": any other read error
+      * propagates, because a fold that mistook a transient error for an
+      * empty dir would treat its batch as the first one and prune every
+      * retained version. */
     def readLatest(): Option[Long] = {
       val viaPointer =
         try {
           val in = fs.open(latestPath)
           val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
           Some(txt.trim.toLong)
-        } catch { case _: Exception => None }
+        } catch { case _: java.io.FileNotFoundException => None }
       // No pointer: either a fresh dir (no versions → None) or a crash
-      // landed between the pointer delete and the rename in commit() —
+      // landed between the pointer delete and the rename in sealCommit —
       // fall back to the newest COMPLETE (marker-carrying) version instead
-      // of silently restarting from empty state, which would make the next
-      // fold treat its batch as the first one and prune every retained
-      // version (total state loss).
+      // of silently restarting from empty state (total state loss, as
+      // above).
       viaPointer.orElse {
-        try {
-          if (!fs.exists(root)) None
-          else {
-            val committed = fs.listStatus(root).flatMap { st =>
-              val n = st.getPath.getName
-              if (st.isDirectory && n.startsWith("v_"))
-                scala.util.Try(n.drop(2).toLong).toOption
-                  .filter(v => fs.exists(markerPath(v)))
-              else None
-            }
-            if (committed.isEmpty) None else Some(committed.max)
+        if (!fs.exists(root)) None
+        else {
+          val committed = fs.listStatus(root).flatMap { st =>
+            val n = st.getPath.getName
+            if (st.isDirectory && n.startsWith("v_"))
+              scala.util.Try(n.drop(2).toLong).toOption
+                .filter(v => fs.exists(markerPath(v)))
+            else None
           }
-        } catch { case _: Exception => None }
+          if (committed.isEmpty) None else Some(committed.max)
+        }
       }
     }
 
-    def read(v: Long): DataFrame = spark.read.parquet(versionPath(v))
+    private def partPath(v: Long, name: String): String =
+      new Path(new Path(versionPath(v)), name).toString
 
-    /** Latest committed state, or an empty frame of `schema` before the
-      * first commit. */
-    def current(schema: StructType): DataFrame = readLatest() match {
-      case Some(v) => read(v)
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    private def rangePath(v: Long, name: String, k: Long): String =
+      new Path(new Path(partPath(v, name)), s"_r=$k").toString
+
+    /** The manifest entry of part `name` at committed version `v`. */
+    private def entry(v: Long, name: String): Entry =
+      readManifest(v).getOrElse(name, throw new IllegalStateException(
+        s"state $stateDir v=$v has no part '$name' in its _PARTS manifest"))
+
+    /** Resolve a part at version `v` through its `_PARTS` manifest
+      * (full / delta-chain / ranged entries). */
+    def readPart(v: Long, name: String): DataFrame = entry(v, name) match {
+      case FullE(ver) => spark.read.parquet(partPath(ver, name))
+      case ChainE(base, deltas, _) =>
+        spark.read.parquet((base +: deltas).map(partPath(_, name)): _*)
+      case RangedE(_, holders) =>
+        spark.read.parquet(holders.toSeq.sortBy(_._1).map { case (k, hv) =>
+          rangePath(hv, name, k)
+        }: _*)
     }
-
-    /** Write `df` as version `batchId` (+ commit marker), advance
-      * `_LATEST`, prune versions older than the previous one. The pointer
-      * swap is delete + rename — not atomic on its own, which is why
-      * readLatest() recovers from the marker scan when the pointer is
-      * missing: every crash window leaves either the old pointer (version
-      * re-foldable / skippable) or a marker-complete newest version. */
-    def commit(batchId: Long, df: DataFrame, prev: Option[Long]): Unit = {
-      df.write.mode("overwrite").parquet(versionPath(batchId))
-      sealCommit(batchId, prev)
-    }
-
-    /** Multi-relation version: each part lands as a SUBDIR of the
-      * version dir, the marker seals them all together, so a crash
-      * mid-write can never expose half a version (a version dir without
-      * the marker is never a recovery target). */
-    def commitParts(batchId: Long, parts: Seq[(String, DataFrame)],
-        prev: Option[Long]): Unit = {
-      parts.foreach { case (name, df) =>
-        df.write.mode("overwrite")
-          .parquet(new Path(new Path(versionPath(batchId)), name).toString)
-      }
-      sealCommit(batchId, prev)
-    }
-
-    /** Resolve a part at version `v` through its `_PARTS` manifest when
-      * one exists (full / delta-chain / ranged entries); a version dir
-      * without a manifest is the legacy all-full layout and reads the
-      * plain subdir. */
-    def readPart(v: Long, name: String): DataFrame =
-      readManifest(v).flatMap(_.get(name)) match {
-        case None =>
-          spark.read.parquet(new Path(new Path(versionPath(v)), name).toString)
-        case Some(FullE(ver)) =>
-          spark.read.parquet(new Path(new Path(versionPath(ver)), name).toString)
-        case Some(ChainE(base, deltas, _)) =>
-          spark.read.parquet(
-            (base +: deltas).map(d => new Path(new Path(versionPath(d)), name).toString): _*)
-        case Some(RangedE(_, holders)) =>
-          spark.read.parquet(holders.toSeq.sortBy(_._1).map { case (k, hv) =>
-            new Path(new Path(new Path(versionPath(hv)), name), s"_r=$k").toString
-          }: _*)
-      }
 
     /** Pruned read of specific ranges of a RANGED part (only the touched
       * leaf dirs are listed — the partition-pruned read the fold's
-      * passthrough needs); None when the part is not ranged at `v`
-      * (legacy/full layout — the caller falls back to a filtered scan). */
-    def readPartRanges(v: Long, name: String, ranges: Seq[Long]): Option[DataFrame] =
-      readManifest(v).flatMap(_.get(name)) match {
-        case Some(RangedE(_, holders)) =>
-          val paths = ranges.flatMap(k => holders.get(k).map(hv =>
-            new Path(new Path(new Path(versionPath(hv)), name), s"_r=$k").toString))
-          Some(
-            if (paths.isEmpty)
-              readPart(v, name).limit(0)
-            else spark.read.parquet(paths: _*))
-        case _ => None
+      * passthrough needs). The part must be ranged at `v`
+      * ([[isRangedWith]]). */
+    def readPartRanges(v: Long, name: String, ranges: Seq[Long]): DataFrame =
+      entry(v, name) match {
+        case RangedE(_, holders) =>
+          val paths = ranges.flatMap(k => holders.get(k).map(rangePath(_, name, k)))
+          if (paths.isEmpty) readPart(v, name).limit(0)
+          else spark.read.parquet(paths: _*)
+        case e => throw new IllegalStateException(
+          s"state $stateDir v=$v part '$name' is not ranged: $e")
       }
 
     /** Whether `name` is a RANGED part at version `v` with this range
       * count (a fold may only inherit untouched ranges when it is). */
     def isRangedWith(v: Long, name: String, nRanges: Int): Boolean =
-      readManifest(v).flatMap(_.get(name)) match {
+      readManifest(v).get(name) match {
         case Some(RangedE(r, _)) => r == nRanges
         case _ => false
       }
@@ -389,23 +360,26 @@ object Streaming {
     // ---- the `_PARTS` manifest (round-7 delta state) --------------------
     private def manifestPath2(v: Long) = new Path(new Path(versionPath(v)), "_PARTS")
 
-    private def readManifest(v: Long): Option[Map[String, Entry]] =
-      try {
-        val in = fs.open(manifestPath2(v))
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        Some(txt.split('\n').filter(_.nonEmpty).map { line =>
-          val t = line.split(' ')
-          t(0) match {
-            case "full" => t(1) -> (FullE(t(2).toLong): Entry)
-            case "chain" =>
-              t(1) -> (ChainE(t(2).toLong, t.drop(4).map(_.toLong).toSeq, t(3).toInt): Entry)
-            case "ranged" =>
-              t(1) -> (RangedE(t(2).toInt, t.drop(3).map { kv =>
-                val p = kv.split(':'); p(0).toLong -> p(1).toLong
-              }.toMap): Entry)
-          }
-        }.toMap)
-      } catch { case _: Exception => None }
+    /** Every committed version carries a `_PARTS` manifest, so ANY failure
+      * to read it — a missing file included — is an error: degrading to a
+      * guessed layout would return a partial relation and fold it into
+      * the next version as if complete. */
+    private def readManifest(v: Long): Map[String, Entry] = {
+      val in = fs.open(manifestPath2(v))
+      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      txt.split('\n').filter(_.nonEmpty).map { line =>
+        val t = line.split(' ')
+        t(0) match {
+          case "full" => t(1) -> (FullE(t(2).toLong): Entry)
+          case "chain" =>
+            t(1) -> (ChainE(t(2).toLong, t.drop(4).map(_.toLong).toSeq, t(3).toInt): Entry)
+          case "ranged" =>
+            t(1) -> (RangedE(t(2).toInt, t.drop(3).map { kv =>
+              val p = kv.split(':'); p(0).toLong -> p(1).toLong
+            }.toMap): Entry)
+        }
+      }.toMap
+    }
 
     private def writeManifest(v: Long, m: Map[String, Entry]): Unit = {
       val txt = m.toSeq.sortBy(_._1).map {
@@ -431,17 +405,8 @@ object Streaming {
       * state-at-rest — the evidence that per-fold write volume tracks
       * the batch. */
     def commitWrites(batchId: Long, writes: Seq[PartWrite], prev: Option[Long]): Unit = {
-      val prevManifest: Map[String, Entry] =
-        prev.flatMap(readManifest).getOrElse(
-          // legacy layout: treat every existing subdir as a full part of
-          // the previous version so chains/inheritance can build on it
-          prev.map { pv =>
-            try fs.listStatus(new Path(versionPath(pv)))
-              .filter(st => st.isDirectory)
-              .map(st => st.getPath.getName -> (FullE(pv): Entry)).toMap
-            catch { case _: Exception => Map.empty[String, Entry] }
-          }.getOrElse(Map.empty))
-      def partPath(name: String) = new Path(new Path(versionPath(batchId)), name).toString
+      val prevManifest = prev.map(readManifest).getOrElse(Map.empty[String, Entry])
+      def partPath(name: String) = this.partPath(batchId, name)
       var manifest = prevManifest
       writes.foreach {
         case FullWrite(name, df) =>
@@ -456,8 +421,7 @@ object Streaming {
               // chain at budget: compact — one full rewrite every
               // compactEvery folds (amortized O(state/compactEvery))
               val resolved = spark.read.parquet(
-                (e.base +: e.deltas).map(d =>
-                  new Path(new Path(versionPath(d)), name).toString): _*)
+                (e.base +: e.deltas).map(this.partPath(_, name)): _*)
               resolved.unionByName(delta).write.mode("overwrite").parquet(partPath(name))
               manifest += name -> FullE(batchId)
             case Some(FullE(base)) =>
@@ -473,7 +437,7 @@ object Streaming {
             try fs.listStatus(new Path(partPath(name)))
               .map(_.getPath.getName).filter(_.startsWith("_r="))
               .map(_.stripPrefix("_r=").toLong).toSet
-            catch { case _: Exception => Set.empty[Long] }
+            catch { case _: java.io.FileNotFoundException => Set.empty[Long] }
           val prevHolders = prevManifest.get(name) match {
             case Some(RangedE(r, holders)) if r == nRanges && !full => holders
             case _ => Map.empty[Long, Long] // bootstrap / rescale / forced full
@@ -492,9 +456,9 @@ object Streaming {
             val fullDf =
               if (untouched.isEmpty) content
               else {
-                val prevRows = spark.read.parquet(untouched.map { case (k, hv) =>
-                  new Path(new Path(new Path(versionPath(hv)), name), s"_r=$k").toString
-                }: _*).withColumn("_r", pmod(xxhash64(col(keyCol)), lit(nRanges.toLong)))
+                val prevRows = withRange(spark.read.parquet(untouched.map {
+                  case (k, hv) => rangePath(hv, name, k)
+                }: _*), keyCol, nRanges)
                 content.unionByName(prevRows)
               }
             fullDf.write.partitionBy("_r").mode("overwrite").parquet(partPath(name))
@@ -518,11 +482,15 @@ object Streaming {
       } catch { case _: Exception => () }
     }
 
-    /** Marker + pointer swap + prune — the shared tail of every commit
-      * shape. `alsoKeep`: versions still referenced by a delta chain or
-      * ranged holder (from the new or previous manifest). */
+    /** Marker + pointer swap + prune — the tail of [[commitWrites]]. The
+      * pointer swap is delete + rename — not atomic on its own, which is
+      * why readLatest() recovers from the marker scan when the pointer is
+      * missing: every crash window leaves either the old pointer (version
+      * re-foldable / skippable) or a marker-complete newest version.
+      * `alsoKeep`: versions still referenced by a delta chain or ranged
+      * holder (from the new or previous manifest). */
     private def sealCommit(batchId: Long, prev: Option[Long],
-        alsoKeep: Set[Long] = Set.empty): Unit = {
+        alsoKeep: Set[Long]): Unit = {
       val mk = fs.create(markerPath(batchId), true)
       try mk.write("ok".getBytes("UTF-8")) finally mk.close()
       val tmp = new Path(root, "_LATEST.tmp")
@@ -552,8 +520,23 @@ object Streaming {
     spark.conf.getOption("spark.graft.streaming.stateRanges")
       .map(_.toInt).getOrElse(64)
 
-  private def withAssignRange(df: DataFrame, nR: Int): DataFrame =
-    df.withColumn("_r", pmod(xxhash64(col("id")), lit(nR.toLong)))
+  private def withRange(df: DataFrame, keyCol: String, nR: Int): DataFrame =
+    df.withColumn("_r", pmod(xxhash64(col(keyCol)), lit(nR.toLong)))
+
+  /** The touched-range rewrite of a RANGED part: the ranges holding the
+    * changed rows (batch-scale) are rewritten as their previous holder
+    * rows minus the changed keys, plus the changed rows — a PRUNED read
+    * of just those ranges; every other range is inherited. */
+  private def touchedRangeWrite(vs: VersionedState, v: Long, name: String,
+      changedRows: DataFrame, keyCol: String, nR: Int): RangedWrite = {
+    val changed = withRange(changedRows, keyCol, nR).localCheckpoint(true)
+    val touched = changed.select("_r").distinct()
+      .collect().map(_.getLong(0)).toSeq.sorted
+    val prevRows = withRange(vs.readPartRanges(v, name, touched), keyCol, nR)
+      .join(broadcast(changed.select(keyCol)), Seq(keyCol), "left_anti")
+    RangedWrite(name, prevRows.unionByName(changed), nR, touched,
+      full = false, keyCol = keyCol)
+  }
 
   /** One G7 fold: apply a micro-batch of (a, b) match edges to the
     * standing assignment under `stateDir`. Public so a batch backfill job
@@ -574,7 +557,7 @@ object Streaming {
     val nR = assignRanges(spark)
     def commitFull(assign: DataFrame): Unit =
       vs.commitWrites(batchId,
-        Seq(RangedWrite("assign", withAssignRange(assign, nR), nR,
+        Seq(RangedWrite("assign", withRange(assign, "id", nR), nR,
           Nil, full = true, keyCol = "id")), prev)
     prev match {
       case None =>
@@ -586,33 +569,18 @@ object Streaming {
         val standing = currentClusters(spark, stateDir)
         val r = graft.er.Clustering.incrementalClustersWithDelta(spark, standing, e)
         if (r.changedIsFull || !vs.isRangedWith(v, "assign", nR)) commitFull(r.assignment)
-        else {
-          // touched ranges = ranges of the changed rows (batch-scale);
-          // new range content = previous holder rows minus changed ids,
-          // plus the changed rows — a PRUNED read of just those ranges
-          val changed = withAssignRange(r.changed, nR).localCheckpoint(true)
-          val touched = changed.select("_r").distinct()
-            .collect().map(_.getLong(0)).toSeq.sorted
-          val prevRows = withAssignRange(
-            vs.readPartRanges(v, "assign", touched).get, nR)
-            .join(broadcast(changed.select("id")), Seq("id"), "left_anti")
-          vs.commitWrites(batchId,
-            Seq(RangedWrite("assign", prevRows.unionByName(changed), nR,
-              touched, full = false, keyCol = "id")), prev)
-        }
+        else vs.commitWrites(batchId,
+          Seq(touchedRangeWrite(vs, v, "assign", r.changed, "id", nR)), prev)
     }
   }
 
   /** The standing assignment a [[streamingClusters]] query has built so
-    * far (empty two-column frame before the first fold). Resolves the
-    * ranged layout through the manifest; a pre-manifest (legacy) state
-    * dir reads the version root. */
+    * far (empty two-column frame before the first fold), resolved through
+    * the manifest. */
   def currentClusters(spark: SparkSession, stateDir: String): DataFrame = {
     val vs = new VersionedState(spark, stateDir)
     vs.readLatest() match {
-      case Some(v) =>
-        try vs.readPart(v, "assign")
-        catch { case _: Exception => vs.read(v) } // legacy root-relation layout
+      case Some(v) => vs.readPart(v, "assign")
       case None =>
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -630,8 +598,9 @@ object Streaming {
     * only get smaller as documents arrive), so top-N(state ∪ batch
     * partials) = top-N over all documents seen — StreamingSpec checks
     * two-wave == batch sourceCap. Same versioned commit protocol as the
-    * cluster sink (replay-safe; fold also idempotent: re-merging rows
-    * already in state changes nothing).
+    * cluster sink — the kept set is one full part, "kept" (replay-safe;
+    * fold also idempotent: re-merging rows already in state changes
+    * nothing).
     *
     * Scale shape: per micro-batch cost = one narrow partial pass over the
     * batch + a source-cardinality merge with state — never a
@@ -667,20 +636,28 @@ object Streaming {
       graft.curate.SourceCap.keyed(batch, idCol, srcCol), n)
     val merged = prev match {
       case None => partial
-      case Some(v) => vs.read(v).unionByName(partial)
+      case Some(v) => vs.readPart(v, "kept").unionByName(partial)
     }
-    vs.commit(batchId, graft.curate.SourceCap.topNPerSource(merged, n), prev)
+    vs.commitWrites(batchId,
+      Seq(FullWrite("kept", graft.curate.SourceCap.topNPerSource(merged, n))), prev)
   }
 
   /** The kept set a [[streamingSourceCap]] query has built so far:
     * (id, source, h), at most n rows per source (empty before the first
     * fold). */
-  def currentSourceCap(spark: SparkSession, stateDir: String): DataFrame =
-    new VersionedState(spark, stateDir).current(
-      StructType(Seq(
-        StructField("id", LongType),
-        StructField("source", StringType),
-        StructField("h", LongType))))
+  def currentSourceCap(spark: SparkSession, stateDir: String): DataFrame = {
+    val vs = new VersionedState(spark, stateDir)
+    vs.readLatest() match {
+      case Some(v) => vs.readPart(v, "kept")
+      case None =>
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(Seq(
+            StructField("id", LongType),
+            StructField("source", StringType),
+            StructField("h", LongType))))
+    }
+  }
 
   /** Streaming dup-ngram maintenance (the dc_dup_ngrams_incr fold as a
     * foreachBatch sink): documents stream in; each micro-batch folds into
@@ -730,8 +707,7 @@ object Streaming {
     if (prev.exists(_ >= batchId)) return
     if (batch.isEmpty) return
     val nR = assignRanges(spark)
-    def withR(df: DataFrame) =
-      df.withColumn("_r", pmod(xxhash64(col("doc_id")), lit(nR.toLong)))
+    def withR(df: DataFrame) = withRange(df, "doc_id", nR)
     val meta = spark.range(1).select(lit(n.toLong).as("n"))
     prev match {
       case None =>
@@ -754,28 +730,18 @@ object Streaming {
             vs.readPart(v, "grams"), vs.readPart(v, "freq"),
             vs.readPart(v, "stats"), n),
           batch, idCol, textCol)
-        if (!vs.isRangedWith(v, "stats", nR)) {
-          // legacy/rescaled stats layout: one full ranged write, after
-          // which folds inherit untouched ranges again
-          vs.commitWrites(batchId, Seq(
-            DeltaWrite("grams", fold.batchGrams),
-            FullWrite("freq", fold.index.freq),
+        // a rescaled range count lands one full ranged write, after
+        // which folds inherit untouched ranges again
+        val stats =
+          if (!vs.isRangedWith(v, "stats", nR))
             RangedWrite("stats", withR(fold.index.stats), nR, Nil,
-              full = true, keyCol = "doc_id"),
-            FullWrite("meta", meta)), prev)
-        } else {
-          val changed = withR(fold.changedStats).localCheckpoint(true)
-          val touched = changed.select("_r").distinct()
-            .collect().map(_.getLong(0)).toSeq.sorted
-          val prevRows = withR(vs.readPartRanges(v, "stats", touched).get)
-            .join(broadcast(changed.select("doc_id")), Seq("doc_id"), "left_anti")
-          vs.commitWrites(batchId, Seq(
-            DeltaWrite("grams", fold.batchGrams),
-            FullWrite("freq", fold.index.freq),
-            RangedWrite("stats", prevRows.unionByName(changed), nR, touched,
-              full = false, keyCol = "doc_id"),
-            FullWrite("meta", meta)), prev)
-        }
+              full = true, keyCol = "doc_id")
+          else touchedRangeWrite(vs, v, "stats", fold.changedStats, "doc_id", nR)
+        vs.commitWrites(batchId, Seq(
+          DeltaWrite("grams", fold.batchGrams),
+          FullWrite("freq", fold.index.freq),
+          stats,
+          FullWrite("meta", meta)), prev)
     }
   }
 

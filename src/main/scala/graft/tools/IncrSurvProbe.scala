@@ -68,7 +68,7 @@ object IncrSurvProbe {
       var best = Double.MaxValue
       (1 to 2).foreach { i =>
         val t0 = System.nanoTime()
-        Dedup.survivorsIncremental(ix, batch, "doc_id", "text").count()
+        Dedup.survivorsIncrementalDelta(ix, batch, "doc_id", "text").full.count()
         Dedup.releaseSignatures()
         best = math.min(best, (System.nanoTime() - t0) / 1e9)
       }
@@ -101,7 +101,7 @@ object IncrSurvProbe {
       var best = Double.MaxValue
       (1 to 2).foreach { _ =>
         val t0 = System.nanoTime()
-        Dedup.survivorsFullIncremental(ix, batch, "doc_id", "text").count()
+        Dedup.survivorsFullIncrementalDelta(ix, batch, "doc_id", "text").full.count()
         Dedup.releaseSignatures()
         best = math.min(best, (System.nanoTime() - t0) / 1e9)
       }
@@ -161,7 +161,8 @@ object IncrSurvProbe {
     val edges = eBatch.unionByName(eRelink).unionByName(near).cache()
     time("edges")(edges.count())
     val c2 = time("incr_cc")(
-      { val c = graft.er.Clustering.incrementalClusters(spark, idx.clusters, edges).cache(); c.count(); c })
+      { val c = graft.er.Clustering.incrementalClustersWithDelta(spark, idx.clusters, edges)
+          .assignment.cache(); c.count(); c })
     time("tier_pass")(
       idx.hashed.unionByName(bHashed)
         .join(merged.select(col("content_hash"), col("gsz")), Seq("content_hash"))

@@ -220,7 +220,7 @@ class ClusteringSpec extends AnyFunSuite {
       if (oldEdges.isEmpty) Seq.empty[(Long, Long)].toDF("a", "b") else oldEdges.toDF("a", "b"))
     val batch =
       if (newEdges.isEmpty) Seq.empty[(Long, Long)].toDF("a", "b") else newEdges.toDF("a", "b")
-    Clustering.incrementalClusters(spark, standing, batch)
+    Clustering.incrementalClustersWithDelta(spark, standing, batch).assignment
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -261,11 +261,13 @@ class ClusteringSpec extends AnyFunSuite {
         val ids = (oldE.flatMap(e => Seq(e._1, e._2)) ++ Seq(0L)).distinct
         val standing = Clustering.assign(spark, ids.toDF("id"), oldE.toDF("a", "b"))
         val broadcastRegime = Clustering
-          .incrementalClusters(spark, standing, newE.toDF("a", "b"))
+          .incrementalClustersWithDelta(spark, standing, newE.toDF("a", "b"))
+          .assignment
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         val fallbackRegime = Clustering
-          .incrementalClusters(spark, standing, newE.toDF("a", "b"),
+          .incrementalClustersWithDelta(spark, standing, newE.toDF("a", "b"),
             broadcastMaxEndpoints = 0L)
+          .assignment
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(fallbackRegime == broadcastRegime, s"round $round")
         assert(fallbackRegime ==

@@ -263,7 +263,7 @@ class DedupAnnSpec extends AnyFunSuite {
     val idx = Dedup.buildSurvivorIndex(standing, "doc_id", "text")
     def table(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
-    val got = table(Dedup.survivorsIncremental(idx, batch, "doc_id", "text"))
+    val got = table(Dedup.survivorsIncrementalDelta(idx, batch, "doc_id", "text").full)
     val want = table(Dedup.survivors(d, "doc_id", "text"))
     assert(got.size === want.size, s"row counts differ: ${got.size} vs ${want.size}")
     assert(got === want)
@@ -283,7 +283,7 @@ class DedupAnnSpec extends AnyFunSuite {
     val standing = Seq((10L, "zeta eta theta unique document")).toDF("doc_id", "text")
     val batch = Seq((5L, "zeta eta theta unique document")).toDF("doc_id", "text")
     val idx = Dedup.buildSurvivorIndex(standing, "doc_id", "text")
-    val got = Dedup.survivorsIncremental(idx, batch, "doc_id", "text")
+    val got = Dedup.survivorsIncrementalDelta(idx, batch, "doc_id", "text").full
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
     // standing doc 10 WAS its own keeper; the smaller-id batch duplicate
     // takes over, flipping 10 to a dropped exact duplicate
@@ -341,7 +341,7 @@ class DedupAnnSpec extends AnyFunSuite {
     val fidx = Dedup.buildFullSurvivorIndex(standing, "doc_id", "text")
     def table(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
-    val got = table(Dedup.survivorsFullIncremental(fidx, batch, "doc_id", "text"))
+    val got = table(Dedup.survivorsFullIncrementalDelta(fidx, batch, "doc_id", "text").full)
     val want = table(Dedup.survivors(d, "doc_id", "text",
       containmentPairs = Some(graft.queries.Queries.containmentPairs(d))))
     assert(got.size === want.size, s"row counts differ: ${got.size} vs ${want.size}")
@@ -357,7 +357,7 @@ class DedupAnnSpec extends AnyFunSuite {
     // clusters recomputed from the at-rest frames) is result-identical
     val fidx2 = Dedup.buildFullSurvivorIndex(standing, "doc_id", "text",
       reuseCore = Some(Dedup.buildSurvivorIndex(standing, "doc_id", "text")))
-    val got2 = table(Dedup.survivorsFullIncremental(fidx2, batch, "doc_id", "text"))
+    val got2 = table(Dedup.survivorsFullIncrementalDelta(fidx2, batch, "doc_id", "text").full)
     assert(got2 === want, "reuseCore fold diverged from the fresh-build fold")
     // parameter drift fails loudly (the NearPairTable rule)
     assertThrows[IllegalArgumentException] {
@@ -391,6 +391,27 @@ class DedupAnnSpec extends AnyFunSuite {
     (full.keySet -- changed.keySet).foreach { k =>
       assert(standingDecisions(k) === full(k), s"passthrough row $k drifted")
     }
+  }
+
+  test("containment-aware bootstrap persists only the frames of the index it returns") {
+    // every frame the bootstrap hands to `cache` must be in `frames`: an
+    // orphaned persisted frame would leak one cache-manager entry per
+    // bootstrap in a long-lived session
+    val longToks = (0 until 40).map("t" + _)
+    val df = (Seq(
+      (1L, "en", "web", longToks.mkString(" ")),
+      (7L, "en", "web", longToks.take(10).mkString(" ")),
+      (3L, "en", "web", (100 until 140).map("u" + _).mkString(" "))) ++
+      docs(20).collect().map(r => (r.getLong(0) + 5000L, "en", "web", r.getString(1))))
+      .toDF("doc_id", "lang", "source", "text")
+    val cm = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val fidx = Dedup.buildFullSurvivorIndex(df, "doc_id", "text",
+      cache = _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      reuseCore = None)
+    fidx.frames.foreach(_.count())
+    fidx.frames.foreach(_.unpersist(blocking = true))
+    assert(cm.isEmpty, "the bootstrap left a persisted frame outside its index")
   }
 
   test("containment posting cap: hot token trimmed at rest with a loud census, rare-token pairs still exact") {
@@ -429,7 +450,7 @@ class DedupAnnSpec extends AnyFunSuite {
     // decision row per doc
     def table(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
-    val got = table(Dedup.survivorsFullIncremental(fidx, victim, "doc_id", "text"))
+    val got = table(Dedup.survivorsFullIncrementalDelta(fidx, victim, "doc_id", "text").full)
     assert(got.size === 12, s"one row per doc expected, got ${got.size}")
     assert(got(9002L) === ((9000L, "contained")), s"rare-token victim: ${got(9002L)}")
 
@@ -440,7 +461,8 @@ class DedupAnnSpec extends AnyFunSuite {
     val all = standing.unionByName(victim)
     val want = table(Dedup.survivors(all, "doc_id", "text",
       containmentPairs = Some(graft.queries.Queries.containmentPairs(all))))
-    assert(table(Dedup.survivorsFullIncremental(fidxD, victim, "doc_id", "text")) === want)
+    assert(table(Dedup.survivorsFullIncrementalDelta(fidxD, victim, "doc_id", "text").full) ===
+      want)
   }
 
   test("curate_pipeline: staged verdicts compose the three gated stages consistently") {

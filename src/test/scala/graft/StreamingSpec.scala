@@ -331,6 +331,36 @@ class StreamingSpec extends AnyFunSuite {
     assert(cur() == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
   }
 
+  test("a failed state read fails the fold loudly and keeps the previous version") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val local = Files.createTempDirectory("cc_state_faulty").toString
+    val stateDir = "faulty://" + local
+    // v1 rewrites only the range of its changed id: read without its
+    // manifest, the version is a partial relation
+    Streaming.foldClusterBatch(Seq((1L, 2L)).toDF("a", "b"), stateDir, 0L)
+    Streaming.foldClusterBatch(Seq((2L, 3L)).toDF("a", "b"), stateDir, 1L)
+    def latest() = scala.io.Source.fromFile(new java.io.File(local, "_LATEST")).mkString.trim
+    def cur() = Streaming.currentClusters(spark, stateDir)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L)
+    assert(cur() == want && latest() == "1")
+    // a transient (non-FileNotFound) error on the previous version's
+    // manifest, then on the pointer itself: each must fail the fold, not
+    // degrade to a guessed layout or an empty state
+    Seq("v_000000000001/_PARTS", "/_LATEST").foreach { failing =>
+      FaultyFs.failOpen = Set(failing)
+      try {
+        val e = intercept[java.io.IOException] {
+          Streaming.foldClusterBatch(Seq((3L, 4L)).toDF("a", "b"), stateDir, 2L)
+        }
+        assert(!e.isInstanceOf[java.io.FileNotFoundException], e.toString)
+      } finally FaultyFs.failOpen = Set.empty
+      assert(latest() == "1", s"pointer moved after a failed fold ($failing)")
+      assert(cur() == want, s"standing state changed after a failed fold ($failing)")
+    }
+  }
+
   test("streaming source-cap maintenance: two-wave fold equals batch cap; eviction and replay") {
     import spark.implicits._
     val docsDir = Files.createTempDirectory("scap_stream_docs").toString
