@@ -298,8 +298,9 @@ object Clustering {
 
   /** Connected components with RELIABLE per-round snapshots: every
     * star-contraction round commits its edge set as Parquet under
-    * `dir/round_NNNNN` plus a MANIFEST (row count + xor-hash signature +
-    * converged flag), written only after the Parquet commit succeeds. A
+    * `dir/round_NNNNN` plus a `_MANIFEST` (row count + edge-set signature
+    * + converged flag), published through [[graft.state.Commit]] only
+    * after the Parquet commit succeeds. A
     * restarted run scans for the last complete round and resumes the loop
     * there instead of re-deriving it — each round is a pure function of
     * the previous edge set, so resume is exact. Round 0 is the normalized
@@ -322,7 +323,8 @@ object Clustering {
       edges: DataFrame,
       dir: String,
       maxIter: Int = 50): CcRun = {
-    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.{ChecksumException, Path}
+    import graft.state.Commit
     // Namespace the rounds by the INPUT edge-set signature: a caller that
     // reuses one dir across runs (the pipeline runner does) must not
     // resume contraction rounds of a different upstream graph. Computing
@@ -343,33 +345,28 @@ object Clustering {
     // underscore prefix: Spark's file index skips _-prefixed files, so the
     // manifest never gets picked up as a parquet footer
     def manifestPath(i: Int) = new Path(roundPath(i), "_MANIFEST")
+    def rounds(): Seq[(Int, Path)] = Commit.dirs(fs, root, "round_")
+      .flatMap { case (n, p) => n.toIntOption.map(_ -> p) }.sortBy(_._1)
 
-    // _MANIFEST: "round n h converged" — plain text, written AFTER the
-    // Parquet commit so its presence marks the round complete. The write
-    // itself is temp-file + rename: fs.create makes a path visible before
-    // its bytes land, so a crash mid-write must never leave a truncated
-    // manifest that wedges every future resume.
-    def writeManifest(i: Int, sig: (Long, Long, Long), converged: Boolean): Unit = {
-      val tmp = new Path(roundPath(i), "_MANIFEST.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(s"$i ${sig._1} ${sig._2} ${sig._3} $converged".getBytes("UTF-8"))
-      finally out.close()
-      fs.delete(manifestPath(i), false)
-      if (!fs.rename(tmp, manifestPath(i)))
-        throw new java.io.IOException(s"rename failed for ${manifestPath(i)}")
-    }
-    // A manifest that exists but does not parse (pre-rename crash debris,
-    // manual tampering) counts as an INCOMPLETE round: the scan stops
-    // before it and the round is recomputed.
+    // _MANIFEST: "round n h sum converged" — plain text, published through
+    // Commit AFTER the Parquet commit, so its presence marks the round
+    // complete. The overwrite-mode Parquet write has just replaced the
+    // round dir, so the manifest name is always fresh.
+    def writeManifest(i: Int, sig: (Long, Long, Long), converged: Boolean): Unit =
+      Commit.publish(fs, manifestPath(i), s"$i ${sig._1} ${sig._2} ${sig._3} $converged")
+    // A CORRUPT manifest (unparsable text, or one failing its checksum)
+    // counts as an INCOMPLETE round: the scan passes over it and the round
+    // is recomputed, which is exact because rounds are deterministic. Any
+    // other read error propagates — mistaking a transient error for an
+    // incomplete round would delete the converged snapshot as debris.
     def readManifest(i: Int): Option[(Long, Long, Long, Boolean)] =
-      try {
-        val in = fs.open(manifestPath(i))
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        val parts = txt.trim.split(' ')
-        // a pre-round-5 two-component manifest fails this parse (boolean in
-        // the sum slot) and correctly counts as an incomplete round
-        Some((parts(1).toLong, parts(2).toLong, parts(3).toLong, parts(4).toBoolean))
-      } catch { case _: Exception => None }
+      try Commit.read(fs, manifestPath(i)).flatMap(_.trim.split(' ') match {
+        case Array(_, n, h, s, c) =>
+          for (n <- n.toLongOption; h <- h.toLongOption; s <- s.toLongOption;
+               c <- c.toBooleanOption) yield (n, h, s, c)
+        case _ => None
+      })
+      catch { case _: ChecksumException => None }
     def commitRound(i: Int, e: DataFrame, prevSig: Option[(Long, Long, Long)]): (DataFrame, (Long, Long, Long), Boolean) = {
       e.write.mode("overwrite").parquet(roundPath(i).toString)
       val reread = spark.read.parquet(roundPath(i).toString)
@@ -379,71 +376,42 @@ object Clustering {
       (reread, sig, converged)
     }
 
-    // resume point: the last round whose MANIFEST exists (a crash between
-    // Parquet write and manifest leaves the round incomplete → recomputed)
     // Prune SIBLING namespaces: under one caller-owned dir, a different
     // input signature means a superseded upstream graph — its rounds can
     // never be resumed again and would otherwise accumulate one edge-set
     // Parquet copy per round per historical run.
-    try {
-      val parent = root.getParent
-      if (fs.exists(parent)) fs.listStatus(parent).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.startsWith("cc_") && st.getPath != root)
-          fs.delete(st.getPath, true)
-      }
-    } catch { case _: Exception => () }
+    Commit.dirs(fs, root.getParent, "cc_").foreach { case (_, p) =>
+      if (p != root) fs.delete(p, true)
+    }
 
     // resume point: the HIGHEST round with a COMPLETE (present + parsable)
     // manifest — found by listing, not by contiguous probing, because
-    // post-convergence pruning deletes the superseded earlier rounds
-    var last = -1
-    var lastManifest: Option[(Long, Long, Long, Boolean)] = None
-    if (fs.exists(root)) {
-      val rounds = fs.listStatus(root).flatMap { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.startsWith("round_"))
-          scala.util.Try(n.stripPrefix("round_").toInt).toOption
-        else None
-      }.sorted.reverse
-      // no maxIter filter here: a converged snapshot from a HIGHER-budget
-      // earlier run is still the exact answer — skipping it (post-pruning,
-      // with the lower rounds gone) would force a from-scratch recompute
-      // that may not even converge within the smaller budget
-      var i = 0
-      while (i < rounds.length && lastManifest.isEmpty) {
-        val r = rounds(i)
-        if (fs.exists(manifestPath(r))) {
-          val m = readManifest(r)
-          if (m.isDefined) { last = r; lastManifest = m }
-        }
-        i += 1
-      }
-    }
+    // post-convergence pruning deletes the superseded earlier rounds.
+    // No maxIter filter: a converged snapshot from a HIGHER-budget earlier
+    // run is still the exact answer — skipping it (post-pruning, with the
+    // lower rounds gone) would force a from-scratch recompute that may not
+    // even converge within the smaller budget.
+    val resume = rounds().reverseIterator
+      .flatMap { case (r, _) => readManifest(r).map(r -> _) }.nextOption()
+    val last = resume.fold(-1)(_._1)
 
     // Crash/corruption debris ABOVE the resume point (rounds with missing
-    // or unparsable manifests) is deleted now — BEFORE any new round is
+    // or corrupt manifests) is deleted now — BEFORE any new round is
     // written: the scan will never use it, and a stale full edge-set copy
     // must not survive every prune.
-    if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("round_"))
-        scala.util.Try(n.stripPrefix("round_").toInt).toOption.foreach { r =>
-          if (r > last) { try fs.delete(st.getPath, true) catch { case _: Exception => () } }
-        }
-    }
+    rounds().foreach { case (r, p) => if (r > last) fs.delete(p, true) }
 
     var iter = 0
     var prevSig: (Long, Long, Long) = (-1L, -1L, -1L)
     var converged = false
     var e: DataFrame = null
-    if (last < 0) {
-      val (e0, sig0, _) = commitRound(0, localContract(norm), None)
-      e = e0; prevSig = sig0
-    } else {
-      val (n, h, sm, c) = lastManifest.get
-      e = spark.read.parquet(roundPath(last).toString)
-      prevSig = (n, h, sm); converged = c; iter = last
+    resume match {
+      case None =>
+        val (e0, sig0, _) = commitRound(0, localContract(norm), None)
+        e = e0; prevSig = sig0
+      case Some((r, (n, h, sm, c))) =>
+        e = spark.read.parquet(roundPath(r).toString)
+        prevSig = (n, h, sm); converged = c; iter = r
     }
     val resumedFrom = math.max(last, 0)
 
@@ -463,13 +431,7 @@ object Clustering {
       // re-invocation resumes it instantly with zero rounds computed) —
       // delete the superseded earlier rounds so the namespace holds one
       // edge-set copy, not O(log n) of them.
-      if (converged) {
-        var i = 0
-        while (i < iter) {
-          try fs.delete(roundPath(i), true) catch { case _: Exception => () }
-          i += 1
-        }
-      }
+      if (converged) rounds().foreach { case (r, p) => if (r < iter) fs.delete(p, true) }
       // EAGER localCheckpoint: the returned cluster table must be
       // self-contained — a later call on this dir prunes snapshot files
       // (sibling namespaces, superseded rounds) that a lazy plan would

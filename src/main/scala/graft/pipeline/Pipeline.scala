@@ -1,19 +1,22 @@
 package graft.pipeline
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import org.apache.hadoop.fs.{ChecksumException, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.state.Commit
 
 /** Checkpoint-resumable stage orchestration with per-partition lineage +
   * metrics (BASELINE.json north_rule).
   *
   * Each stage materializes to `<root>/<stage>/data` (Parquet) plus a
-  * `manifest.json` written LAST and atomically (write temp + move): the
-  * manifest is the commit record — a stage directory without one is
-  * garbage from a killed run and is recomputed. This emulates the
-  * Iceberg snapshot+manifest layout (no Iceberg runtime jar ships in this
+  * `manifest.json` published LAST through [[graft.state.Commit]]: the
+  * manifest is the commit record — a stage directory without one (or
+  * with a corrupt one) is garbage from a killed run and is recomputed.
+  * `root` may live on any Hadoop file system. This emulates the Iceberg
+  * snapshot+manifest layout (no Iceberg runtime jar ships in this
   * sandbox — SURVEY §4.3); the directory naming stays swappable for a real
   * catalog.
   *
@@ -31,41 +34,37 @@ object Pipeline {
   def manifestPath(root: String, stage: String) = s"$root/$stage/manifest.json"
   def dataPath(root: String, stage: String) = s"$root/$stage/data"
 
-  def isComplete(root: String, stage: String): Boolean =
-    Files.exists(Paths.get(manifestPath(root, stage)))
+  /** The stage's committed manifest; None when it is absent or fails its
+    * checksum — either way the stage is uncommitted. */
+  private def readManifest(fs: FileSystem, root: String, stage: String): Option[String] =
+    try Commit.read(fs, new Path(manifestPath(root, stage)))
+    catch { case _: ChecksumException => None }
 
-  private def manifestFingerprint(root: String, stage: String): String = {
-    val p = Paths.get(manifestPath(root, stage))
-    if (!Files.exists(p)) "absent"
-    else {
-      val bytes = Files.readAllBytes(p)
-      java.lang.Long.toHexString(
-        bytes.foldLeft(0xCBF29CE484222325L)((h, b) => (h ^ (b & 0xFF)) * 0x100000001B3L))
-    }
-  }
+  private def fingerprint(manifest: Option[String]): String =
+    manifest.fold("absent")(m => java.lang.Long.toHexString(
+      m.getBytes(StandardCharsets.UTF_8)
+        .foldLeft(0xCBF29CE484222325L)((h, b) => (h ^ (b & 0xFF)) * 0x100000001B3L)))
 
   /** Run (or resume) one stage: if a committed snapshot exists whose
     * recorded upstream fingerprints still match, read it back; otherwise
-    * compute, write data, then commit the manifest atomically. */
+    * drop the stale manifest, compute, write data, then publish the
+    * manifest. */
   def stage(
       spark: SparkSession,
       root: String,
       name: String,
       upstream: Seq[String] = Nil)(compute: => DataFrame): StageResult = {
-    val mPath = manifestPath(root, name)
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mPath = new Path(manifestPath(root, name))
     val dPath = dataPath(root, name)
-    val upstreamFps = upstream.map(u => u -> manifestFingerprint(root, u))
+    val upstreamJson = upstream
+      .map(u => s""""${esc(u)}":"${fingerprint(readManifest(fs, root, u))}"""")
+      .mkString("{", ",", "}")
 
-    if (Files.exists(Paths.get(mPath))) {
-      val manifest = new String(Files.readAllBytes(Paths.get(mPath)), StandardCharsets.UTF_8)
-      val stillValid = upstreamFps.forall { case (u, fp) =>
-        manifest.contains(s""""${esc(u)}":"$fp"""")
-      }
-      if (stillValid) {
+    readManifest(fs, root, name) match {
+      case Some(m) if m.contains(s""""upstream":$upstreamJson""") =>
         return StageResult(name, spark.read.parquet(dPath), fromSnapshot = true)
-      }
-      // upstream changed → invalidate
-      Files.delete(Paths.get(mPath))
+      case _ => fs.delete(mPath, false) // stale or corrupt: uncommitted either way
     }
 
     val t0 = System.nanoTime()
@@ -78,20 +77,15 @@ object Pipeline {
       .agg(count(lit(1)).as("rows"))
       .orderBy(col("pid"))
       .collect()
-      .map(r => s"""{"pid":${r.getInt(0)},"rows":${r.getLong(1)}}""")
-    val rows = perPart.map(_.split("\"rows\":")(1).stripSuffix("}").toLong).sum
+      .map(r => (r.getInt(0), r.getLong(1)))
     val sec = (System.nanoTime() - t0) / 1e9
-    val upstreamJson = upstreamFps
-      .map { case (u, fp) => s""""${esc(u)}":"$fp"""" }
-      .mkString("{", ",", "}")
+    val partitionRows =
+      perPart.map { case (pid, n) => s"""{"pid":$pid,"rows":$n}""" }.mkString(",")
     val manifest =
-      s"""{"stage":"${esc(name)}","rows":$rows,"partitions":${perPart.length},""" +
-        s""""partition_rows":[${perPart.mkString(",")}],""" +
+      s"""{"stage":"${esc(name)}","rows":${perPart.map(_._2).sum},""" +
+        s""""partitions":${perPart.length},"partition_rows":[$partitionRows],""" +
         f""""wall_sec":$sec%.3f,"upstream":$upstreamJson}"""
-    val tmp = Paths.get(mPath + ".tmp")
-    Files.createDirectories(tmp.getParent)
-    Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(mPath), StandardCopyOption.ATOMIC_MOVE)
+    Commit.publish(fs, mPath, manifest)
     StageResult(name, written, fromSnapshot = false)
   }
 }

@@ -162,18 +162,8 @@ object ErQueries {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, Shared]()
 
-  def shared(spark: SparkSession, dir: String): Shared = {
-    val app = spark.sparkContext.applicationId
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (!e.getKey.startsWith(app + "|")) {
-        try e.getValue.unpersistAll() catch { case _: Throwable => () }
-        it.remove()
-      }
-    }
-    cache.computeIfAbsent(app + "|" + dir, _ => new Shared(spark, dir))
-  }
+  def shared(spark: SparkSession, dir: String): Shared =
+    graft.util.SessionMemo.cachedEntry(cache, spark, dir)(new Shared(spark, dir))(_.unpersistAll())
 
   /** Reliable-CC mode flag: Some(dir) when `spark.graft.cc.checkpointDir`
     * is set non-empty in the session conf. */

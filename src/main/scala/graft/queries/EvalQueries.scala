@@ -84,18 +84,8 @@ object EvalQueries {
   /** App-keyed like ErQueries.shared: foreign-application entries are
     * evicted (and unpersisted) on access so repeated mains in one JVM
     * cannot accumulate session-lifetime cache blocks. */
-  def shared(spark: SparkSession, dir: String): Shared = {
-    val app = spark.sparkContext.applicationId
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (!e.getKey.startsWith(app + "|")) {
-        try e.getValue.unpersistAll() catch { case _: Throwable => () }
-        it.remove()
-      }
-    }
-    cache.computeIfAbsent(app + "|" + dir, _ => new Shared(spark, dir))
-  }
+  def shared(spark: SparkSession, dir: String): Shared =
+    graft.util.SessionMemo.cachedEntry(cache, spark, dir)(new Shared(spark, dir))(_.unpersistAll())
 
   /** Benchmark docs carrying the oracle linker's predictions. */
   private def oracleDocsPlan(spark: SparkSession, dir: String): Dataset[EvalDoc] = {

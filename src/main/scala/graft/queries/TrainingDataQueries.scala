@@ -73,10 +73,6 @@ object TrainingDataQueries {
   private val MhRowsPerBand = 8
   private val MhMinJaccard = 0.35
 
-  /** Probe-only public alias (tools.CurateProbe). */
-  private[graft] def minhashPairsSharedProbe(spark: SparkSession, dir: String): DataFrame =
-    minhashPairsShared(spark, dir)
-
   private def minhashPairsShared(spark: SparkSession, dir: String): DataFrame =
     graft.util.SessionMemo.cached(minhashMemo, spark, dir) {
       Dedup.minhashPairs(docs(spark, dir), "doc_id", "text",

@@ -193,16 +193,14 @@ object Streaming {
     *     min-label proof; StreamingSpec checks two-wave == batch).
     *   - Versions are keyed by Structured Streaming's `batchId`, so a
     *     replayed batch (crash between sink commit and offset-log commit)
-    *     is detected via the `_LATEST` pointer and skipped — the fold is
+    *     is detected as already committed and skipped — the fold is
     *     also idempotent by CC semantics (already-merged edges collapse to
     *     self-loops), so even a missed skip cannot corrupt state.
-    *   - `_LATEST` is temp-file + rename (same protocol as the CC round
-    *     manifests); a crash before the pointer delete leaves `_LATEST` on
-    *     the previous version (which is why that dir is retained and only
-    *     OLDER ones are pruned), and a crash between the delete and the
-    *     rename is recovered by readLatest's fallback scan over the
-    *     per-version `_GRAFT_COMMITTED` markers — no crash window loses
-    *     state (StreamingSpec "recovers from a missing _LATEST pointer").
+    *   - A version commits by publishing its `_PARTS` manifest last
+    *     ([[graft.state.Commit]], the protocol of the CC round manifests
+    *     and the pipeline stages): a crash at any earlier step leaves an
+    *     uncommitted version dir that readers ignore and the replayed
+    *     batch rewrites, so no crash window loses state (CommitCrashSpec).
     *
     * Scale shape: per micro-batch cost = batch-scale CC + one narrow read
     * + one narrow write of the node-scale assignment (the broadcast-probe
@@ -256,61 +254,33 @@ object Streaming {
 
   /** Versioned Parquet state-at-rest shared by the four streaming
     * maintenance sinks (cluster, source-cap, dup-ngram and IVF folds), all
-    * committed through [[commitWrites]]: batchId-keyed version dirs, an
-    * atomic `_LATEST` pointer (temp file + rename, the CC-manifest
-    * protocol), previous version retained as the recovery target for a
-    * crash before the pointer rename, older versions pruned (minus any
-    * version still referenced by a delta chain or a ranged holder — the
-    * `_PARTS` manifest is the reference root). One implementation so the
-    * commit protocol cannot drift between sinks. */
+    * committed through [[commitWrites]]: batchId-keyed version dirs
+    * `v_N`, each committed by its `_PARTS` manifest (published last,
+    * through [[graft.state.Commit]]), so the latest version is the highest
+    * `v_N` that has one. The previous version is retained (a reader that
+    * resolved it just before a commit can finish its read); older versions
+    * are pruned, minus any version still referenced by a delta chain or a
+    * ranged holder — the `_PARTS` manifest is the reference root. One
+    * implementation so the commit protocol cannot drift between sinks. */
   private[graft] final class VersionedState(spark: SparkSession, stateDir: String) {
     import org.apache.hadoop.fs.Path
+    import graft.state.Commit
     private val fs =
       new Path(stateDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     private val root = fs.makeQualified(new Path(stateDir))
-    private val latestPath = new Path(root, "_LATEST")
 
     def versionPath(v: Long): String = new Path(root, f"v_$v%012d").toString
 
-    /** Per-version commit marker, written AFTER the Parquet version lands
-      * and BEFORE the pointer swap: a version dir without it is an
-      * in-flight write and never a recovery target. Underscore-prefixed so
-      * Spark's file index skips it (the CC `_MANIFEST` rule). Our own
-      * marker, not Spark's `_SUCCESS` — that one is config-dependent
-      * (mapreduce …marksuccessfuljobs) and lands mid-commit. */
-    private def markerPath(v: Long) = new Path(new Path(versionPath(v)), "_GRAFT_COMMITTED")
+    /** The version dirs present, committed or not. */
+    private def versions(): Seq[Long] =
+      Commit.dirs(fs, root, "v_").flatMap(_._1.toLongOption)
 
-    /** The latest committed version, or None for a fresh state dir. Only
-      * a MISSING pointer means "no pointer": any other read error
-      * propagates, because a fold that mistook a transient error for an
-      * empty dir would treat its batch as the first one and prune every
-      * retained version. */
-    def readLatest(): Option[Long] = {
-      val viaPointer =
-        try {
-          val in = fs.open(latestPath)
-          val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-          Some(txt.trim.toLong)
-        } catch { case _: java.io.FileNotFoundException => None }
-      // No pointer: either a fresh dir (no versions → None) or a crash
-      // landed between the pointer delete and the rename in sealCommit —
-      // fall back to the newest COMPLETE (marker-carrying) version instead
-      // of silently restarting from empty state (total state loss, as
-      // above).
-      viaPointer.orElse {
-        if (!fs.exists(root)) None
-        else {
-          val committed = fs.listStatus(root).flatMap { st =>
-            val n = st.getPath.getName
-            if (st.isDirectory && n.startsWith("v_"))
-              scala.util.Try(n.drop(2).toLong).toOption
-                .filter(v => fs.exists(markerPath(v)))
-            else None
-          }
-          if (committed.isEmpty) None else Some(committed.max)
-        }
-      }
-    }
+    /** The latest committed version, or None for a fresh state dir. Any
+      * error listing the dir or probing a manifest propagates: a fold that
+      * mistook a transient error for an empty dir would treat its batch as
+      * the first one and prune every retained version. */
+    def readLatest(): Option[Long] =
+      versions().sorted.reverseIterator.find(v => fs.exists(manifestPath(v)))
 
     private def partPath(v: Long, name: String): String =
       new Path(new Path(versionPath(v)), name).toString
@@ -358,15 +328,15 @@ object Streaming {
       }
 
     // ---- the `_PARTS` manifest (round-7 delta state) --------------------
-    private def manifestPath2(v: Long) = new Path(new Path(versionPath(v)), "_PARTS")
+    private def manifestPath(v: Long) = new Path(new Path(versionPath(v)), "_PARTS")
 
     /** Every committed version carries a `_PARTS` manifest, so ANY failure
       * to read it — a missing file included — is an error: degrading to a
       * guessed layout would return a partial relation and fold it into
       * the next version as if complete. */
     private def readManifest(v: Long): Map[String, Entry] = {
-      val in = fs.open(manifestPath2(v))
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val txt = Commit.read(fs, manifestPath(v)).getOrElse(throw new IllegalStateException(
+        s"state $stateDir v=$v has no _PARTS manifest"))
       txt.split('\n').filter(_.nonEmpty).map { line =>
         val t = line.split(' ')
         t(0) match {
@@ -390,20 +360,15 @@ object Streaming {
           (Seq("ranged", n, r.toString) ++
             holders.toSeq.sorted.map { case (k, hv) => s"$k:$hv" }).mkString(" ")
       }.mkString("\n")
-      val tmp = new Path(new Path(versionPath(v)), "_PARTS.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(txt.getBytes("UTF-8")) finally out.close()
-      fs.delete(manifestPath2(v), false)
-      if (!fs.rename(tmp, manifestPath2(v)))
-        throw new java.io.IOException(s"rename failed for ${manifestPath2(v)}")
+      Commit.publish(fs, manifestPath(v), txt)
     }
 
     /** Manifest-driven commit: write each part per its [[PartWrite]]
-      * kind, record the resolution manifest, seal (marker + pointer),
-      * prune everything the new AND previous manifests no longer
-      * reference. Logs the bytes written this version vs the resolved
-      * state-at-rest — the evidence that per-fold write volume tracks
-      * the batch. */
+      * kind, publish the resolution manifest (the commit), then prune
+      * every version that is not this one, the previous one, or
+      * referenced by either manifest (uncommitted debris included). Logs
+      * the bytes written this version — the evidence that per-fold write
+      * volume tracks the batch. */
     def commitWrites(batchId: Long, writes: Seq[PartWrite], prev: Option[Long]): Unit = {
       val prevManifest = prev.map(readManifest).getOrElse(Map.empty[String, Entry])
       def partPath(name: String) = this.partPath(batchId, name)
@@ -434,10 +399,7 @@ object Streaming {
           }
         case RangedWrite(name, content, nRanges, touchedRanges, full, keyCol, maxRefs) =>
           def listLanded(): Set[Long] =
-            try fs.listStatus(new Path(partPath(name)))
-              .map(_.getPath.getName).filter(_.startsWith("_r="))
-              .map(_.stripPrefix("_r=").toLong).toSet
-            catch { case _: java.io.FileNotFoundException => Set.empty[Long] }
+            Commit.dirs(fs, new Path(partPath(name)), "_r=").map(_._1.toLong).toSet
           val prevHolders = prevManifest.get(name) match {
             case Some(RangedE(r, holders)) if r == nRanges && !full => holders
             case _ => Map.empty[Long, Long] // bootstrap / rescale / forced full
@@ -471,40 +433,15 @@ object Streaming {
           }
       }
       writeManifest(batchId, manifest)
-      val alsoKeep = manifest.values.flatMap(_.refs).toSet ++
+      val keep = Set(batchId) ++ prev ++ manifest.values.flatMap(_.refs) ++
         prevManifest.values.flatMap(_.refs)
-      sealCommit(batchId, prev, alsoKeep)
+      versions().filterNot(keep).foreach(v => fs.delete(new Path(versionPath(v)), true))
       try {
         val written = fs.getContentSummary(new Path(versionPath(batchId))).getLength
         System.err.println(s"[graft.streaming] state $stateDir v=$batchId: " +
           s"wrote $written bytes this version " +
           s"(${writes.map(w => w.name + "=" + w.getClass.getSimpleName).mkString(", ")})")
       } catch { case _: Exception => () }
-    }
-
-    /** Marker + pointer swap + prune — the tail of [[commitWrites]]. The
-      * pointer swap is delete + rename — not atomic on its own, which is
-      * why readLatest() recovers from the marker scan when the pointer is
-      * missing: every crash window leaves either the old pointer (version
-      * re-foldable / skippable) or a marker-complete newest version.
-      * `alsoKeep`: versions still referenced by a delta chain or ranged
-      * holder (from the new or previous manifest). */
-    private def sealCommit(batchId: Long, prev: Option[Long],
-        alsoKeep: Set[Long]): Unit = {
-      val mk = fs.create(markerPath(batchId), true)
-      try mk.write("ok".getBytes("UTF-8")) finally mk.close()
-      val tmp = new Path(root, "_LATEST.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-      fs.delete(latestPath, false)
-      if (!fs.rename(tmp, latestPath))
-        throw new java.io.IOException(s"rename failed for $latestPath")
-      val keep = Set(batchId) ++ prev ++ alsoKeep
-      fs.listStatus(root).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.startsWith("v_") && !keep.contains(n.drop(2).toLong))
-          fs.delete(st.getPath, true)
-      }
     }
   }
 
@@ -662,8 +599,8 @@ object Streaming {
   /** Streaming dup-ngram maintenance (the dc_dup_ngrams_incr fold as a
     * foreachBatch sink): documents stream in; each micro-batch folds into
     * the standing gram-frequency index (grams / freq / stats — one
-    * multi-part version per batch, sealed atomically by the shared
-    * marker, so a crash can never expose half an index). Dup flips are
+    * multi-part version per batch, committed atomically by its `_PARTS`
+    * manifest, so a crash can never expose half an index). Dup flips are
     * monotone, so the fold touches only batch-carried grams. */
   def streamingDupNgrams(
       docs: DataFrame,
@@ -766,8 +703,8 @@ object Streaming {
     * centroids (the bootstrap — a deployment would usually seed the
     * state with a batch-built index instead), every later batch assigns
     * against the frozen centroids and appends. State parts per version:
-    * "assigned" (cell, nbr_id, cv) + "centroids" (c, v) — sealed
-    * together by the shared marker.
+    * "assigned" (cell, nbr_id, cv) + "centroids" (c, v) — committed
+    * together by the version's `_PARTS` manifest.
     *
     * CAVEAT: appends are batch-boundary-insensitive, TRAINING is not —
     * the centroids freeze on exactly the rows of micro-batch 0, so what

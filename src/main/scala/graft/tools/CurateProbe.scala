@@ -35,7 +35,7 @@ object CurateProbe {
     val aIds = s1.select(col("doc_id").as("id_a"))
     val bIds = s1.select(col("doc_id").as("id_b"))
     val pairs1 = time("pairs1 restrict (count)")(
-      { val p = TrainingDataQueries.minhashPairsSharedProbe(spark, dir)
+      { val p = TrainingDataQueries.ddMinhashPairs(spark, dir)
           .join(aIds, Seq("id_a"), "left_semi").join(bIds, Seq("id_b"), "left_semi")
         p.count(); p })
     val cont1 = time("containment restrict (count)")(

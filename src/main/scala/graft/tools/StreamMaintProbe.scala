@@ -13,7 +13,8 @@ import graft.streaming.Streaming
   * exercised inside the test JVM but never from a standalone surface).
   *
   * Runs REAL Structured Streaming queries (writeStream → foreachBatch →
-  * versioned Parquet state with the atomic `_LATEST` + marker protocol)
+  * versioned Parquet state, each version committed by its `_PARTS`
+  * manifest)
   * over ≥3 micro-batches each, at a deliberately non-toy scale
   * (150k edges/wave over 100k nodes; 120k docs/wave over 1k sources),
   * then checks the standing state equals the independent BATCH answer

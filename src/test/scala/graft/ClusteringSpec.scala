@@ -119,6 +119,31 @@ class ClusteringSpec extends AnyFunSuite {
     assert(got3 == ufComponents(edges2))
   }
 
+  test("checkpointed CC: a transient manifest read error fails loudly and keeps the converged snapshot") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val local = java.nio.file.Files.createTempDirectory("cc_ckpt_faulty").toString
+    val dir = "faulty://" + local
+    val df = ((0L until 40L).map(i => (i, (i + 7) % 40)) :+ ((100L, 101L))).toDF("a", "b")
+    assert(Clustering.connectedComponentsCheckpointed(spark, df, dir).converged)
+    def roundDirs(): Seq[java.io.File] = new java.io.File(local).listFiles().toSeq
+      .flatMap(_.listFiles().toSeq).filter(_.getName.startsWith("round_"))
+    val converged = roundDirs()
+    assert(converged.size == 1)
+    // a non-FileNotFound read error on the converged round's manifest must
+    // fail the call, not count the round as incomplete and prune it
+    FaultyFs.failOpen = Set("_MANIFEST")
+    try {
+      val e = intercept[java.io.IOException](
+        Clustering.connectedComponentsCheckpointed(spark, df, dir))
+      assert(!e.isInstanceOf[java.io.FileNotFoundException], e.toString)
+    } finally FaultyFs.failOpen = Set.empty
+    assert(roundDirs() == converged && converged.head.isDirectory,
+      "the converged snapshot was deleted after a transient read error")
+    val again = Clustering.connectedComponentsCheckpointed(spark, df, dir)
+    assert(again.converged && again.roundsComputed == 0)
+  }
+
   test("resume namespace separates duplicate-heavy multisets that xor-cancel (round-4 advice)") {
     import spark.implicits._
     // both inputs: 4 edges, every edge with multiplicity 2 -> the xor

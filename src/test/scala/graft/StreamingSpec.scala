@@ -11,6 +11,13 @@ import graft.synth.Synth
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkSessions.spark
 
+  /** The latest committed version under a local state dir: the highest
+    * `v_N` that has a `_PARTS` manifest. */
+  private def latestVersion(stateDir: String): Long =
+    new java.io.File(stateDir).list()
+      .filter(n => n.startsWith("v_") && new java.io.File(stateDir, s"$n/_PARTS").exists())
+      .map(_.drop(2).toLong).max
+
   test("streaming mention extraction matches the batch path exactly") {
     val dir = Files.createTempDirectory("pages_stream").toString
     val pages = Synth.pages(spark, 80, seed = 42L, nDomains = 5)
@@ -292,8 +299,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == want, "delta-resolved stats diverge from batch dupNgramStats")
       // write-volume evidence: a non-compaction fold's grams dir holds
       // ONLY that batch's gram rows (batch-scale), not the whole relation
-      val latest = scala.io.Source.fromFile(new java.io.File(stateDir, "_LATEST")).mkString.trim.toLong
-      val vDir = f"v_$latest%012d"
+      val vDir = f"v_${latestVersion(stateDir)}%012d"
       val gramsRows = spark.read.parquet(s"$stateDir/$vDir/grams").count()
       val batchGrams = graft.curate.Decontam
         .dupNgramStats(wave(9).toDF("doc_id", "text"), "doc_id", "text", n = 8)
@@ -303,7 +309,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.streaming.stateRanges")
   }
 
-  test("versioned state recovers from a missing _LATEST pointer (crash between delete and rename)") {
+  test("versioned state: an uncommitted version dir is ignored") {
     import spark.implicits._
     val stateDir = Files.createTempDirectory("cc_state_crash").toString
     // two committed folds: {1,2} then merge via 2-3
@@ -313,19 +319,16 @@ class StreamingSpec extends AnyFunSuite {
     def cur() = Streaming.currentClusters(spark, stateDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cur() == want)
-    // simulate the crash window: pointer deleted, rename never happened
-    val latest = new java.io.File(stateDir, "_LATEST")
-    assert(latest.delete(), "fixture: _LATEST must exist to delete")
-    // debris: an in-flight version dir WITHOUT the commit marker must be
-    // ignored by the fallback scan
-    assert(new java.io.File(stateDir, "v_000000000007").mkdir())
-    // fallback: newest marker-complete version, NOT empty state
-    assert(cur() == want, "missing pointer lost the standing state")
+    // debris of a crashed fold: a HIGHER version dir holding a Parquet
+    // part but no `_PARTS` manifest (killed before its commit record)
+    Seq((7L, 7L)).toDF("id", "cluster")
+      .write.parquet(s"$stateDir/v_000000000007/assign")
+    // the latest committed version, NOT the debris and NOT empty state
+    assert(cur() == want, "an uncommitted version dir changed the standing state")
     // the next fold resumes FROM the recovered version (batch 2 merges
     // 3-4; a from-scratch refold would know nothing about 1-2-3)
     Streaming.foldClusterBatch(Seq((3L, 4L)).toDF("a", "b"), stateDir, 2L)
     assert(cur() == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
-    assert(new java.io.File(stateDir, "_LATEST").exists(), "pointer not restored")
     // a replay below the recovered version is still skipped
     Streaming.foldClusterBatch(Seq((4L, 999L)).toDF("a", "b"), stateDir, 1L)
     assert(cur() == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
@@ -340,23 +343,26 @@ class StreamingSpec extends AnyFunSuite {
     // manifest, the version is a partial relation
     Streaming.foldClusterBatch(Seq((1L, 2L)).toDF("a", "b"), stateDir, 0L)
     Streaming.foldClusterBatch(Seq((2L, 3L)).toDF("a", "b"), stateDir, 1L)
-    def latest() = scala.io.Source.fromFile(new java.io.File(local, "_LATEST")).mkString.trim
+    def latest() = latestVersion(local)
     def cur() = Streaming.currentClusters(spark, stateDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L)
-    assert(cur() == want && latest() == "1")
+    assert(cur() == want && latest() == 1L)
     // a transient (non-FileNotFound) error on the previous version's
-    // manifest, then on the pointer itself: each must fail the fold, not
-    // degrade to a guessed layout or an empty state
-    Seq("v_000000000001/_PARTS", "/_LATEST").foreach { failing =>
-      FaultyFs.failOpen = Set(failing)
+    // manifest, then on listing the state dir itself: each must fail the
+    // fold, not degrade to a guessed layout or an empty state
+    Seq[(String, () => Unit)](
+      "_PARTS read" -> (() => FaultyFs.failOpen = Set("v_000000000001/_PARTS")),
+      "state dir listing" -> (() => FaultyFs.failList = Set(local))
+    ).foreach { case (failing, inject) =>
+      inject()
       try {
         val e = intercept[java.io.IOException] {
           Streaming.foldClusterBatch(Seq((3L, 4L)).toDF("a", "b"), stateDir, 2L)
         }
         assert(!e.isInstanceOf[java.io.FileNotFoundException], e.toString)
-      } finally FaultyFs.failOpen = Set.empty
-      assert(latest() == "1", s"pointer moved after a failed fold ($failing)")
+      } finally { FaultyFs.failOpen = Set.empty; FaultyFs.failList = Set.empty }
+      assert(latest() == 1L, s"a version committed after a failed fold ($failing)")
       assert(cur() == want, s"standing state changed after a failed fold ($failing)")
     }
   }

@@ -215,9 +215,9 @@ class TextMultimodalPipelineSpec extends AnyFunSuite {
     Files.delete(java.nio.file.Paths.get(Pipeline.manifestPath(root, "stage_b")))
     runAll()
     assert(computesA == 1 && computesB == 2)
-    // upstream invalidation: changed stage_a manifest → b recomputes
-    val aPath = java.nio.file.Paths.get(Pipeline.manifestPath(root, "stage_a"))
-    Files.write(aPath, new String(Files.readAllBytes(aPath)).replace("1000", "1001").getBytes)
+    // upstream invalidation: stage_a republished with 1001 rows → b recomputes
+    Files.delete(java.nio.file.Paths.get(Pipeline.manifestPath(root, "stage_a")))
+    Pipeline.stage(spark, root, "stage_a")(spark.range(0, 1001).toDF("id"))
     runAll()
     assert(computesB == 3)
     // manifest has per-partition lineage
