@@ -1,5 +1,7 @@
 package graft.dedup
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -68,7 +70,7 @@ object Dedup {
     val q = activeSigs.get()
     while (q.size() > mark) {
       val d = q.pollLast()
-      try d.unpersist(false) catch { case _: Throwable => () }
+      try d.unpersist(false) catch { case NonFatal(_) => () }
     }
   }
 

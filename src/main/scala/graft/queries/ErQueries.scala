@@ -2,11 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.er.{Blocking, Clustering, Mentions, PairEval, Scoring}
 import graft.model.{Mention, Page}
 import graft.synth.Synth
+import graft.util.SessionMemo
 
 /** Entity-resolution pipeline queries over the synthetic Common-Crawl-style
   * pages table (BASELINE.json north_rule). The mention table and the
@@ -33,152 +33,88 @@ object ErQueries {
   def pages(spark: SparkSession, dir: String): Dataset[Page] =
     Synth.pages(spark, pageCountFor(dir), seed = 42L, nDomains = 50)
 
-  /** Session-scoped shared ER pipeline stages for one (session, dir): the
-    * catalog surfaces six queries over the same deterministic corpus, and
-    * all of them are prefixes of one DAG
-    *   mentions → keyed blocks → scored pairs → match edges → clusters.
-    * Without sharing, each query re-runs every upstream stage (round-2
-    * bench: 3 fused-scoring shuffles + 2 CC runs per catalog pass); with
-    * it, each stage runs ONCE per session and is persisted — the classic
-    * shared-dimension pattern. All stages are lazy: a query only
-    * materializes the prefix it actually needs. */
-  final class Shared private[ErQueries] (spark: SparkSession, dir: String) {
+  // Session memos of the ER stages. The catalog surfaces six queries over
+  // the same deterministic corpus, and all of them are prefixes of one DAG
+  //   mentions → keyed blocks → scored pairs → match edges → clusters.
+  // Without sharing, each query re-runs every upstream stage (round-2
+  // bench: 3 fused-scoring shuffles + 2 CC runs per catalog pass); with
+  // it, each stage runs ONCE per session. Every stage but the two CC
+  // runs is lazy: a query only materializes the prefix it actually needs.
 
-    /** Raw extraction output per url — the ONE extraction pass of the
-      * session: mentions, er_extract, and the four aux_extract_* dumps
-      * all derive from it (before this memo each surface re-parsed the
-      * page HTML independently). */
-    lazy val extracted: Dataset[(String, graft.model.Extracted)] = {
+  /** Raw extraction output per url — the ONE extraction pass of the
+    * session: mentions, er_extract, and the four aux_extract_* dumps
+    * all derive from it (before this memo each surface re-parsed the
+    * page HTML independently). */
+  private def extracted(spark: SparkSession, dir: String): Dataset[(String, graft.model.Extracted)] =
+    SessionMemo.frame(spark, s"er.extracted|$dir") {
       import spark.implicits._
       pages(spark, dir).map { p =>
         (p.url, graft.text.Extract.processExtractorText(
           new String(p.html, java.nio.charset.StandardCharsets.UTF_8)))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
+      }
     }
 
-    /** Mention extraction output (E1/F1 operators), derived from the
-      * shared extraction pass. */
-    lazy val mentions: Dataset[Mention] =
-      Mentions.fromExtracted(extracted).persist(StorageLevel.MEMORY_AND_DISK)
-
-    /** Deduplicated scored candidate-pair universe — ONE fused
-      * blocking+scoring shuffle per session (J1/J8/J9). Duplicate rows
-      * across block keys are bit-identical, so the drop is deterministic. */
-    lazy val scoredPairs: DataFrame =
-      Scoring.scoreFused(Blocking.keyedWithAttrs(mentions, Blocking.Config()))
+  /** Deduplicated scored candidate-pair universe — ONE fused
+    * blocking+scoring shuffle per session (J1/J8/J9). Duplicate rows
+    * across block keys are bit-identical, so the drop is deterministic. */
+  def erScoredPairs(spark: SparkSession, dir: String): DataFrame =
+    SessionMemo.frame(spark, s"er.scoredPairs|$dir") {
+      Scoring.scoreFused(Blocking.keyedWithAttrs(mentions(spark, dir), Blocking.Config()))
         .dropDuplicates("a", "b")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-
-    /** Block-size profile (one row) — Blocking.blockProfile itself is
-      * deliberately leak-free (localCheckpoint, ContextCleaner-reclaimed),
-      * which means repeated catalog calls would each re-run the
-      * corpus-scale keying chain; the session memo restores cross-call
-      * reuse at the layer that owns a release point (unpersistAll). */
-    lazy val blockProfile: DataFrame =
-      Blocking.blockProfile(mentions).persist(StorageLevel.MEMORY_AND_DISK)
-
-    /** Transitive clustering over the match edges — ONE connected-components
-      * run per session AND CC MODE (G6). The `spark.graft.cc.checkpointDir`
-      * session conf (unset/empty = default in-memory localCheckpoint
-      * rounds) switches the CC loop to RELIABLE, resumable Parquet rounds
-      * under the given directory — the cluster-deployment mode, reachable
-      * from the catalog surface without code changes. Only the CLUSTERS
-      * stage is keyed by the mode: flipping the conf mid-session reuses
-      * the persisted extraction/scoring stages instead of duplicating the
-      * whole corpus-scale memo (round-5 review finding). */
-    private val clustersByMode =
-      new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-    def clusters: DataFrame =
-      clustersByMode.computeIfAbsent(
-        // conf from the ACTIVE session, not the constructor-captured one:
-        // sibling sessions (spark.newSession()) share the applicationId
-        // and therefore this Shared instance, but each carries its own
-        // session conf — the caller's mode choice must win
-        ccCheckpointDir(SparkSession.getActiveSession.getOrElse(spark)).getOrElse(""),
-        mode =>
-          Clustering.assign(
-            spark,
-            mentions.select(col("mention_id").as("id")),
-            scoredPairs.where(col("is_match")).select(col("a"), col("b")),
-            checkpointDir = Option(mode).filter(_.nonEmpty))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-
-    /** Standing cluster assignment for the incremental-maintenance query
-      * (G7): batch CC over the "standing" 3/4 split of the match edges.
-      * In a real maintenance deployment this state PRE-EXISTS — it is
-      * yesterday's converged assignment, and IncrCcProbe excludes its
-      * build cost for the same reason — so the session memo makes the
-      * measured er_clusters_incr cost the incremental fold itself, not
-      * the one-time setup of the simulated standing world. */
-    private val standingRef =
-      new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
-    def standingClusters: DataFrame = {
-      val cur = standingRef.get()
-      if (cur != null) cur
-      else this.synchronized {
-        val again = standingRef.get()
-        if (again != null) again
-        else {
-          // NOT a lazy val: Clustering.assign runs its CC loop EAGERLY
-          // (unlike every other stage here, which is plan metadata until
-          // an action), so unpersistAll must be able to skip a
-          // never-built assignment without triggering the build
-          val built = Clustering.assign(
-            spark,
-            mentions.select(col("mention_id").as("id")),
-            scoredPairs.where(col("is_match") && !incrIsNewEdge)
-              .select(col("a"), col("b")))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          standingRef.set(built)
-          built
-        }
-      }
     }
 
-    /** Release every persisted stage (safe on never-materialized stages —
-      * persist() is plan metadata until an action runs, and the one eager
-      * stage, standingClusters, is guarded by its materialization ref). */
-    def unpersistAll(): Unit = {
-      Option(standingRef.getAndSet(null)).foreach { c =>
-        try c.unpersist(false) catch { case _: Throwable => () }
-      }
-      try blockProfile.unpersist(false) catch { case _: Throwable => () }
-      clustersByMode.values().forEach { c =>
-        try c.unpersist(false) catch { case _: Throwable => () }
-      }
-      clustersByMode.clear()
-      try scoredPairs.unpersist(false) catch { case _: Throwable => () }
-      try extracted.unpersist(false) catch { case _: Throwable => () }
-      try mentions.unpersist(false) catch { case _: Throwable => () }
+  /** Transitive clustering over the match edges — ONE connected-components
+    * run per session AND CC MODE (G6). The `spark.graft.cc.checkpointDir`
+    * session conf (unset/empty = default in-memory localCheckpoint
+    * rounds) switches the CC loop to RELIABLE, resumable Parquet rounds
+    * under the given directory — the cluster-deployment mode, reachable
+    * from the catalog surface without code changes. Only this stage is
+    * keyed by the mode, read from the calling session: flipping the conf
+    * mid-session, or a sibling session (same application, own conf),
+    * reuses the persisted extraction/scoring stages. */
+  def erClusters(spark: SparkSession, dir: String): DataFrame = {
+    val mode = ccCheckpointDir(spark)
+    SessionMemo.frame(spark, s"er.clusters|${mode.getOrElse("")}|$dir") {
+      Clustering.assign(
+        spark,
+        mentions(spark, dir).select(col("mention_id").as("id")),
+        erScoredPairs(spark, dir).where(col("is_match")).select(col("a"), col("b")),
+        checkpointDir = mode)
     }
   }
 
-  /** Keyed by application id so a stopped session's entries are never
-    * resurrected; entries from OTHER applications are evicted (and
-    * unpersisted) on access, so repeated Bench/Verify mains or test suites
-    * in one JVM cannot accumulate session-lifetime cache blocks. */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Shared]()
-
-  def shared(spark: SparkSession, dir: String): Shared =
-    graft.util.SessionMemo.cachedEntry(cache, spark, dir)(new Shared(spark, dir))(_.unpersistAll())
+  /** Standing cluster assignment for the incremental-maintenance query
+    * (G7): batch CC over the "standing" 3/4 split of the match edges.
+    * In a real maintenance deployment this state PRE-EXISTS — it is
+    * yesterday's converged assignment, and IncrCcProbe excludes its
+    * build cost for the same reason — so the session memo makes the
+    * measured er_clusters_incr cost the incremental fold itself, not
+    * the one-time setup of the simulated standing world. */
+  private def standingClusters(spark: SparkSession, dir: String): DataFrame =
+    SessionMemo.frame(spark, s"er.standing|$dir") {
+      Clustering.assign(
+        spark,
+        mentions(spark, dir).select(col("mention_id").as("id")),
+        erScoredPairs(spark, dir).where(col("is_match") && !incrIsNewEdge)
+          .select(col("a"), col("b")))
+    }
 
   /** Reliable-CC mode flag: Some(dir) when `spark.graft.cc.checkpointDir`
     * is set non-empty in the session conf. */
   private[graft] def ccCheckpointDir(spark: SparkSession): Option[String] =
     Option(spark.conf.get("spark.graft.cc.checkpointDir", "")).filter(_.nonEmpty)
 
+  /** Mention extraction output (E1/F1 operators), derived from the
+    * shared extraction pass. */
   def mentions(spark: SparkSession, dir: String): Dataset[Mention] =
-    shared(spark, dir).mentions
+    SessionMemo.frame(spark, s"er.mentions|$dir")(Mentions.fromExtracted(extracted(spark, dir)))
 
   /** Extraction stage output (hyperlink/section/synonym counts per url) —
     * the E1 operator surfaced as a query, projected from the session's
     * shared extraction pass (no second corpus-scale parse). */
   def erExtract(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    extractedPages(spark, dir).map { case (url, ex) =>
+    extracted(spark, dir).map { case (url, ex) =>
       (url, ex.text.length.toLong, ex.hyperlinks.size.toLong,
         ex.titleSynonyms.size.toLong, ex.sections.size.toLong)
     }.toDF("url", "text_len", "n_hyperlinks", "n_title_synonyms", "n_sections")
@@ -196,48 +132,45 @@ object ErQueries {
   // columns (substring + regex normalization + splitmix64 fold in SQL)
   // instead of re-selecting those queries' own output.
 
-  private def extractedPages(spark: SparkSession, dir: String) =
-    shared(spark, dir).extracted
-
   def auxExtractText(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    extractedPages(spark, dir).map { case (url, ex) => (url, ex.text) }
+    extracted(spark, dir).map { case (url, ex) => (url, ex.text) }
       .toDF("url", "text")
   }
 
   def auxExtractLinks(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    extractedPages(spark, dir).flatMap { case (url, ex) =>
+    extracted(spark, dir).flatMap { case (url, ex) =>
       ex.hyperlinks.map(h => (url, h.begin, h.end, h.target))
     }.toDF("url", "begin", "end", "target")
   }
 
   def auxExtractSynonyms(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    extractedPages(spark, dir).flatMap { case (url, ex) =>
+    extracted(spark, dir).flatMap { case (url, ex) =>
       ex.titleSynonyms.map(s => (url, s.begin, s.end))
     }.toDF("url", "begin", "end")
   }
 
   def auxExtractSections(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    extractedPages(spark, dir).flatMap { case (url, ex) =>
+    extracted(spark, dir).flatMap { case (url, ex) =>
       ex.sections.map(s => (url, s.begin, s.end, s.title))
     }.toDF("url", "begin", "end", "title")
   }
 
+  /** Block-size profile (one row) — Blocking.blockProfile itself is
+    * deliberately leak-free (localCheckpoint, ContextCleaner-reclaimed),
+    * which means repeated catalog calls would each re-run the
+    * corpus-scale keying chain; the session memo restores cross-call
+    * reuse at the layer that owns a release point. */
   def erBlockProfile(spark: SparkSession, dir: String): DataFrame =
-    shared(spark, dir).blockProfile
+    SessionMemo.frame(spark, s"er.blockProfile|$dir")(Blocking.blockProfile(mentions(spark, dir)))
 
-  def erScoredPairs(spark: SparkSession, dir: String): DataFrame =
-    shared(spark, dir).scoredPairs
-
-  def erClusters(spark: SparkSession, dir: String): DataFrame =
-    shared(spark, dir).clusters
 
   /** The 1/4 "daily batch" split of the match-edge universe (the
     * crawl-increment shape); its complement defines the standing graph
-    * memoized in Shared.standingClusters. One definition for both so the
+    * memoized in [[standingClusters]]. One definition for both so the
     * split can never drift between the memo and the query. */
   private[queries] def incrIsNewEdge =
     pmod(xxhash64(col("a"), col("b")), lit(4)) === 0
@@ -252,10 +185,9 @@ object ErQueries {
     * exact), so the DuckDB oracle replays full-graph CC over the union —
     * a non-circular gate on the incremental path. */
   def erClustersIncr(spark: SparkSession, dir: String): DataFrame = {
-    val sh = shared(spark, dir)
-    val batch = sh.scoredPairs.where(col("is_match") && incrIsNewEdge)
+    val batch = erScoredPairs(spark, dir).where(col("is_match") && incrIsNewEdge)
       .select(col("a"), col("b"))
-    Clustering.incrementalClustersWithDelta(spark, sh.standingClusters, batch)
+    Clustering.incrementalClustersWithDelta(spark, standingClusters(spark, dir), batch)
       .assignment
   }
 
@@ -265,8 +197,7 @@ object ErQueries {
     * API for library callers). */
   def erPairwiseEval(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sh = shared(spark, dir)
-    val ev = PairEval.pairwise(sh.scoredPairs, sh.clusters)
+    val ev = PairEval.pairwise(erScoredPairs(spark, dir), erClusters(spark, dir))
     Seq((ev.tp, ev.fp, ev.fn, ev.precision, ev.recall, ev.f1))
       .toDF("tp", "fp", "fn", "precision", "recall", "f1")
   }

@@ -9,6 +9,7 @@ import graft.eval.{Evaluation, OracleLinker}
 import graft.kb.KbBuild
 import graft.linker.BaselineLinker
 import graft.synth.Synth
+import graft.util.SessionMemo
 
 /** ELEVANT-evaluation queries over the synthetic pages corpus: benchmark
   * docs are derived from the gold hyperlinks; predictions come from the
@@ -52,40 +53,21 @@ object EvalQueries {
   def kbAliasProbs(spark: SparkSession, dir: String): DataFrame =
     KbBuild.aliasCandidateProbs(kbLinkFreq(spark, dir))
 
-  /** Session-scoped memo of the eval family's shared upstream, mirroring
-    * ErQueries.Shared: three catalog queries (eval_oracle_counts,
-    * eval_baseline_counts, eval_cases) plus two Verify aux dumps all
-    * consume the same benchmark-docs → predictions → cases prefix. Without
-    * pinning, each surface re-runs the groupByKey doc assembly and the
-    * page-text join — cheap in isolation (~0.6 s at sf0.1) but the
-    * catalog's tail-end memory pressure made un-pinned re-runs swing to
-    * 6.5 s in the round-3 official bench (verdict item 3). All stages are
-    * lazy; a surface only materializes what it needs. */
-  final class Shared private[EvalQueries] (spark: SparkSession, dir: String) {
-    import spark.implicits._
+  // Session memos of the eval family's shared upstream: three catalog
+  // queries (eval_oracle_counts, eval_baseline_counts, eval_cases) plus two
+  // Verify aux dumps all consume the same benchmark-docs → predictions →
+  // cases prefix. Without pinning, each surface re-runs the groupByKey doc
+  // assembly and the page-text join — cheap in isolation (~0.6 s at sf0.1)
+  // but the catalog's tail-end memory pressure made un-pinned re-runs
+  // swing to 6.5 s in the round-3 official bench (verdict item 3).
 
-    lazy val oracleCases: Dataset[graft.eval.CaseModel.EvalCase] =
-      Evaluation.cases(oracleDocsPlan(spark, dir), EntityMeta.empty)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  private def oracleCases(spark: SparkSession, dir: String): Dataset[EvalCase] =
+    SessionMemo.frame(spark, s"eval.oracleCases|$dir")(
+      Evaluation.cases(oracleDocsPlan(spark, dir), EntityMeta.empty))
 
-    lazy val baselineCases: Dataset[graft.eval.CaseModel.EvalCase] =
-      Evaluation.cases(baselineDocsPlan(spark, dir), EntityMeta.empty)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    def unpersistAll(): Unit = {
-      try oracleCases.unpersist(false) catch { case _: Throwable => () }
-      try baselineCases.unpersist(false) catch { case _: Throwable => () }
-    }
-  }
-
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Shared]()
-
-  /** App-keyed like ErQueries.shared: foreign-application entries are
-    * evicted (and unpersisted) on access so repeated mains in one JVM
-    * cannot accumulate session-lifetime cache blocks. */
-  def shared(spark: SparkSession, dir: String): Shared =
-    graft.util.SessionMemo.cachedEntry(cache, spark, dir)(new Shared(spark, dir))(_.unpersistAll())
+  private def baselineCases(spark: SparkSession, dir: String): Dataset[EvalCase] =
+    SessionMemo.frame(spark, s"eval.baselineCases|$dir")(
+      Evaluation.cases(baselineDocsPlan(spark, dir), EntityMeta.empty))
 
   /** Benchmark docs carrying the oracle linker's predictions. */
   private def oracleDocsPlan(spark: SparkSession, dir: String): Dataset[EvalDoc] = {
@@ -120,22 +102,22 @@ object EvalQueries {
   /** Oracle identity at corpus scale: one row per (mode, category). The
     * "all" rows must carry fp = fn = 0. */
   def evalOracleCounts(spark: SparkSession, dir: String): DataFrame =
-    Evaluation.counts(shared(spark, dir).oracleCases, EntityMeta.empty)
+    Evaluation.counts(oracleCases(spark, dir), EntityMeta.empty)
 
   /** Baseline linker (most-popular candidate, min tie-break) evaluated
     * with full reference semantics. */
   def evalBaselineCounts(spark: SparkSession, dir: String): DataFrame =
-    Evaluation.counts(shared(spark, dir).baselineCases, EntityMeta.empty)
+    Evaluation.counts(baselineCases(spark, dir), EntityMeta.empty)
 
   /** Aux dumps for the DuckDB gate: the pre-aggregation counter-row
     * relations of the two eval queries above (the per-case counting logic
     * is golden-tested; the dumped relation lets DuckDB replay the
     * aggregation). */
   def auxOracleCounterRows(spark: SparkSession, dir: String): DataFrame =
-    Evaluation.counterRowsDf(shared(spark, dir).oracleCases, EntityMeta.empty)
+    Evaluation.counterRowsDf(oracleCases(spark, dir), EntityMeta.empty)
 
   def auxBaselineCounterRows(spark: SparkSession, dir: String): DataFrame =
-    Evaluation.counterRowsDf(shared(spark, dir).baselineCases, EntityMeta.empty)
+    Evaluation.counterRowsDf(baselineCases(spark, dir), EntityMeta.empty)
 
   /** Aux dump: word-boundary-expanded span per mention — the pure
     * text+span function (Extract.wordBoundary, doctest-golden against the
@@ -164,7 +146,7 @@ object EvalQueries {
     * re-derives from independently-gated upstream dumps (er_mentions,
     * kb_top_candidates, aux_label_spans). */
   def evalCases(spark: SparkSession, dir: String): DataFrame = {
-    shared(spark, dir).baselineCases
+    baselineCases(spark, dir)
       .select(
         col("url"), col("begin"), col("end"), col("text"),
         col("factor"), col("mentionType"),

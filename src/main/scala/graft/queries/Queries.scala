@@ -335,19 +335,14 @@ object Queries {
 
   /** Session memo of the rare-first sorted-token table shared by
     * q15_jaccard_pairs and dd_containment_pairs — one token-frequency
-    * aggregation + sort per session instead of one per query
-    * (SessionMemo eviction discipline; persisted, doc-scale but narrow:
-    * (ids, n, stoks)). */
-  private val sortedToksMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def sortedToksShared(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionMemo.cached(sortedToksMemo, spark, dir) {
-      q15SortedToks(t(spark, dir, "documents"))
-    }
+    * aggregation + sort per session instead of one per query (persisted,
+    * doc-scale but narrow: (ids, n, stoks)). */
+  private def sortedToks(spark: SparkSession, dir: String): DataFrame =
+    graft.util.SessionMemo.frame(spark, s"q15.sortedToks|$dir")(
+      q15SortedToks(t(spark, dir, "documents")))
 
   def q15JaccardPairs(spark: SparkSession, dir: String): DataFrame =
-    q15PairsFrom(sortedToksShared(spark, dir))
+    q15PairsFrom(sortedToks(spark, dir))
 
   /** Asymmetric containment near-dup pairs: ordered (doc_a, doc_b) where
     * |A∩B| / |A| ≥ 0.8 over distinct-token sets within a (lang, source)
@@ -440,13 +435,9 @@ object Queries {
     * curate_pipeline) and the prefix-filter join costs ~2.5 s at sf0.1 —
     * one execution per session, like the minhash pair memo. The persisted
     * table is pair-scale. */
-  private val containmentMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def ddContainmentPairs(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionMemo.cached(containmentMemo, spark, dir) {
-      containmentPairsFrom(sortedToksShared(spark, dir))
-    }
+    graft.util.SessionMemo.frame(spark, s"dd.containmentPairs|$dir")(
+      containmentPairsFrom(sortedToks(spark, dir)))
 
   val ddContainmentSql: String =
     """SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,

@@ -2,12 +2,14 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.curate.{GopherFilter, SourceCap}
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
 import graft.sim.Ann
 import graft.text.TextAnalysis
+import graft.util.SessionMemo
 
 /** Training-data pipeline operators surfaced as driver queries (dedup
   * tiers, similarity search, text analysis, multimodal plumbing). All of
@@ -53,17 +55,6 @@ object TrainingDataQueries {
   private def embs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/embeddings.parquet")
 
-  /** Session memo of the MinHash pair table: dd_minhash_pairs and
-    * dd_survivors consume the IDENTICAL (input, shingleK=5, nHashes=64,
-    * rowsPerBand=8, minJaccard=0.35) pair set, and the signature
-    * computation dominates both — one computation per session instead of
-    * two (ErQueries.Shared pattern: keyed by application id, other
-    * applications' entries evicted + unpersisted on access). The persisted
-    * table is the small PAIR set, not the signatures — Dedup's internal
-    * signature caches stay per-query (releaseSignatures discipline). */
-  private val minhashMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   // Single source of truth for the memoized MinHash pair-table parameters:
   // dd_minhash_pairs and dd_survivors consume the same table, and
   // Dedup.survivors REFUSES a pair table whose parameters drift from its
@@ -73,18 +64,20 @@ object TrainingDataQueries {
   private val MhRowsPerBand = 8
   private val MhMinJaccard = 0.35
 
-  private def minhashPairsShared(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionMemo.cached(minhashMemo, spark, dir) {
+  /** MinHash-LSH near-dup candidates. The synthetic documents share a
+    * 31-word vocabulary, so a moderate threshold yields a non-trivial
+    * pair set. Session memo: dd_minhash_pairs and dd_survivors consume
+    * the IDENTICAL (input, shingleK=5, nHashes=64, rowsPerBand=8,
+    * minJaccard=0.35) pair set, and the signature computation dominates
+    * both — one computation per session instead of two. The persisted
+    * table is the small PAIR set, not the signatures — Dedup's internal
+    * signature caches stay per-query (releaseSignatures discipline). */
+  def ddMinhashPairs(spark: SparkSession, dir: String): DataFrame =
+    SessionMemo.frame(spark, s"dd.minhashPairs|$dir") {
       Dedup.minhashPairs(docs(spark, dir), "doc_id", "text",
         shingleK = MhShingleK, nHashes = MhNHashes, rowsPerBand = MhRowsPerBand,
         minJaccard = MhMinJaccard)
     }
-
-  /** MinHash-LSH near-dup candidates. The synthetic documents share a
-    * 31-word vocabulary, so a moderate threshold yields a non-trivial
-    * pair set. */
-  def ddMinhashPairs(spark: SparkSession, dir: String): DataFrame =
-    minhashPairsShared(spark, dir)
 
   def ddSimhashPairs(spark: SparkSession, dir: String): DataFrame =
     // explicit cap (== the library default, Dedup.DefaultMaxBucket):
@@ -100,7 +93,7 @@ object TrainingDataQueries {
     Dedup.survivors(docs(spark, dir), "doc_id", "text",
       shingleK = MhShingleK, nHashes = MhNHashes, rowsPerBand = MhRowsPerBand,
       minJaccard = MhMinJaccard,
-      nearPairs = Some(Dedup.NearPairTable(minhashPairsShared(spark, dir),
+      nearPairs = Some(Dedup.NearPairTable(ddMinhashPairs(spark, dir),
         MhShingleK, MhNHashes, MhRowsPerBand, MhMinJaccard, Dedup.DefaultMaxBucket)))
 
   /** Fused survivor table (round-6): exact + minhash + CONTAINMENT edges
@@ -115,7 +108,7 @@ object TrainingDataQueries {
     Dedup.survivors(docs(spark, dir), "doc_id", "text",
       shingleK = MhShingleK, nHashes = MhNHashes, rowsPerBand = MhRowsPerBand,
       minJaccard = MhMinJaccard,
-      nearPairs = Some(Dedup.NearPairTable(minhashPairsShared(spark, dir),
+      nearPairs = Some(Dedup.NearPairTable(ddMinhashPairs(spark, dir),
         MhShingleK, MhNHashes, MhRowsPerBand, MhMinJaccard, Dedup.DefaultMaxBucket)),
       containmentPairs = Some(Queries.ddContainmentPairs(spark, dir)))
 
@@ -155,7 +148,7 @@ object TrainingDataQueries {
     val docs1 = dall.join(s1, Seq("doc_id"), "left_semi")
     val aIds = s1.select(col("doc_id").as("id_a"))
     val bIds = s1.select(col("doc_id").as("id_b"))
-    val pairs1 = minhashPairsShared(spark, dir)
+    val pairs1 = ddMinhashPairs(spark, dir)
       .join(aIds, Seq("id_a"), "left_semi").join(bIds, Seq("id_b"), "left_semi")
     val cont1 = Queries.ddContainmentPairs(spark, dir)
       .join(s1.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
@@ -222,7 +215,7 @@ object TrainingDataQueries {
     val docs1 = dall.join(s1, Seq("doc_id"), "left_semi")
     val aIds = s1.select(col("doc_id").as("id_a"))
     val bIds = s1.select(col("doc_id").as("id_b"))
-    val pairs1 = minhashPairsShared(spark, dir)
+    val pairs1 = ddMinhashPairs(spark, dir)
       .join(aIds, Seq("id_a"), "left_semi").join(bIds, Seq("id_b"), "left_semi")
     val cont1 = Queries.ddContainmentPairs(spark, dir)
       .join(s1.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
@@ -261,7 +254,7 @@ object TrainingDataQueries {
 
   /** The 1/4 "new crawl" split of the documents table (xxhash64 of the
     * doc id — partition-invariant); its complement is the standing corpus
-    * whose dedup index is memoized in [[survivorIndexShared]]. */
+    * whose dedup index is memoized in [[survivorIndex]]. */
   private[graft] def incrIsNewDoc =
     pmod(xxhash64(col("doc_id")), lit(4)) === 0
 
@@ -269,19 +262,13 @@ object TrainingDataQueries {
     * exact groups / clusters — the state a deployment keeps between crawl
     * increments; the bootstrap build is one-time setup, not part of the
     * measured fold). */
-  private val survivorIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.SurvivorIndex]()
-
-  private[graft] def survivorIndexShared(spark: SparkSession, dir: String): Dedup.SurvivorIndex =
-    graft.util.SessionMemo.cachedEntry(survivorIdxMemo, spark, dir)(
+  private[graft] def survivorIndex(spark: SparkSession, dir: String): Dedup.SurvivorIndex =
+    SessionMemo.entry(spark, s"dd.survivorIndex|$dir")(
       Dedup.buildSurvivorIndex(
         docs(spark, dir).where(!incrIsNewDoc), "doc_id", "text",
         shingleK = MhShingleK, nHashes = MhNHashes, rowsPerBand = MhRowsPerBand,
         minJaccard = MhMinJaccard, maxBucket = Dedup.DefaultMaxBucket,
-        cache = _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))) { idx =>
-      idx.frames
-        .foreach(f => try f.unpersist(false) catch { case _: Throwable => () })
-    }
+        cache = _.persist(StorageLevel.MEMORY_AND_DISK)))(_.frames)
 
   /** Incremental survivors (the training-data refresh twin of
     * er_clusters_incr): fold the 1/4 "new crawl" docs into the standing
@@ -290,27 +277,20 @@ object TrainingDataQueries {
     * proves incremental == batch exactly. */
   def ddSurvivorsIncr(spark: SparkSession, dir: String): DataFrame =
     Dedup.survivorsIncrementalDelta(
-      survivorIndexShared(spark, dir),
+      survivorIndex(spark, dir),
       docs(spark, dir).where(incrIsNewDoc), "doc_id", "text").full
 
-  /** Session memo of the CONTAINMENT-AWARE standing index (the
-    * survivorIdxMemo pattern — one bootstrap per session). */
-  private val fullSurvIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.FullSurvivorIndex]()
-
-  private[graft] def fullSurvivorIndexShared(spark: SparkSession, dir: String): Dedup.FullSurvivorIndex =
-    graft.util.SessionMemo.cachedEntry(fullSurvIdxMemo, spark, dir)(
+  /** Session memo of the CONTAINMENT-AWARE standing index. */
+  private[graft] def fullSurvivorIndex(spark: SparkSession, dir: String): Dedup.FullSurvivorIndex =
+    SessionMemo.entry(spark, s"dd.fullSurvivorIndex|$dir")(
       Dedup.buildFullSurvivorIndex(
         docs(spark, dir).where(!incrIsNewDoc), "doc_id", "text",
         shingleK = MhShingleK, nHashes = MhNHashes, rowsPerBand = MhRowsPerBand,
         minJaccard = MhMinJaccard, maxBucket = Dedup.DefaultMaxBucket,
-        cache = _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+        cache = _.persist(StorageLevel.MEMORY_AND_DISK),
         // one physical LSH index per session: reuse the core memo's
         // at-rest frames, recompute only the containment-aware clusters
-        reuseCore = Some(survivorIndexShared(spark, dir)))) { idx =>
-      idx.frames
-        .foreach(f => try f.unpersist(false) catch { case _: Throwable => () })
-    }
+        reuseCore = Some(survivorIndex(spark, dir))))(_.frames)
 
   /** Containment-aware incremental survivors (round-6): fold the 1/4
     * "new crawl" docs into the standing index MAINTAINING ALL THREE edge
@@ -321,41 +301,38 @@ object TrainingDataQueries {
     * the fused verdict exactly. */
   def ddSurvivorsFullIncr(spark: SparkSession, dir: String): DataFrame =
     Dedup.survivorsFullIncrementalDelta(
-      fullSurvivorIndexShared(spark, dir),
+      fullSurvivorIndex(spark, dir),
       docs(spark, dir).where(incrIsNewDoc), "doc_id", "text").full
 
   def ddEmbeddingDups(spark: SparkSession, dir: String): DataFrame =
     Dedup.embeddingDupPairs(embs(spark, dir), "vec_id", "embedding",
       minCosine = 0.25, nBits = 16, bandBits = 4)
 
-  /** Session memo of the three ANN top-k tables (minhashMemo pattern):
-    * each ann_*_topk query dumps its own table AND ann_recall consumes
-    * all three — without the memo a catalog pass pays every ANN pipeline
-    * twice. The persisted tables are queries×k rows (tiny); the heavy
-    * intermediates stay per-query. */
-  private val annMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def annShared(spark: SparkSession, dir: String, which: String)(
+  /** Session memo of the three ANN top-k tables: each ann_*_topk query
+    * dumps its own table AND ann_recall consumes all three — without the
+    * memo a catalog pass pays every ANN pipeline twice. The persisted
+    * tables are queries×k rows (tiny); the heavy intermediates stay
+    * per-query. */
+  private def annTopk(spark: SparkSession, dir: String, which: String)(
       build: => DataFrame): DataFrame =
-    graft.util.SessionMemo.cached(annMemo, spark, s"$dir|$which")(build)
+    SessionMemo.frame(spark, s"ann.topk|$which|$dir")(build)
 
   def annBruteTopk(spark: SparkSession, dir: String): DataFrame =
-    annShared(spark, dir, "brute") {
+    annTopk(spark, dir, "brute") {
       val e = embs(spark, dir)
       Ann.bruteForceTopK(e, e.where(col("vec_id") < AnnQueryMax), "vec_id", "embedding", k = AnnK)
         .drop("cosine") // rank list only: float formatting stays out of outputs
     }
 
   def annLshTopk(spark: SparkSession, dir: String): DataFrame =
-    annShared(spark, dir, "lsh") {
+    annTopk(spark, dir, "lsh") {
       val e = embs(spark, dir)
       Ann.lshTopK(spark, e, e.where(col("vec_id") < AnnQueryMax), "vec_id", "embedding", k = AnnK,
         nBits = 16, bandBits = 4).drop("cosine")
     }
 
   def annIvfTopk(spark: SparkSession, dir: String): DataFrame =
-    annShared(spark, dir, "ivf") {
+    annTopk(spark, dir, "ivf") {
       val e = embs(spark, dir)
       // nLists auto-derived (~sqrt(corpus)) so the index keeps cell
       // populations bounded at any sf (Ann.autoNLists doc)
@@ -382,18 +359,13 @@ object TrainingDataQueries {
   }
 
   /** Session memo of the standing IVF index (frozen centroids trained on
-    * the standing 3/4 slice; the survivorIdxMemo pattern). */
-  private val ivfIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Ann.IvfIndex]()
-
-  private[graft] def ivfIndexShared(spark: SparkSession, dir: String): Ann.IvfIndex =
-    graft.util.SessionMemo.cachedEntry(ivfIdxMemo, spark, dir)(
+    * the standing 3/4 slice). */
+  private[graft] def ivfIndex(spark: SparkSession, dir: String): Ann.IvfIndex =
+    SessionMemo.entry(spark, s"ann.ivfIndex|$dir")(
       Ann.buildIvfIndex(spark,
         embs(spark, dir).where(pmod(col("vec_id"), lit(AnnIncrMod)) =!= 0),
         "vec_id", "embedding",
-        cache = _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))) { idx =>
-      try idx.assigned.unpersist(false) catch { case _: Throwable => () }
-    }
+        cache = _.persist(StorageLevel.MEMORY_AND_DISK)))(i => Seq(i.assigned))
 
   /** Incremental IVF maintenance (round-6): append the 1/4 "new crawl"
     * vectors to the standing index (map-side assignment against the
@@ -403,7 +375,7 @@ object TrainingDataQueries {
     * batch exactly. */
   def annIvfIncr(spark: SparkSession, dir: String): DataFrame = {
     val e = embs(spark, dir)
-    val idx = Ann.ivfAppend(spark, ivfIndexShared(spark, dir),
+    val idx = Ann.ivfAppend(spark, ivfIndex(spark, dir),
       e.where(pmod(col("vec_id"), lit(AnnIncrMod)) === 0), "vec_id", "embedding")
     Ann.ivfSearchIndex(spark, idx, e.where(col("vec_id") < AnnQueryMax),
       "vec_id", "embedding", k = AnnK, nProbe = AnnNProbe).drop("cosine")
@@ -469,19 +441,12 @@ object TrainingDataQueries {
     graft.curate.Decontam.dupNgramStats(docs(spark, dir), "doc_id", "text",
       n = DecontamN)
 
-  /** Session memo of the standing n-gram duplication index (the
-    * survivorIdxMemo pattern). */
-  private val dupNgramIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.curate.Decontam.DupNgramIndex]()
-
-  private[graft] def dupNgramIndexShared(spark: SparkSession, dir: String): graft.curate.Decontam.DupNgramIndex =
-    graft.util.SessionMemo.cachedEntry(dupNgramIdxMemo, spark, dir)(
+  /** Session memo of the standing n-gram duplication index. */
+  private[graft] def dupNgramIndex(spark: SparkSession, dir: String): graft.curate.Decontam.DupNgramIndex =
+    SessionMemo.entry(spark, s"dc.dupNgramIndex|$dir")(
       graft.curate.Decontam.buildDupNgramIndex(
         docs(spark, dir).where(!incrIsNewDoc), "doc_id", "text", n = DecontamN,
-        cache = _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))) { idx =>
-      idx.frames
-        .foreach(f => try f.unpersist(false) catch { case _: Throwable => () })
-    }
+        cache = _.persist(StorageLevel.MEMORY_AND_DISK)))(_.frames)
 
   /** Incremental dup-ngram maintenance (round-6): fold the 1/4 "new
     * crawl" docs into the standing gram-frequency index. Oracle = the
@@ -489,7 +454,7 @@ object TrainingDataQueries {
     * exactly — dup flips are monotone). */
   def dcDupNgramsIncr(spark: SparkSession, dir: String): DataFrame =
     graft.curate.Decontam.dupNgramStatsIncremental(
-      dupNgramIndexShared(spark, dir),
+      dupNgramIndex(spark, dir),
       docs(spark, dir).where(incrIsNewDoc), "doc_id", "text")
 
   def taFingerprint(spark: SparkSession, dir: String): DataFrame =

@@ -39,7 +39,7 @@ object IncrSurvProbe {
     time("warmup")(TrainingDataQueries.ddSurvivorsIncr(spark, dir).count())
     Dedup.releaseSignatures()
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val idx = time("idx_lookup")(TrainingDataQueries.survivorIndexShared(spark, dir))
+    val idx = time("idx_lookup")(TrainingDataQueries.survivorIndex(spark, dir))
     val batch01 = docs.where(TrainingDataQueries.incrIsNewDoc)
     probeStages(spark, "sf0.1-catalog", idx, batch01)
 

@@ -32,7 +32,8 @@ object RegressionProbe {
     // (er_clusters 0.21→1.00 s, dd_simhash_pairs 1.64→2.57 s,
     // dd_minhash_pairs 0.28→0.44 s); dd_survivors retained as the
     // continuity reference. Override with PROBE_QUERIES=name,name to
-    // probe any catalog subset (the round-4 list or a future one).
+    // probe any catalog subset (the round-4 list or a future one; the eval
+    // family: PROBE_QUERIES=eval_baseline_counts,eval_cases,eval_oracle_counts).
     val byName = SparkEntry.queries
     val names = sys.env.get("PROBE_QUERIES")
       .map(_.split(',').toSeq)
