@@ -2,7 +2,7 @@ package graft.dedup
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.synth.Synth.splitmix64
@@ -585,21 +585,32 @@ object Dedup {
       banded.groupBy("bucket").agg(count(lit(1)).as("bsz")))
     val groups = cache(hashed.groupBy("content_hash")
       .agg(min("id").as("gmin"), count(lit(1)).as("gsz")))
+    val (clusters, decisions) = clusterAndDecide(spark, hashed, groups, banded,
+      bucketSizes, nHashes, minJaccard, maxBucket, cache, extraEdges, victims)
+    SurvivorIndex(hashed, sigs, banded, bucketSizes, groups, clusters,
+      shingleK, nHashes, rowsPerBand, minJaccard, maxBucket, decisions)
+  }
+
+  /** An index's cluster state from its at-rest frames: CC over the exact
+    * and near edges plus `extraEdges` (the containment tier), and the
+    * decision table assembled against `victims`. The near edges reuse the
+    * at-rest banded frame + its census, so no second shingling/banding
+    * pass runs; the clusters contract the SAME edge classes every later
+    * fold adds. */
+  private def clusterAndDecide(spark: SparkSession,
+      hashed: DataFrame, groups: DataFrame, banded: DataFrame, bucketSizes: DataFrame,
+      nHashes: Int, minJaccard: Double, maxBucket: Int, cache: DataFrame => DataFrame,
+      extraEdges: Option[DataFrame], victims: Option[DataFrame]): (DataFrame, DataFrame) = {
     val exactEdges = hashed.join(groups, Seq("content_hash"))
       .where(col("id") =!= col("gmin"))
       .select(col("id").as("a"), col("gmin").as("b"))
-    // the bootstrap's own near edges reuse the at-rest banded frame + its
-    // census — the last bandedSigs pass this index will ever run
     val nearEdges =
       minhashPairsFromBanded(
         capBucketsWith(banded, bucketSizes, maxBucket), nHashes, minJaccard)
         .select(col("id_a").as("a"), col("id_b").as("b"))
-    // idx.clusters is CC over the SAME edge classes every later fold adds
     val clusters = cache(graft.er.Clustering.connectedComponents(
       spark, extraEdges.foldLeft(exactEdges.unionByName(nearEdges))(_ unionByName _)))
-    SurvivorIndex(hashed, sigs, banded, bucketSizes, groups, clusters,
-      shingleK, nHashes, rowsPerBand, minJaccard, maxBucket,
-      decisions = cache(assembleDecisions(hashed, groups, clusters, victims)))
+    (clusters, cache(assembleDecisions(hashed, groups, clusters, victims)))
   }
 
   /** The (id, survivor_id, tier) assembly over a state — `hashed`
@@ -903,20 +914,11 @@ object Dedup {
             s"minJaccard=${c.minJaccard}, maxBucket=${c.maxBucket}) but buildFullSurvivorIndex " +
             s"runs with (shingleK=$shingleK, nHashes=$nHashes, rowsPerBand=$rowsPerBand, " +
             s"minJaccard=$minJaccard, maxBucket=$maxBucket)")
-        // re-derive the edge classes from the AT-REST frames (no second
-        // shingling/banding pass) and re-cluster with containment in
-        val exactEdges = c.hashed.join(c.groups, Seq("content_hash"))
-          .where(col("id") =!= col("gmin"))
-          .select(col("id").as("a"), col("gmin").as("b"))
-        val nearEdges = minhashPairsFromBanded(
-          capBucketsWith(c.banded, c.bucketSizes, c.maxBucket),
-          c.nHashes, c.minJaccard)
-          .select(col("id_a").as("a"), col("id_b").as("b"))
-        val clusters = cache(graft.er.Clustering.connectedComponents(
-          df.sparkSession,
-          exactEdges.unionByName(nearEdges).unionByName(contEdges)))
-        c.copy(clusters = clusters, decisions = cache(assembleDecisions(
-          c.hashed, c.groups, clusters, victims = Some(victimsFrame))))
+        // re-cluster the core's at-rest frames with containment in
+        val (clusters, decisions) = clusterAndDecide(df.sparkSession, c.hashed,
+          c.groups, c.banded, c.bucketSizes, c.nHashes, c.minJaccard, c.maxBucket,
+          cache, extraEdges = Some(contEdges), victims = Some(victimsFrame))
+        c.copy(clusters = clusters, decisions = decisions)
       case None =>
         buildIndex(df, idCol, textCol, shingleK, nHashes,
           rowsPerBand, minJaccard, maxBucket, cache,

@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * Kiveris et al., "Connected Components in MapReduce and Beyond" (SOCC'14)
   * — O(log n) rounds, each round two shuffles (a groupBy-min and a join),
   * fully relational (no collect_list, so a giant component never
-  * materializes a giant row). Lineage is cut with localCheckpoint every
-  * round (the loop would otherwise stack exponentially growing plans).
+  * materializes a giant row). Lineage is cut by materializing every round
+  * (the loop would otherwise stack exponentially growing plans). A graph
+  * that contracts locally to few edges finishes by driver union-find.
   *
   * Deterministic: cluster id = smallest mention_id of the component, so the
   * output is invariant under partitioning — a north_rule requirement.
@@ -28,34 +29,23 @@ object Clustering {
     * Some(dir) switches to RELIABLE per-round Parquet snapshots under
     * `dir` (HDFS/S3/local via the Hadoop FS API) and makes the loop
     * resumable mid-iteration — the cluster-deployment mode the north rule
-    * requires ("resumable from checkpoint"). */
+    * requires ("resumable from checkpoint"). In both modes the graph
+    * size, not the mode, picks the finish ([[components]]). */
   def connectedComponents(
       spark: SparkSession,
       edges: DataFrame,
       maxIter: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame =
-    checkpointDir match {
-      case Some(dir) =>
-        val run = connectedComponentsCheckpointed(spark, edges, dir, maxIter)
-        // a resumed namespace whose last round already exceeds this
-        // caller's smaller maxIter skips the loop entirely — the silent
-        // path the round-4 advice flagged; warn here exactly like the
-        // in-memory branch (direct CcRun callers read .converged instead)
-        if (!run.converged) warnNotConverged("reliable-checkpoint", maxIter)
-        run.clusters
-      case None =>
-        val e = localContract(normalizeEdges(edges)).localCheckpoint(true)
-        val nEdges = e.count()
-        if (nEdges <= driverCcMaxEdges(spark)) driverUnionFind(spark, e)
-        else {
-          val parts = rightSizedParts(spark, nEdges)
-          val (clusters, converged) = connectedComponentsLoop(e, maxIter, parts)
-          if (!converged) warnNotConverged("in-memory", maxIter)
-          clusters
-        }
+      checkpointDir: Option[String] = None): DataFrame = {
+    val run = checkpointDir match {
+      case Some(dir) => connectedComponentsCheckpointed(spark, edges, dir, maxIter)
+      case None => components(spark, normalizeEdges(edges), maxIter, new Rounds)
     }
+    // direct CcRun callers read .converged instead
+    if (!run.converged) warnNotConverged(maxIter)
+    run.clusters
+  }
 
-  /** Contracted-edge threshold below which the in-memory CC finishes on
+  /** Round-0 edge count at or below which CC, in either mode, finishes on
     * the driver with union-find instead of the iterative star loop. The
     * loop's cost at small scale is its FIXED per-round scheduler latency
     * (each round = several shuffles + a signature job; a converged toy
@@ -77,7 +67,7 @@ object Clustering {
     * threshold bounds driver memory, and corpus-scale edge sets
     * (> threshold after the narrow localContract pass) still take the
     * shuffle loop. Override with spark.graft.cc.driverMaxEdges (0
-    * disables the fast path). */
+    * disables the fast path for every non-empty graph). */
   val DefaultDriverCcMaxEdges: Long = 2000000L
 
   private def driverCcMaxEdges(spark: SparkSession): Long =
@@ -144,9 +134,9 @@ object Clustering {
     * a smaller caller budget — returns UNDER-MERGED clusters; silence here
     * was the same failure class TypesMappings.typeClosure already warns
     * about. Callers that need hard failure read CcRun.converged. */
-  private def warnNotConverged(mode: String, maxIter: Int): Unit =
+  private def warnNotConverged(maxIter: Int): Unit =
     System.err.println(
-      s"[graft.er.Clustering] WARNING: $mode connected-components loop exited " +
+      s"[graft.er.Clustering] WARNING: connected-components loop exited " +
         s"WITHOUT converging (maxIter=$maxIter) — the returned clusters may be " +
         "under-merged; raise maxIter (star-contraction rounds are " +
         "log-diameter, so 50 covers any realistic graph)")
@@ -245,7 +235,7 @@ object Clustering {
     * sum of hashes (computed as decimal(38,0) — a bare bigint sum would
     * overflow under ANSI; the low-64 truncation IS the intended wrap),
     * which is multiplicity-sensitive at every parity. */
-  private def edgeSig(e: DataFrame): (Long, Long, Long) = {
+  private def edgeSig(e: DataFrame): Sig = {
     val sigRow = e.agg(
       count(lit(1)).as("n"),
       coalesce(expr("bit_xor(xxhash64(a, b))"), lit(0L)).as("h"),
@@ -267,44 +257,85 @@ object Clustering {
       .agg(min("cluster").as("cluster"))
   }
 
-  private def connectedComponentsLoop(
-      edges0: DataFrame, maxIter: Int, parts: Int): (DataFrame, Boolean) = {
-    var e = edges0
-
-    var converged = false
-    var iter = 0
-    var prevSig: (Long, Long, Long) = (-1L, -1L, -1L)
-    while (!converged && iter < maxIter) {
-      val ss = ccRound(e, parts)
-        // LAZY checkpoint: the signature aggregation below is the action
-        // that materializes it — one job per round instead of two (the
-        // round count is diameter-bound, so per-round scheduler latency is
-        // the dominant cost on small graphs)
-        .localCheckpoint(false)
-
-      val sig = edgeSig(ss)
-      converged = sig == prevSig
-      prevSig = sig
-      e = ss
-      iter += 1
-    }
-
-    (starsToClusters(e, parts), converged)
-  }
-
-  /** Result of a reliable-checkpoint CC run: the cluster table plus the
-    * resume bookkeeping a caller (or a lineage manifest) records. */
+  /** Result of a CC run: the cluster table plus the round bookkeeping a
+    * caller (or a lineage manifest) records. `resumedFromRound` is the
+    * committed round the run started from (0 when fresh or in memory);
+    * `roundsComputed` counts star rounds, so it is 0 when the driver
+    * union-find finished or the resumed round had converged; `converged`
+    * is false only when the star loop stopped at `maxIter`. */
   final case class CcRun(clusters: DataFrame, resumedFromRound: Int, roundsComputed: Int, converged: Boolean)
 
-  /** Connected components with RELIABLE per-round snapshots: every
-    * star-contraction round commits its edge set as Parquet under
-    * `dir/round_NNNNN` plus a `_MANIFEST` (row count + edge-set signature
-    * + converged flag), published through [[graft.state.Commit]] only
-    * after the Parquet commit succeeds. A
-    * restarted run scans for the last complete round and resumes the loop
-    * there instead of re-deriving it — each round is a pure function of
-    * the previous edge set, so resume is exact. Round 0 is the normalized
-    * input edge set, so resume never re-reads the upstream either.
+  private type Sig = (Long, Long, Long)
+
+  /** Where the rounds of one CC run live — all that differs between the
+    * two modes. As defined here, the in-memory mode: `resume` gives the
+    * last complete round of an earlier run (round, edges, signature,
+    * converged); `save` materializes a round's plan and signs it; `seal`
+    * marks a saved round complete; `prune` drops the rounds below the one
+    * a run converged on; `release` readies the star clusters for return. */
+  private class Rounds(val resume: Option[(Int, DataFrame, Sig, Boolean)] = None) {
+    // LAZY checkpoint: the signature aggregation is the action that
+    // materializes it — one job per round instead of two (the round count
+    // is diameter-bound, so per-round scheduler latency is the dominant
+    // cost on small graphs)
+    def save(i: Int, plan: DataFrame): (DataFrame, Sig) = {
+      val e = plan.localCheckpoint(false)
+      (e, edgeSig(e))
+    }
+    def seal(i: Int, sig: Sig, converged: Boolean): Unit = ()
+    def prune(last: Int): Unit = ()
+    def release(clusters: DataFrame): DataFrame = clusters
+  }
+
+  /** The one CC rule of both modes, over normalized edges. Round 0 is
+    * materialized first (or resumed), and its edge count picks the finish:
+    *   1. a resumed round that is already converged is read as stars;
+    *   2. otherwise a round of at most `spark.graft.cc.driverMaxEdges`
+    *      edges finishes with [[driverUnionFind]] — exact on any round,
+    *      because every round preserves connectivity and keeps the
+    *      component minimum as the label;
+    *   3. otherwise the star loop runs until two consecutive rounds have
+    *      equal signatures, or until round `maxIter`. */
+  private def components(spark: SparkSession, norm: DataFrame, maxIter: Int,
+      store: Rounds): CcRun = {
+    var (iter, e, sig, converged) = store.resume.getOrElse {
+      val (e0, sig0) = store.save(0, localContract(norm))
+      store.seal(0, sig0, converged = false)
+      (0, e0, sig0, false)
+    }
+    val resumedFrom = iter
+    val clusters =
+      if (!converged && sig._1 <= driverCcMaxEdges(spark)) {
+        converged = true
+        driverUnionFind(spark, e)
+      } else {
+        // the final node-scale aggregation carries the loop's fixed width
+        // too — at a session width tuned for the scoring stage it would
+        // otherwise run as near-empty micro-tasks
+        val parts = rightSizedParts(spark, sig._1)
+        while (!converged && iter < maxIter) {
+          val (next, nextSig) = store.save(iter + 1, ccRound(e, parts))
+          converged = nextSig == sig
+          iter += 1
+          store.seal(iter, nextSig, converged)
+          e = next; sig = nextSig
+        }
+        store.release(starsToClusters(e, parts))
+      }
+    if (converged) store.prune(iter)
+    CcRun(clusters, resumedFrom, iter - resumedFrom, converged)
+  }
+
+  /** Connected components with RELIABLE per-round snapshots: every round
+    * commits its edge set as Parquet under `dir/round_NNNNN` plus a
+    * `_MANIFEST` (row count + edge-set signature + converged flag),
+    * published through [[graft.state.Commit]] only after the Parquet
+    * commit succeeds. A restarted run resumes at the last complete round
+    * instead of re-deriving it — each round is a pure function of the
+    * previous edge set, so resume is exact. Round 0 is the locally
+    * contracted input edge set, so resume never re-reads the upstream
+    * either. The finish follows [[components]]: a graph within the
+    * driver threshold commits round 0 alone and finishes by union-find.
     *
     * Trade-off vs localCheckpoint: one Parquet write + read per round
     * (the write doubles as the materialization action), in exchange for
@@ -348,33 +379,19 @@ object Clustering {
     def rounds(): Seq[(Int, Path)] = Commit.dirs(fs, root, "round_")
       .flatMap { case (n, p) => n.toIntOption.map(_ -> p) }.sortBy(_._1)
 
-    // _MANIFEST: "round n h sum converged" — plain text, published through
-    // Commit AFTER the Parquet commit, so its presence marks the round
-    // complete. The overwrite-mode Parquet write has just replaced the
-    // round dir, so the manifest name is always fresh.
-    def writeManifest(i: Int, sig: (Long, Long, Long), converged: Boolean): Unit =
-      Commit.publish(fs, manifestPath(i), s"$i ${sig._1} ${sig._2} ${sig._3} $converged")
     // A CORRUPT manifest (unparsable text, or one failing its checksum)
     // counts as an INCOMPLETE round: the scan passes over it and the round
     // is recomputed, which is exact because rounds are deterministic. Any
     // other read error propagates — mistaking a transient error for an
     // incomplete round would delete the converged snapshot as debris.
-    def readManifest(i: Int): Option[(Long, Long, Long, Boolean)] =
+    def readManifest(i: Int): Option[(Sig, Boolean)] =
       try Commit.read(fs, manifestPath(i)).flatMap(_.trim.split(' ') match {
         case Array(_, n, h, s, c) =>
           for (n <- n.toLongOption; h <- h.toLongOption; s <- s.toLongOption;
-               c <- c.toBooleanOption) yield (n, h, s, c)
+               c <- c.toBooleanOption) yield ((n, h, s), c)
         case _ => None
       })
       catch { case _: ChecksumException => None }
-    def commitRound(i: Int, e: DataFrame, prevSig: Option[(Long, Long, Long)]): (DataFrame, (Long, Long, Long), Boolean) = {
-      e.write.mode("overwrite").parquet(roundPath(i).toString)
-      val reread = spark.read.parquet(roundPath(i).toString)
-      val sig = edgeSig(reread)
-      val converged = prevSig.contains(sig)
-      writeManifest(i, sig, converged)
-      (reread, sig, converged)
-    }
 
     // Prune SIBLING namespaces: under one caller-owned dir, a different
     // input signature means a superseded upstream graph — its rounds can
@@ -391,9 +408,10 @@ object Clustering {
     // run is still the exact answer — skipping it (post-pruning, with the
     // lower rounds gone) would force a from-scratch recompute that may not
     // even converge within the smaller budget.
-    val resume = rounds().reverseIterator
-      .flatMap { case (r, _) => readManifest(r).map(r -> _) }.nextOption()
-    val last = resume.fold(-1)(_._1)
+    val resumed = rounds().reverseIterator.flatMap { case (r, p) =>
+      readManifest(r).map { case (sig, c) => (r, spark.read.parquet(p.toString), sig, c) }
+    }.nextOption()
+    val last = resumed.fold(-1)(_._1)
 
     // Crash/corruption debris ABOVE the resume point (rounds with missing
     // or corrupt manifests) is deleted now — BEFORE any new round is
@@ -401,46 +419,32 @@ object Clustering {
     // must not survive every prune.
     rounds().foreach { case (r, p) => if (r > last) fs.delete(p, true) }
 
-    var iter = 0
-    var prevSig: (Long, Long, Long) = (-1L, -1L, -1L)
-    var converged = false
-    var e: DataFrame = null
-    resume match {
-      case None =>
-        val (e0, sig0, _) = commitRound(0, localContract(norm), None)
-        e = e0; prevSig = sig0
-      case Some((r, (n, h, sm, c))) =>
-        e = spark.read.parquet(roundPath(r).toString)
-        prevSig = (n, h, sm); converged = c; iter = r
-    }
-    val resumedFrom = math.max(last, 0)
-
-    val nEdges = prevSig._1
-    var computed = 0
-    // the final node-scale aggregation carries its own fixed width too —
-    // at a session width tuned for the scoring stage it would otherwise
-    // run as near-empty micro-tasks
-    val parts = rightSizedParts(spark, nEdges)
-    val clusters = {
-      while (!converged && iter < maxIter) {
-        val (next, sig, conv) = commitRound(iter + 1, ccRound(e, parts), Some(prevSig))
-        e = next; prevSig = sig; converged = conv
-        iter += 1; computed += 1
+    components(spark, norm, maxIter, new Rounds(resumed) {
+      override def save(i: Int, plan: DataFrame): (DataFrame, Sig) = {
+        plan.write.mode("overwrite").parquet(roundPath(i).toString)
+        val reread = spark.read.parquet(roundPath(i).toString)
+        (reread, edgeSig(reread))
       }
+      // _MANIFEST: "round n h sum converged" — plain text, published AFTER
+      // the Parquet commit, so its presence marks the round complete. The
+      // overwrite-mode Parquet write has just replaced the round dir, so
+      // the manifest name is always fresh.
+      override def seal(i: Int, sig: Sig, converged: Boolean): Unit =
+        Commit.publish(fs, manifestPath(i), s"$i ${sig._1} ${sig._2} ${sig._3} $converged")
       // After convergence only the FINAL round is ever read again (a
-      // re-invocation resumes it instantly with zero rounds computed) —
-      // delete the superseded earlier rounds so the namespace holds one
-      // edge-set copy, not O(log n) of them.
-      if (converged) rounds().foreach { case (r, p) => if (r < iter) fs.delete(p, true) }
+      // re-invocation resumes it with zero rounds computed) — delete the
+      // superseded earlier rounds so the namespace holds one edge-set
+      // copy, not O(log n) of them.
+      override def prune(last: Int): Unit =
+        rounds().foreach { case (r, p) => if (r < last) fs.delete(p, true) }
       // EAGER localCheckpoint: the returned cluster table must be
       // self-contained — a later call on this dir prunes snapshot files
       // (sibling namespaces, superseded rounds) that a lazy plan would
       // still reference, turning an old handle into FileNotFoundException.
       // The table is node-scale (one row per id), so materializing it at
       // return is cheap at any corpus size.
-      starsToClusters(e, parts).localCheckpoint(true)
-    }
-    CcRun(clusters, resumedFrom, computed, converged)
+      override def release(clusters: DataFrame): DataFrame = clusters.localCheckpoint(true)
+    })
   }
 
   /** An incremental CC fold's result: the assignment together with its
@@ -507,12 +511,9 @@ object Clustering {
       spark: SparkSession,
       oldClusters: DataFrame,
       newEdges: DataFrame,
-      checkpointDir: Option[String] = None,
       broadcastMaxEndpoints: Long = 5000000L): IncrementalCc = {
     val oc = oldClusters.select(col("id").cast("long"), col("cluster").cast("long"))
-    val e = newEdges
-      .select(col("a").cast("long"), col("b").cast("long"))
-      .where(col("a") =!= col("b"))
+    val e = normalizeEdges(newEdges)
     // eagerly truncated (batch-scale by premise): the guard's count,
     // the broadcast probe, and incrementalViaBatchCc's universe all
     // consume this frame — without the checkpoint the explode+distinct
@@ -525,7 +526,7 @@ object Clustering {
     // the fold itself, and the price of never OOMing an executor on a
     // mis-sized batch
     if (endpoints.count() > broadcastMaxEndpoints) {
-      val full = incrementalViaBatchCc(spark, oc, e, endpoints, checkpointDir)
+      val full = incrementalViaBatchCc(spark, oc, e, endpoints)
       return IncrementalCc(full, full, changedIsFull = true)
     }
     // touched old rows: ONE narrow scan of the node-scale table probing
@@ -540,7 +541,7 @@ object Clustering {
     // CC over representatives only: edge volume = batch, node volume =
     // touched clusters + brand-new ids (self-loops from within-cluster
     // batch edges drop in normalizeEdges)
-    val cc = connectedComponents(spark, contracted, checkpointDir = checkpointDir)
+    val cc = connectedComponents(spark, contracted)
     // old ids relabel through their representative (touched-scale
     // broadcast against the second narrow assignment pass); untouched
     // components keep their label
@@ -586,18 +587,14 @@ object Clustering {
       spark: SparkSession,
       oc: DataFrame,
       e: DataFrame,
-      endpoints: DataFrame,
-      checkpointDir: Option[String]): DataFrame = {
+      endpoints: DataFrame): DataFrame = {
     val starEdges = oc.where(col("id") =!= col("cluster"))
       .select(col("id").as("a"), col("cluster").as("b"))
-    val cc = connectedComponents(
-      spark, starEdges.unionAll(e), checkpointDir = checkpointDir)
     // universe = old ids ∪ batch endpoints (singleton old ids must keep
     // their row; unionAll + distinct — both inputs are already distinct,
     // so this is one dedup shuffle over the id universe)
-    oc.select(col("id")).unionAll(endpoints.select(col("id"))).distinct()
-      .join(cc, Seq("id"), "left")
-      .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
+    assign(spark, oc.select(col("id")).unionAll(endpoints.select(col("id"))).distinct(),
+      starEdges.unionAll(e))
   }
 
   /** Cluster assignment for every mention id in `ids` (singletons become

@@ -44,9 +44,11 @@ object ErPipelineRunner {
     })
 
     val clusters = track(Pipeline.stage(spark, root, "clusters", upstream = Seq("match_edges")) {
-      // reliable per-round CC snapshots under the pipeline root: a run
-      // killed mid-loop resumes the contraction at its last complete
-      // round, not from the match_edges snapshot
+      // reliable per-round CC snapshots under the pipeline root: round 0
+      // (the locally contracted match edges) is committed first, and a
+      // graph within the driver threshold finishes from it by union-find;
+      // a larger one runs the star loop, and a run killed mid-loop resumes
+      // at its last complete round, not from the match_edges snapshot
       Clustering.assign(spark,
         mentions.select(col("mention_id").as("id")), edges,
         checkpointDir = Some(s"$root/_cc_rounds"))

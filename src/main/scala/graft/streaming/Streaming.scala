@@ -222,7 +222,7 @@ object Streaming {
   /** Manifest entry kinds for [[VersionedState]]'s `_PARTS` file. */
   private sealed trait Entry { def refs: Set[Long] }
   private final case class FullE(ver: Long) extends Entry { def refs = Set(ver) }
-  private final case class ChainE(base: Long, deltas: Seq[Long], compactEvery: Int)
+  private final case class ChainE(base: Long, deltas: Seq[Long])
       extends Entry { def refs = deltas.toSet + base }
   private final case class RangedE(r: Int, holders: Map[Long, Long])
       extends Entry { def refs = holders.values.toSet }
@@ -236,7 +236,7 @@ object Streaming {
     *   - [[DeltaWrite]]: append-only relations (the dup-ngram grams
     *     table) land just the batch's rows; a version resolves to
     *     base-full + ordered delta chain, compacted to a fresh full
-    *     every `compactEvery` folds so the chain stays bounded;
+    *     every `CompactEvery` folds so the chain stays bounded;
     *   - [[RangedWrite]]: keyed mutable relations (the cluster
     *     assignment, the dup-ngram stats) partitioned by an id hash
     *     range — a fold rewrites ONLY the ranges holding changed rows
@@ -246,11 +246,15 @@ object Streaming {
     *     compaction). */
   private[graft] sealed trait PartWrite { def name: String }
   private[graft] final case class FullWrite(name: String, df: DataFrame) extends PartWrite
-  private[graft] final case class DeltaWrite(
-      name: String, delta: DataFrame, compactEvery: Int = 8) extends PartWrite
+  private[graft] final case class DeltaWrite(name: String, delta: DataFrame) extends PartWrite
   private[graft] final case class RangedWrite(
       name: String, content: DataFrame, nRanges: Int, touchedRanges: Seq[Long],
-      full: Boolean, keyCol: String, maxReferencedVersions: Int = 16) extends PartWrite
+      full: Boolean, keyCol: String) extends PartWrite
+
+  /** Folds per delta chain before it is compacted to a fresh full copy. */
+  private val CompactEvery = 8
+  /** Holder versions a ranged part may reference before a full rewrite. */
+  private val MaxReferencedVersions = 16
 
   /** Versioned Parquet state-at-rest shared by the four streaming
     * maintenance sinks (cluster, source-cap, dup-ngram and IVF folds), all
@@ -297,7 +301,7 @@ object Streaming {
       * (full / delta-chain / ranged entries). */
     def readPart(v: Long, name: String): DataFrame = entry(v, name) match {
       case FullE(ver) => spark.read.parquet(partPath(ver, name))
-      case ChainE(base, deltas, _) =>
+      case ChainE(base, deltas) =>
         spark.read.parquet((base +: deltas).map(partPath(_, name)): _*)
       case RangedE(_, holders) =>
         spark.read.parquet(holders.toSeq.sortBy(_._1).map { case (k, hv) =>
@@ -341,8 +345,8 @@ object Streaming {
         val t = line.split(' ')
         t(0) match {
           case "full" => t(1) -> (FullE(t(2).toLong): Entry)
-          case "chain" =>
-            t(1) -> (ChainE(t(2).toLong, t.drop(4).map(_.toLong).toSeq, t(3).toInt): Entry)
+          // t(3) records `CompactEvery`; the live constant governs compaction
+          case "chain" => t(1) -> (ChainE(t(2).toLong, t.drop(4).map(_.toLong).toSeq): Entry)
           case "ranged" =>
             t(1) -> (RangedE(t(2).toInt, t.drop(3).map { kv =>
               val p = kv.split(':'); p(0).toLong -> p(1).toLong
@@ -354,8 +358,8 @@ object Streaming {
     private def writeManifest(v: Long, m: Map[String, Entry]): Unit = {
       val txt = m.toSeq.sortBy(_._1).map {
         case (n, FullE(ver)) => s"full $n $ver"
-        case (n, ChainE(base, deltas, ce)) =>
-          (Seq("chain", n, base.toString, ce.toString) ++ deltas.map(_.toString)).mkString(" ")
+        case (n, ChainE(base, deltas)) =>
+          (Seq("chain", n, base.toString, CompactEvery.toString) ++ deltas.map(_.toString)).mkString(" ")
         case (n, RangedE(r, holders)) =>
           (Seq("ranged", n, r.toString) ++
             holders.toSeq.sorted.map { case (k, hv) => s"$k:$hv" }).mkString(" ")
@@ -377,27 +381,27 @@ object Streaming {
         case FullWrite(name, df) =>
           df.write.mode("overwrite").parquet(partPath(name))
           manifest += name -> FullE(batchId)
-        case DeltaWrite(name, delta, compactEvery) =>
+        case DeltaWrite(name, delta) =>
           prevManifest.get(name) match {
-            case Some(ChainE(base, deltas, _)) if deltas.size + 1 < compactEvery =>
+            case Some(ChainE(base, deltas)) if deltas.size + 1 < CompactEvery =>
               delta.write.mode("overwrite").parquet(partPath(name))
-              manifest += name -> ChainE(base, deltas :+ batchId, compactEvery)
-            case Some(e @ ChainE(_, _, _)) =>
+              manifest += name -> ChainE(base, deltas :+ batchId)
+            case Some(e @ ChainE(_, _)) =>
               // chain at budget: compact — one full rewrite every
-              // compactEvery folds (amortized O(state/compactEvery))
+              // CompactEvery folds (amortized O(state/CompactEvery))
               val resolved = spark.read.parquet(
                 (e.base +: e.deltas).map(this.partPath(_, name)): _*)
               resolved.unionByName(delta).write.mode("overwrite").parquet(partPath(name))
               manifest += name -> FullE(batchId)
             case Some(FullE(base)) =>
               delta.write.mode("overwrite").parquet(partPath(name))
-              manifest += name -> ChainE(base, Seq(batchId), compactEvery)
+              manifest += name -> ChainE(base, Seq(batchId))
             case _ =>
               // first commit of this part: the delta IS the relation
               delta.write.mode("overwrite").parquet(partPath(name))
               manifest += name -> FullE(batchId)
           }
-        case RangedWrite(name, content, nRanges, touchedRanges, full, keyCol, maxRefs) =>
+        case RangedWrite(name, content, nRanges, touchedRanges, full, keyCol) =>
           def listLanded(): Set[Long] =
             Commit.dirs(fs, new Path(partPath(name)), "_r=").map(_._1.toLong).toSet
           val prevHolders = prevManifest.get(name) match {
@@ -408,7 +412,7 @@ object Streaming {
           if (full || prevHolders.isEmpty) {
             content.write.partitionBy("_r").mode("overwrite").parquet(partPath(name))
             manifest += name -> RangedE(nRanges, listLanded().map(_ -> batchId).toMap)
-          } else if (wouldHold.values.toSet.size > maxRefs) {
+          } else if (wouldHold.values.toSet.size > MaxReferencedVersions) {
             // too many live holder versions: compact — resolve the
             // UNTOUCHED ranges from their previous holders (the touched
             // content is already in hand) and land one full copy. The

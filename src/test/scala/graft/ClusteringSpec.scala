@@ -34,6 +34,24 @@ class ClusteringSpec extends AnyFunSuite {
     finally if (forceLoop) spark.conf.unset("spark.graft.cc.driverMaxEdges")
   }
 
+  /** Run `body` in the star-loop regime: the driver union-find finish is
+    * off for every non-empty graph. */
+  private def forcingLoop[T](body: => T): T = {
+    spark.conf.set("spark.graft.cc.driverMaxEdges", "0")
+    try body finally spark.conf.unset("spark.graft.cc.driverMaxEdges")
+  }
+
+  private def clusterMap(run: Clustering.CcRun): Map[Long, Long] =
+    run.clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Every path under `dir` whose file name satisfies `pred`. */
+  private def walk(dir: String)(pred: String => Boolean): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val st = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try st.iterator().asScala.filter(p => pred(p.getFileName.toString)).toList
+    finally st.close()
+  }
+
   test("CC matches union-find on a hand case (chain + triangle + singleton edge)") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L))
     assert(runCC(edges) == ufComponents(edges))
@@ -68,97 +86,121 @@ class ClusteringSpec extends AnyFunSuite {
   }
 
   test("checkpointed CC: kill mid-loop, resume at the last complete round, exact result") {
-    import spark.implicits._
-    val edges = (0L until 120L).map(i => (i, (i + 11) % 120)) ++ Seq((500L, 501L), (501L, 502L))
-    val dir = java.nio.file.Files.createTempDirectory("cc_ckpt").toString
-    val df = edges.toDF("a", "b")
+    forcingLoop {
+      import spark.implicits._
+      val edges = (0L until 120L).map(i => (i, (i + 11) % 120)) ++ Seq((500L, 501L), (501L, 502L))
+      val dir = java.nio.file.Files.createTempDirectory("cc_ckpt").toString
+      val df = edges.toDF("a", "b")
 
-    // simulated kill: cap the loop at one contraction round
-    val partial = Clustering.connectedComponentsCheckpointed(spark, df, dir, maxIter = 1)
-    assert(!partial.converged, "120-node cycle cannot converge in one round")
-    assert(partial.roundsComputed == 1 && partial.resumedFromRound == 0)
+      // simulated kill: cap the loop at one contraction round
+      val partial = Clustering.connectedComponentsCheckpointed(spark, df, dir, maxIter = 1)
+      assert(!partial.converged, "120-node cycle cannot converge in one round")
+      assert(partial.roundsComputed == 1 && partial.resumedFromRound == 0)
 
-    // restart: picks up at round 1 (round 0 + 1 are snapshotted), converges,
-    // and the clusters equal the union-find oracle / in-memory loop
-    val resumed = Clustering.connectedComponentsCheckpointed(spark, df, dir, maxIter = 50)
-    assert(resumed.resumedFromRound == 1, "second run must resume, not recompute round 1")
-    assert(resumed.converged)
-    val got = resumed.clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == ufComponents(edges))
+      // restart: picks up at round 1 (round 0 + 1 are snapshotted), converges,
+      // and the clusters equal the union-find oracle / in-memory loop
+      val resumed = Clustering.connectedComponentsCheckpointed(spark, df, dir, maxIter = 50)
+      assert(resumed.resumedFromRound == 1, "second run must resume, not recompute round 1")
+      assert(resumed.converged)
+      val got = resumed.clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == ufComponents(edges))
 
-    // a third invocation resumes the CONVERGED snapshot: zero rounds run
-    val again = Clustering.connectedComponentsCheckpointed(spark, df, dir, maxIter = 50)
-    assert(again.converged && again.roundsComputed == 0)
+      // a third invocation resumes the CONVERGED snapshot: zero rounds run
+      val again = Clustering.connectedComponentsCheckpointed(spark, df, dir, maxIter = 50)
+      assert(again.converged && again.roundsComputed == 0)
 
-    // a different edge set through the same dir must not resume stale
-    // rounds (input-signature namespacing)
-    val edges2 = edges :+ ((502L, 0L))
-    val r2 = Clustering.connectedComponentsCheckpointed(spark, edges2.toDF("a", "b"), dir, maxIter = 50)
-    assert(r2.resumedFromRound == 0)
-    val got2 = r2.clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got2 == ufComponents(edges2))
+      // a different edge set through the same dir must not resume stale
+      // rounds (input-signature namespacing)
+      val edges2 = edges :+ ((502L, 0L))
+      val r2 = Clustering.connectedComponentsCheckpointed(spark, edges2.toDF("a", "b"), dir, maxIter = 50)
+      assert(r2.resumedFromRound == 0)
+      val got2 = r2.clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got2 == ufComponents(edges2))
 
-    // storage discipline: the stale sibling namespace was pruned on entry
-    // and the converged run kept only its FINAL round — one round dir and
-    // one manifest total under the checkpoint dir
-    import scala.jdk.CollectionConverters._
-    def walk(pred: java.nio.file.Path => Boolean): Seq[java.nio.file.Path] = {
-      val st = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try st.iterator().asScala.filter(pred).toList finally st.close()
+      // storage discipline: the stale sibling namespace was pruned on entry
+      // and the converged run kept only its FINAL round — one round dir and
+      // one manifest total under the checkpoint dir
+      assert(walk(dir)(_.startsWith("round_")).size == 1)
+      val manifests = walk(dir)(_ == "_MANIFEST")
+      assert(manifests.size == 1)
+
+      // a truncated/corrupt manifest counts as an INCOMPLETE round: the next
+      // run recomputes instead of crashing on parse
+      java.nio.file.Files.write(manifests.head, "garbage".getBytes("UTF-8"))
+      val r3 = Clustering.connectedComponentsCheckpointed(spark, edges2.toDF("a", "b"), dir, maxIter = 50)
+      assert(r3.resumedFromRound == 0 && r3.converged)
+      val got3 = r3.clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got3 == ufComponents(edges2))
     }
-    assert(walk(_.getFileName.toString.startsWith("round_")).size == 1)
-    val manifests = walk(_.getFileName.toString == "_MANIFEST")
-    assert(manifests.size == 1)
-
-    // a truncated/corrupt manifest counts as an INCOMPLETE round: the next
-    // run recomputes instead of crashing on parse
-    java.nio.file.Files.write(manifests.head, "garbage".getBytes("UTF-8"))
-    val r3 = Clustering.connectedComponentsCheckpointed(spark, edges2.toDF("a", "b"), dir, maxIter = 50)
-    assert(r3.resumedFromRound == 0 && r3.converged)
-    val got3 = r3.clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got3 == ufComponents(edges2))
   }
 
   test("checkpointed CC: a transient manifest read error fails loudly and keeps the converged snapshot") {
-    import spark.implicits._
-    spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultyFs].getName)
-    val local = java.nio.file.Files.createTempDirectory("cc_ckpt_faulty").toString
-    val dir = "faulty://" + local
-    val df = ((0L until 40L).map(i => (i, (i + 7) % 40)) :+ ((100L, 101L))).toDF("a", "b")
-    assert(Clustering.connectedComponentsCheckpointed(spark, df, dir).converged)
-    def roundDirs(): Seq[java.io.File] = new java.io.File(local).listFiles().toSeq
-      .flatMap(_.listFiles().toSeq).filter(_.getName.startsWith("round_"))
-    val converged = roundDirs()
-    assert(converged.size == 1)
-    // a non-FileNotFound read error on the converged round's manifest must
-    // fail the call, not count the round as incomplete and prune it
-    FaultyFs.failOpen = Set("_MANIFEST")
-    try {
-      val e = intercept[java.io.IOException](
-        Clustering.connectedComponentsCheckpointed(spark, df, dir))
-      assert(!e.isInstanceOf[java.io.FileNotFoundException], e.toString)
-    } finally FaultyFs.failOpen = Set.empty
-    assert(roundDirs() == converged && converged.head.isDirectory,
-      "the converged snapshot was deleted after a transient read error")
-    val again = Clustering.connectedComponentsCheckpointed(spark, df, dir)
-    assert(again.converged && again.roundsComputed == 0)
+    forcingLoop {
+      import spark.implicits._
+      spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultyFs].getName)
+      val local = java.nio.file.Files.createTempDirectory("cc_ckpt_faulty").toString
+      val dir = "faulty://" + local
+      val df = ((0L until 40L).map(i => (i, (i + 7) % 40)) :+ ((100L, 101L))).toDF("a", "b")
+      assert(Clustering.connectedComponentsCheckpointed(spark, df, dir).converged)
+      def roundDirs(): Seq[java.io.File] = new java.io.File(local).listFiles().toSeq
+        .flatMap(_.listFiles().toSeq).filter(_.getName.startsWith("round_"))
+      val converged = roundDirs()
+      assert(converged.size == 1)
+      // a non-FileNotFound read error on the converged round's manifest must
+      // fail the call, not count the round as incomplete and prune it
+      FaultyFs.failOpen = Set("_MANIFEST")
+      try {
+        val e = intercept[java.io.IOException](
+          Clustering.connectedComponentsCheckpointed(spark, df, dir))
+        assert(!e.isInstanceOf[java.io.FileNotFoundException], e.toString)
+      } finally FaultyFs.failOpen = Set.empty
+      assert(roundDirs() == converged && converged.head.isDirectory,
+        "the converged snapshot was deleted after a transient read error")
+      val again = Clustering.connectedComponentsCheckpointed(spark, df, dir)
+      assert(again.converged && again.roundsComputed == 0)
+    }
   }
 
   test("resume namespace separates duplicate-heavy multisets that xor-cancel (round-4 advice)") {
+    forcingLoop {
+      import spark.implicits._
+      // both inputs: 4 edges, every edge with multiplicity 2 -> the xor
+      // component cancels to 0 and (count, xor) collide; the wrapping
+      // sum-hash component must still separate them, or graph B would
+      // wrongly resume graph A's converged rounds
+      val dir = java.nio.file.Files.createTempDirectory("cc_ns").toString
+      val a = Seq((1L, 2L), (1L, 2L), (3L, 4L), (3L, 4L)).toDF("a", "b")
+      val b = Seq((5L, 6L), (5L, 6L), (7L, 8L), (7L, 8L)).toDF("a", "b")
+      val ra = Clustering.connectedComponentsCheckpointed(spark, a, dir, maxIter = 50)
+      assert(ra.converged)
+      val rb = Clustering.connectedComponentsCheckpointed(spark, b, dir, maxIter = 50)
+      assert(rb.resumedFromRound == 0, "graph B resumed graph A's namespace")
+      val got = rb.clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 7L))
+    }
+  }
+
+  test("checkpointed CC within the driver threshold commits round 0 alone and finishes by union-find") {
     import spark.implicits._
-    // both inputs: 4 edges, every edge with multiplicity 2 -> the xor
-    // component cancels to 0 and (count, xor) collide; the wrapping
-    // sum-hash component must still separate them, or graph B would
-    // wrongly resume graph A's converged rounds
-    val dir = java.nio.file.Files.createTempDirectory("cc_ns").toString
-    val a = Seq((1L, 2L), (1L, 2L), (3L, 4L), (3L, 4L)).toDF("a", "b")
-    val b = Seq((5L, 6L), (5L, 6L), (7L, 8L), (7L, 8L)).toDF("a", "b")
-    val ra = Clustering.connectedComponentsCheckpointed(spark, a, dir, maxIter = 50)
-    assert(ra.converged)
-    val rb = Clustering.connectedComponentsCheckpointed(spark, b, dir, maxIter = 50)
-    assert(rb.resumedFromRound == 0, "graph B resumed graph A's namespace")
-    val got = rb.clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 7L))
+    val edges = (0L until 120L).map(i => (i, (i + 11) % 120)) ++ Seq((500L, 501L), (501L, 502L))
+    val df = edges.toDF("a", "b")
+    val dir = java.nio.file.Files.createTempDirectory("cc_uf").toString
+    val run = Clustering.connectedComponentsCheckpointed(spark, df, dir)
+    assert(run.converged && run.roundsComputed == 0 && run.resumedFromRound == 0)
+    // the one committed round is round 0, complete with its manifest
+    val rounds = walk(dir)(_.startsWith("round_"))
+    assert(rounds.map(_.getFileName.toString) == Seq("round_00000"))
+    assert(walk(dir)(_ == "_MANIFEST").map(_.getParent) == rounds)
+    val want = ufComponents(edges)
+    assert(clusterMap(run) == want)
+    val loopDir = java.nio.file.Files.createTempDirectory("cc_uf_loop").toString
+    val loop = forcingLoop(Clustering.connectedComponentsCheckpointed(spark, df, loopDir))
+    assert(loop.converged && loop.roundsComputed > 1)
+    assert(clusterMap(loop) == want)
+    // a second call resumes round 0 and finishes by union-find again
+    val again = Clustering.connectedComponentsCheckpointed(spark, df, dir)
+    assert(again.resumedFromRound == 0 && again.roundsComputed == 0 && again.converged)
+    assert(clusterMap(again) == want)
   }
 
   test("spark.graft.cc.checkpointDir conf flag routes the catalog CC through reliable checkpoints") {

@@ -137,29 +137,34 @@ class CommitCrashSpec extends AnyFunSuite {
   }
 
   test("a checkpointed CC run survives a crash at any mutation") {
-    import spark.implicits._
-    val edges = ((0L until 8L).map(i => (i, (i + 3) % 8)) :+ ((100L, 101L))).toDF("a", "b")
-    /** The highest round with a manifest: (round, manifest, edge rows). */
-    def read(dir: String): Option[(String, String, Seq[String])] =
-      Option(local(dir).listFiles()).toSeq.flatten.filter(_.getName.startsWith("cc_"))
-        .flatMap(ns => ns.listFiles().filter(r =>
-          r.getName.startsWith("round_") && new File(r, "_MANIFEST").exists()))
-        .sortBy(_.getName).lastOption.map { r =>
-          (r.getName, Files.readString(new File(r, "_MANIFEST").toPath),
-            rows(spark.read.parquet(s"$dir/${r.getParentFile.getName}/${r.getName}")))
-        }
-    // the committed rounds of a clean run, one more round per call
-    val ref = Files.createTempDirectory("cc_ref").toString
-    val chain = Iterator.from(0).map { i =>
-      val run = Clustering.connectedComponentsCheckpointed(spark, edges, ref, maxIter = i)
-      (run.converged, read(ref))
-    }.takeWhile(!_._1).map(_._2).toSet
-    assert(chain.size > 2, s"the graph converged in ${chain.size} rounds")
-    val t = template(_ => ())
-    val points = everyCrash(t,
-      dir => assert(Clustering.connectedComponentsCheckpointed(spark, edges, dir).converged),
-      read, chain.contains)
-    info(s"$points crash points over ${chain.size + 1} rounds")
-    assert(points > 0)
+    // the star loop commits one round per step; within the driver
+    // threshold a run would commit round 0 alone and finish by union-find
+    spark.conf.set("spark.graft.cc.driverMaxEdges", "0")
+    try {
+      import spark.implicits._
+      val edges = ((0L until 8L).map(i => (i, (i + 3) % 8)) :+ ((100L, 101L))).toDF("a", "b")
+      /** The highest round with a manifest: (round, manifest, edge rows). */
+      def read(dir: String): Option[(String, String, Seq[String])] =
+        Option(local(dir).listFiles()).toSeq.flatten.filter(_.getName.startsWith("cc_"))
+          .flatMap(ns => ns.listFiles().filter(r =>
+            r.getName.startsWith("round_") && new File(r, "_MANIFEST").exists()))
+          .sortBy(_.getName).lastOption.map { r =>
+            (r.getName, Files.readString(new File(r, "_MANIFEST").toPath),
+              rows(spark.read.parquet(s"$dir/${r.getParentFile.getName}/${r.getName}")))
+          }
+      // the committed rounds of a clean run, one more round per call
+      val ref = Files.createTempDirectory("cc_ref").toString
+      val chain = Iterator.from(0).map { i =>
+        val run = Clustering.connectedComponentsCheckpointed(spark, edges, ref, maxIter = i)
+        (run.converged, read(ref))
+      }.takeWhile(!_._1).map(_._2).toSet
+      assert(chain.size > 2, s"the graph converged in ${chain.size} rounds")
+      val t = template(_ => ())
+      val points = everyCrash(t,
+        dir => assert(Clustering.connectedComponentsCheckpointed(spark, edges, dir).converged),
+        read, chain.contains)
+      info(s"$points crash points over ${chain.size + 1} rounds")
+      assert(points > 0)
+    } finally spark.conf.unset("spark.graft.cc.driverMaxEdges")
   }
 }
