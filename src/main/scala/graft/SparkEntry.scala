@@ -134,9 +134,11 @@ object SparkEntry {
     // against the reference separately). The ctx hash array travels as a
     // comma-joined string: the driver's check harness pandas-sorts every
     // dump, and an array<bigint> cell is unhashable there (round-3 verdict
-    // item 1); the oracle SQL splits it back into a BIGINT list.
+    // item 1); the oracle SQL splits it back into a BIGINT list. The
+    // bkeys list column is dropped for the same reason.
     "aux_keyed" -> ((s, d) =>
       graft.er.Blocking.keyedWithAttrs(ErQueries.mentions(s, d), graft.er.Blocking.Config())
+        .drop("bkeys")
         .withColumn("ctx", org.apache.spark.sql.functions.concat_ws(",",
           org.apache.spark.sql.functions.col("ctx")))),
     // decoded media features / sampled frames pre-aggregation

@@ -1,6 +1,6 @@
 package graft.er
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.model.Mention
@@ -18,8 +18,8 @@ import graft.model.Mention
   *      dropping hot keys, and the dropped cross-bucket pairs are excluded
   *      from the labeled-pair universe (pairs-completeness tradeoff, logged
   *      in the stage metrics, never silent);
-  *   3. the pair self-join runs on the sub-bucketed key, so AQE's skew-join
-  *      split sees bounded partitions.
+  *   3. the pair kernel (Scoring.scoreFused) walks one sub-bucketed block
+  *      at a time, so a task holds ~maxBlock rows however hot a key is.
   */
 object Blocking {
 
@@ -83,79 +83,49 @@ object Blocking {
     mentions.flatMap(m => keysFor(m, cfg).map(k => (k, m.mention_id))).toDF("key", "id")
   }
 
-  /** Candidate pairs (a < b), deduplicated across keys. Oversized blocks are
-    * sub-bucketed deterministically before the self-join. */
-  def candidatePairs(mentions: Dataset[Mention], cfg: Config = Config()): DataFrame = {
-    val k = keyed(mentions, cfg)
-    // bucket = hash(id) mod ceil(size / maxBlock); key#bucket for hot blocks.
-    // Only the OVERSIZED keys (block_size > maxBlock) are joined back — the
-    // skew tail, small in practice (worst case n_rows/maxBlock entries, so
-    // still linear in an adversarial all-hot corpus: the broadcast() hint is
-    // a pragmatic bet on real key distributions, and AQE would be the
-    // fallback if a corpus ever breaks it); the full
-    // one-row-per-distinct-key table would grow linearly with the corpus and
-    // must never be broadcast.
-    val hot = k.groupBy("key").agg(count("*").as("block_size"))
-      .where(col("block_size") > cfg.maxBlock)
-    val withBucket = k
-      .join(broadcast(hot), Seq("key"), "left")
-      .withColumn("nb",
-        coalesce(ceil(col("block_size") / lit(cfg.maxBlock)).cast("int"), lit(1)))
-      .withColumn(
-        "bkey",
-        when(col("nb") <= 1, col("key"))
-          .otherwise(concat(col("key"), lit("#"),
-            // salted by the block key: an unsalted hash(id) splits the same
-            // pair identically in EVERY oversized block with equal nb,
-            // losing it from the candidate universe even when another
-            // shared key could recover it (round-5 review; same discipline
-            // as Dedup.capBuckets)
-            pmod(xxhash64(col("id"), col("key")), col("nb")))))
-      .select(col("bkey"), col("id"))
-    val a = withBucket.select(col("bkey"), col("id").as("a"))
-    val b = withBucket.select(col("bkey"), col("id").as("b"))
-    a.join(b, Seq("bkey"))
-      .where(col("a") < col("b"))
-      .select(col("a"), col("b"))
-      .distinct()
-  }
-
-  /** (bkey, id, norm_surface, context, gold_entity) — the blocking relation
-    * carrying scoring attributes, oversized blocks sub-bucketed. This is
-    * the input of the fused scoring path (Scoring.scoreFused): one shuffle
-    * co-partitions mentions by block key; everything downstream is
-    * map-side. Only the OVERSIZED-key rows (block_size > maxBlock) are
-    * broadcast back — the skew tail, small in practice (worst case
-    * n_rows/maxBlock entries) — while every other key defaults to nb=1
-    * map-side via the left join's null. Broadcasting the FULL
-    * one-row-per-distinct-key table (as v1 did) grows linearly with
-    * mention count and OOMs at web scale. */
+  /** (bkey, id, ns, ctx, gold, bkeys) — the blocking relation carrying
+    * scoring attributes, oversized blocks sub-bucketed, one row per
+    * (mention, block). `bkeys` is the mention's full block list, sorted in
+    * UTF-8 byte order (== Mentions.CodePointOrdering == UTF8String
+    * order): Scoring.scoreFused scores a pair only in the least block the
+    * two lists share, so each candidate pair is scored once.
+    *
+    * The list is derived map-side per mention, before the explode, so no
+    * shuffle of the keyed relation builds it. Only the OVERSIZED keys
+    * (block_size > maxBlock) are aggregated into a one-row key → nb map
+    * and broadcast — the skew tail, small in practice (worst case
+    * n_rows/maxBlock entries); every other key keeps nb=1. Broadcasting
+    * the FULL one-row-per-distinct-key table (as v1 did) grows linearly
+    * with mention count and OOMs at web scale. */
   def keyedWithAttrs(mentions: Dataset[Mention], cfg: Config): DataFrame = {
     import mentions.sparkSession.implicits._
-    // context tokens travel as SORTED 64-bit hashes: the pair-scale join is
+    // context tokens travel as SORTED 64-bit hashes: the pair kernel is
     // memory-bandwidth bound, and hashes cut row bytes ~3x vs string
     // arrays (Jaccard over them via SortedLongJaccardExpr is exact modulo
     // 64-bit collisions)
-    val k = mentions.flatMap { m =>
+    val m = mentions.map { m =>
       val ctxHashes = m.context.map(graft.dedup.Dedup.hashString).toArray.sorted
-      keysFor(m, cfg).map(key => (key, m.mention_id, m.norm_surface, ctxHashes, m.gold_entity))
-    }.toDF("key", "id", "ns", "ctx", "gold")
-    val hot = k.groupBy("key").agg(count("*").as("block_size"))
+      (m.mention_id, m.norm_surface, ctxHashes, m.gold_entity, keysFor(m, cfg).toArray)
+    }.toDF("id", "ns", "ctx", "gold", "keys")
+    val hot = m.select(explode(col("keys")).as("key"))
+      .groupBy("key").agg(count("*").as("block_size"))
       .where(col("block_size") > cfg.maxBlock)
-    k.join(broadcast(hot), Seq("key"), "left")
-      .withColumn("nb",
-        coalesce(ceil(col("block_size") / lit(cfg.maxBlock)).cast("int"), lit(1)))
-      .withColumn(
-        "bkey",
-        when(col("nb") <= 1, col("key"))
-          .otherwise(concat(col("key"), lit("#"),
-            // salted by the block key: an unsalted hash(id) splits the same
-            // pair identically in EVERY oversized block with equal nb,
-            // losing it from the candidate universe even when another
-            // shared key could recover it (round-5 review; same discipline
-            // as Dedup.capBuckets)
-            pmod(xxhash64(col("id"), col("key")), col("nb")))))
-      .select(col("bkey"), col("id"), col("ns"), col("ctx"), col("gold"))
+      .agg(map_from_entries(collect_list(struct(col("key"),
+        ceil(col("block_size") / lit(cfg.maxBlock)).cast("int")))).as("nb"))
+    // bucket = hash(id) mod ceil(size / maxBlock), key#bucket for hot
+    // blocks — salted by the block key: an unsalted hash(id) splits the
+    // same pair identically in EVERY oversized block with equal nb, losing
+    // it from the candidate universe even when another shared key could
+    // recover it (round-5 review; same discipline as Dedup.capBuckets)
+    def bkey(key: Column): Column = {
+      val nb = col("nb")(key)
+      when(nb.isNull, key).otherwise(concat(key, lit("#"), pmod(xxhash64(col("id"), key), nb)))
+    }
+    m.crossJoin(broadcast(hot))
+      .select(col("id"), col("ns"), col("ctx"), col("gold"),
+        sort_array(transform(col("keys"), bkey(_))).as("bkeys"))
+      .select(explode(col("bkeys")).as("bkey"), col("id"), col("ns"), col("ctx"), col("gold"),
+        col("bkeys"))
   }
 
   /** Block-size profile — the metrics surface for the skew invariant

@@ -232,17 +232,17 @@ object Clustering {
     * two duplicate-heavy MULTISETS with equal counts could collide (the
     * resume-namespace key is computed over the non-deduplicated input —
     * round-4 advice); the third component is the low 64 bits of the exact
-    * sum of hashes (computed as decimal(38,0) — a bare bigint sum would
-    * overflow under ANSI; the low-64 truncation IS the intended wrap),
-    * which is multiplicity-sensitive at every parity. */
+    * sum of hashes, which is multiplicity-sensitive at every parity. A
+    * bare bigint sum would overflow under ANSI, so it is summed as two
+    * 32-bit halves (each sum fits a long below 2^31 edges) and recombined
+    * with the intended 64-bit wrap: lo + (hi << 32). */
   private def edgeSig(e: DataFrame): Sig = {
-    val sigRow = e.agg(
+    val sigRow = e.select(xxhash64(col("a"), col("b")).as("h")).agg(
       count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(a, b))"), lit(0L)).as("h"),
-      expr("sum(cast(xxhash64(a, b) as decimal(38,0)))").as("s")).head()
-    val sDec = sigRow.getDecimal(2)
-    val s = if (sDec == null) 0L else sDec.toBigInteger.longValue()
-    (sigRow.getLong(0), sigRow.getLong(1), s)
+      coalesce(bit_xor(col("h")), lit(0L)).as("x"),
+      coalesce(sum(col("h").bitwiseAND(lit(0xFFFFFFFFL))), lit(0L)).as("lo"),
+      coalesce(sum(shiftrightunsigned(col("h"), 32)), lit(0L)).as("hi")).head()
+    (sigRow.getLong(0), sigRow.getLong(1), sigRow.getLong(2) + (sigRow.getLong(3) << 32))
   }
 
   /** In the converged star forest every edge is (member, center) with

@@ -19,7 +19,7 @@ import graft.model.{Mention, PairwiseEval}
   */
 object PairEval {
 
-  /** scored: output of Scoring.scorePairs (has a, b, gold_a, gold_b);
+  /** scored: output of Scoring.scoreFused (has a, b, gold_a, gold_b);
     * clusters: DataFrame(id, cluster). */
   def pairwise(scored: DataFrame, clusters: DataFrame): PairwiseEval = {
     val ca = clusters.withColumnRenamed("id", "a").withColumnRenamed("cluster", "cl_a")
@@ -52,19 +52,15 @@ object PairEval {
       pairStorage: org.apache.spark.storage.StorageLevel =
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): (DataFrame, DataFrame, PairwiseEval) = {
     import spark.implicits._
-    // fused scale path: one co-partitioning shuffle, scoring map-side;
-    // the labeled-pair universe is deduplicated (duplicate rows are
-    // bit-identical across block keys, so the drop is deterministic).
-    // Only the eval-relevant columns go through the dedupe shuffle.
-    // The pair universe is read twice (edges + eval join); its persistence
-    // is CONFIGURABLE because at web scale (10^12 pairs) a memory cache is
+    // fused scale path: one co-partitioning shuffle, scoring map-side,
+    // each labeled pair emitted once. The pair universe is read twice
+    // (edges + eval join); its persistence is CONFIGURABLE because at web scale (10^12 pairs) a memory cache is
     // a spill storm — callers pick DISK_ONLY (sequential spill, no GC
     // churn) or NONE (recompute the fused stage, often cheaper than
     // spilling) for the biggest runs.
     val keyed = Blocking.keyedWithAttrs(mentions, blockCfg)
     val scored0 = Scoring.scoreFused(keyed, scoreCfg)
       .select("a", "b", "gold_a", "gold_b", "is_match")
-      .dropDuplicates("a", "b")
     val scored =
       if (pairStorage == org.apache.spark.storage.StorageLevel.NONE) scored0
       else scored0.persist(pairStorage)

@@ -1,18 +1,26 @@
 package graft.er
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import scala.collection.mutable.ArrayBuffer
 
-import graft.model.Mention
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.{FastLevenshteinExpr, JaroWinklerExpr, SortedLongJaccardExpr}
 
 /** Pairwise scoring (SURVEY.md §2.4 J8): Jaro-Winkler + Levenshtein on the
-  * normalized mention strings, token-Jaccard on the paragraph context sets.
+  * normalized mention strings, token-Jaccard on the hashed paragraph
+  * context sets.
   *
-  * Plan shape: candidate pairs (ids only, already deduplicated) are joined
-  * twice against the mention table to pull attributes; Jaccard and the
-  * match rule are built-in column expressions (codegen'd); Jaro-Winkler is
-  * the one scalar UDF (a pure, allocation-light function — candidate for a
-  * codegen Expression later). Levenshtein uses the Spark built-in.
+  * Plan shape: the Blocking.keyedWithAttrs rows are co-partitioned by
+  * block key (the one pair-scale shuffle) and sorted by (bkey, id); a
+  * block-local kernel then walks each block's i < j pairs map-side. It
+  * calls the same static kernels the SQL expressions call
+  * (JaroWinklerExpr.similarity, SortedLongJaccardExpr.jaccard,
+  * FastLevenshteinExpr.distance), so its rows are bit-identical to the
+  * expression-built columns.
   */
 object Scoring {
 
@@ -69,84 +77,121 @@ object Scoring {
     jaro + prefix * 0.1 * (1.0 - jaro)
   }
 
+  /** One Blocking.keyedWithAttrs row, as the pair kernel reads it. */
+  final case class KeyedRow(
+      bkey: String, id: Long, ns: String, ctx: Array[Long], gold: String, bkeys: Array[String])
+
+  final case class ScoredPair(
+      a: Long, b: Long, gold_a: String, gold_b: String,
+      jw: Double, lev: Int, jaccard: Double, score: Double, is_match: Boolean)
+
   /** Fused blocking+scoring plan — the scale path. Input is
-    * Blocking.keyedWithAttrs output; the self-join on the (sub-bucketed)
-    * block key is the ONLY shuffle of pair-scale data, and the scored pairs
-    * are produced map-side after it (no pair-id dedupe shuffle, no
-    * attribute re-join). A pair reachable through k block keys is scored k
-    * times (~1.3x CPU on the synthetic corpus) — at web scale duplicate
-    * CPU is far cheaper than an extra 10^12-row shuffle. Consumers that
-    * need the deduplicated pair universe (the eval gate) apply
-    * dropDuplicates("a","b") — all duplicate rows are bit-identical, so
-    * the choice is deterministic. */
+    * Blocking.keyedWithAttrs output; output columns (a, b, gold_a, gold_b,
+    * jw, lev, jaccard, score, is_match), one row per candidate pair
+    * (a < b, sharing at least one block): a pair is scored only in its
+    * LEAST COMMON block, the smallest bkey in both mentions' sorted block
+    * lists. So no pair is scored twice and consumers need no pair-id
+    * dedupe. The co-partitioning is the ONLY shuffle of pair-scale input;
+    * a task holds one block (<= ~maxBlock rows, by sub-bucketing) and
+    * streams its pairs. */
   def scoreFused(keyed: DataFrame, cfg: Config = Config()): DataFrame = {
-    // Explicit co-partitioning with a FIXED width: the join's cost is its
+    import keyed.sparkSession.implicits._
+    // Explicit co-partitioning with a FIXED width: the kernel's cost is its
     // OUTPUT (pairs), which AQE cannot see — left to adaptive coalescing,
     // the ~MB-sized keyed input collapses into a couple of partitions and
     // the quadratic pair generation lands in one straggler task. A
     // user-specified repartition is exempt from AQE coalescing.
     val parts = keyed.sparkSession.sessionState.conf.numShufflePartitions
-    val l = keyed.select(col("bkey"), col("id").as("a"), col("ns").as("ns_a"),
-      col("ctx").as("ctx_a"), col("gold").as("gold_a"))
+    keyed.select("bkey", "id", "ns", "ctx", "gold", "bkeys")
       .repartition(parts, col("bkey"))
-    val r = keyed.select(col("bkey"), col("id").as("b"), col("ns").as("ns_b"),
-      col("ctx").as("ctx_b"), col("gold").as("gold_b"))
-      .repartition(parts, col("bkey"))
-    scoreColumns(
-      l.join(r, Seq("bkey")).where(col("a") < col("b")), cfg)
-      .select("a", "b", "gold_a", "gold_b", "jw", "lev", "jaccard", "score", "is_match")
+      .sortWithinPartitions("bkey", "id")
+      .as[KeyedRow]
+      .mapPartitions(rows => new PairKernel(rows, cfg))
+      .toDF()
   }
 
-  private def scoreColumns(df: DataFrame, cfg: Config): DataFrame =
-    df.withColumn("jw", graft.functions.JaroWinklerExpr.jaro_winkler(col("ns_a"), col("ns_b")))
-      // native merge-based Jaccard over the SORTED context arrays —
-      // array_intersect/array_union allocate per row and turn the 32-thread
-      // hot loop GC-bound (see ARCHITECTURE.md scale notes). Long-hash
-      // signatures (fused path) and string arrays (legacy path) both work.
-      .withColumn(
-        "jaccard", {
-          import org.apache.spark.sql.types.{ArrayType, LongType}
-          df.schema("ctx_a").dataType match {
-            case ArrayType(LongType, _) =>
-              graft.functions.SortedLongJaccardExpr.sorted_long_jaccard(col("ctx_a"), col("ctx_b"))
-            case _ =>
-              graft.functions.SortedJaccardExpr.sorted_jaccard(col("ctx_a"), col("ctx_b"))
-          }
-        })
-      .withColumn("score", lit(cfg.wJw) * col("jw") + lit(cfg.wJaccard) * col("jaccard"))
-      .withColumn(
-        "is_match",
-        (col("jw") >= cfg.jwThreshold && col("score") >= cfg.scoreThreshold) ||
-          col("jaccard") >= cfg.jaccardOnlyThreshold)
-      // levenshtein is informational (not part of the match rule) —
-      // computed for match candidates only; -1 elsewhere (evaluated AFTER
-      // is_match so non-matches skip it). FastLevenshteinExpr, not the
-      // built-in: matched pairs are overwhelmingly identical or
-      // near-identical surfaces, and the built-in's full two-array DP on
-      // them dominated the scaling bench's scored aggregate (equality +
-      // prefix/suffix trim return the identical distances)
-      .withColumn(
-        "lev",
-        when(col("is_match"),
-          graft.functions.FastLevenshteinExpr.fast_levenshtein(col("ns_a"), col("ns_b")))
-          .otherwise(lit(-1)))
+  /** A block member with its scoring attributes decoded once, not per pair;
+    * `pos` is the index of the current block in its sorted block list. */
+  private final class Member(r: KeyedRow) {
+    val id: Long = r.id
+    val gold: String = r.gold
+    val ns: UTF8String = UTF8String.fromString(r.ns)
+    val ctx: ArrayData = UnsafeArrayData.fromPrimitiveArray(r.ctx)
+    val bkeys: Array[String] = r.bkeys
+    val pos: Int = bkeys.indexOf(r.bkey)
+  }
 
-  /** Score candidate pairs. `pairs` has columns (a, b) of mention ids. */
-  def scorePairs(mentions: Dataset[Mention], pairs: DataFrame, cfg: Config = Config()): DataFrame = {
-    val attrs = mentions
-      .toDF()
-      .select(col("mention_id"), col("norm_surface"), col("context"), col("gold_entity"))
-    val left = attrs
-      .withColumnRenamed("mention_id", "a")
-      .withColumnRenamed("norm_surface", "ns_a")
-      .withColumnRenamed("context", "ctx_a")
-      .withColumnRenamed("gold_entity", "gold_a")
-    val right = attrs
-      .withColumnRenamed("mention_id", "b")
-      .withColumnRenamed("norm_surface", "ns_b")
-      .withColumnRenamed("context", "ctx_b")
-      .withColumnRenamed("gold_entity", "gold_b")
-    scoreColumns(pairs.join(left, Seq("a")).join(right, Seq("b")), cfg)
-      .select("a", "b", "gold_a", "gold_b", "jw", "lev", "jaccard", "score", "is_match")
+  /** True iff x and y share no block ordered before the current one, i.e.
+    * the current block is their least common block. A merge walk over the
+    * two list prefixes, in the order the lists were sorted in (UTF-8 byte
+    * order: sort_array's UTF8String order, which is CodePointOrdering). */
+  private def leastCommon(x: Member, y: Member): Boolean = {
+    var i = 0
+    var j = 0
+    while (i < x.pos && j < y.pos) {
+      val c = Mentions.CodePointOrdering.compare(x.bkeys(i), y.bkeys(j))
+      if (c == 0) return false
+      if (c < 0) i += 1 else j += 1
+    }
+    true
+  }
+
+  private def score(x: Member, y: Member, cfg: Config): ScoredPair = {
+    val jw = JaroWinklerExpr.similarity(x.ns, y.ns)
+    val jaccard = SortedLongJaccardExpr.jaccard(x.ctx, y.ctx)
+    val score = cfg.wJw * jw + cfg.wJaccard * jaccard
+    val isMatch = (jw >= cfg.jwThreshold && score >= cfg.scoreThreshold) ||
+      jaccard >= cfg.jaccardOnlyThreshold
+    // levenshtein is informational (not part of the match rule) — computed
+    // for matches only, -1 elsewhere. FastLevenshteinExpr, not the
+    // built-in: matched pairs are overwhelmingly identical or
+    // near-identical surfaces, and the built-in's full two-array DP on them
+    // dominated the scaling bench's scored aggregate
+    val lev = if (isMatch) FastLevenshteinExpr.distance(x.ns, y.ns) else -1
+    ScoredPair(x.id, y.id, x.gold, y.gold, jw, lev, jaccard, score, isMatch)
+  }
+
+  /** Streams the scored pairs of a (bkey, id)-sorted partition, holding
+    * one block at a time. */
+  private final class PairKernel(rows: Iterator[KeyedRow], cfg: Config)
+      extends Iterator[ScoredPair] {
+    private val in = rows.buffered
+    private val block = ArrayBuffer.empty[Member]
+    private var i = 0
+    private var j = 1
+    private var pending: ScoredPair = _
+
+    def hasNext: Boolean = {
+      if (pending == null) pending = advance()
+      pending != null
+    }
+
+    def next(): ScoredPair = {
+      if (!hasNext) throw new NoSuchElementException("no more scored pairs")
+      val p = pending
+      pending = null
+      p
+    }
+
+    private def advance(): ScoredPair = {
+      while (true) {
+        if (j < block.length) {
+          val x = block(i)
+          val y = block(j)
+          j += 1
+          if (x.id < y.id && leastCommon(x, y)) return score(x, y, cfg)
+        } else if (i + 2 < block.length) {
+          i += 1
+          j = i + 1
+        } else if (in.hasNext) {
+          block.clear()
+          val key = in.head.bkey
+          while (in.hasNext && in.head.bkey == key) block += new Member(in.next())
+          i = 0
+          j = 1
+        } else return null
+      }
+      null
+    }
   }
 }

@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *      SAME implementation Spark's built-in levenshtein() calls, so the
   *      result is bit-identical to the built-in for every input (the
   *      er_scored_pairs oracle hashes these values).
-  * Replaces the built-in in Scoring.scoreColumns: the built-in's
+  * Replaces the built-in in Scoring's pair kernel: the built-in's
   * per-call two-array allocation and full m×n DP dominated the scaling
   * bench's scored aggregate (measured 50.9 s → the full agg vs 6.6 s
   * with jw alone at 2 cores, sf0.1×2 corpus). */

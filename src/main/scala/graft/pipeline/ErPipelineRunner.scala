@@ -37,10 +37,7 @@ object ErPipelineRunner {
     val edges = track(Pipeline.stage(spark, root, "match_edges", upstream = Seq("mentions")) {
       val ms = mentions.as[graft.model.Mention]
       val keyed = Blocking.keyedWithAttrs(ms, Blocking.Config())
-      Scoring.scoreFused(keyed)
-        .where(col("is_match"))
-        .select(col("a"), col("b"))
-        .distinct()
+      Scoring.scoreFused(keyed).where(col("is_match")).select(col("a"), col("b"))
     })
 
     val clusters = track(Pipeline.stage(spark, root, "clusters", upstream = Seq("match_edges")) {

@@ -54,13 +54,11 @@ object ErQueries {
       }
     }
 
-  /** Deduplicated scored candidate-pair universe — ONE fused
-    * blocking+scoring shuffle per session (J1/J8/J9). Duplicate rows
-    * across block keys are bit-identical, so the drop is deterministic. */
+  /** Scored candidate-pair universe, one row per pair — ONE fused
+    * blocking+scoring shuffle per session (J1/J8/J9). */
   def erScoredPairs(spark: SparkSession, dir: String): DataFrame =
     SessionMemo.frame(spark, s"er.scoredPairs|$dir") {
       Scoring.scoreFused(Blocking.keyedWithAttrs(mentions(spark, dir), Blocking.Config()))
-        .dropDuplicates("a", "b")
     }
 
   /** Transitive clustering over the match edges — ONE connected-components

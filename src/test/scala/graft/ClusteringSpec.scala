@@ -180,6 +180,23 @@ class ClusteringSpec extends AnyFunSuite {
     }
   }
 
+  test("resume namespace keeps the decimal sum-hash formula when the hash sum wraps past 2^63") {
+    import spark.implicits._
+    val df = (0L until 200L).map(i => (i, i + 1000L)).toDF("a", "b")
+    // count, xor of xxhash64(a, b), and the low 64 bits of the EXACT sum
+    // of the hashes, taken as a decimal: the namespace committed rounds
+    // were written under, which must stay resumable
+    val r = df.selectExpr("count(1)", "bit_xor(xxhash64(a, b))",
+      "sum(cast(xxhash64(a, b) as decimal(38,0)))").head()
+    val exact = r.getDecimal(2).toBigInteger
+    assert(exact.bitLength() > 63, s"fixture hash sum $exact fits a long; it must wrap")
+    val want = s"cc_${r.getLong(0)}_${java.lang.Long.toUnsignedString(r.getLong(1))}_" +
+      java.lang.Long.toUnsignedString(exact.longValue())
+    val dir = java.nio.file.Files.createTempDirectory("ns_wrap").toString
+    assert(Clustering.connectedComponentsCheckpointed(spark, df, dir).converged)
+    assert(walk(dir)(_.startsWith("cc_")).map(_.getFileName.toString) == Seq(want))
+  }
+
   test("checkpointed CC within the driver threshold commits round 0 alone and finishes by union-find") {
     import spark.implicits._
     val edges = (0L until 120L).map(i => (i, (i + 11) % 120)) ++ Seq((500L, 501L), (501L, 502L))

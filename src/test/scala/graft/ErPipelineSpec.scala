@@ -35,8 +35,7 @@ class ErPipelineSpec extends AnyFunSuite {
     assert(hot.select("gold_entity").distinct().count() > 1,
       "hot alias should span multiple entities")
     // cross-entity hot pairs share the exact-surface block but must not match
-    val pairs = Blocking.candidatePairs(mentions)
-    val scored = Scoring.scorePairs(mentions, pairs)
+    val scored = Scoring.scoreFused(Blocking.keyedWithAttrs(mentions, Blocking.Config()))
     val hotIds = hot.select(col("mention_id")).collect().map(_.getLong(0)).toSet
     val hotScored = scored
       .where(col("a").isInCollection(hotIds) && col("b").isInCollection(hotIds))

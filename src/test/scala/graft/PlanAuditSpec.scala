@@ -51,16 +51,18 @@ class PlanAuditSpec extends AnyFunSuite {
     val keyed = Blocking.keyedWithAttrs(mentions, Blocking.Config())
     val scored = Scoring.scoreFused(keyed)
     val p = plan(scored)
-    // Exchanges: block-size aggregation (partial+final over the tiny key
-    // table) + the self-join co-partitioning. The pair-scale output must
-    // NOT be followed by any further Exchange.
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
-    assert(exchanges <= 4, s"too many shuffles ($exchanges) in fused scoring plan:\n$p")
-    // scoring expressions sit above the join, not behind another shuffle:
-    val afterJoin = p.substring(p.indexOf("Join"))
-    assert(!afterJoin.contains("Exchange") || p.indexOf("Exchange", p.indexOf("Join")) >
-      p.indexOf("levenshtein").max(0),
-      "pair rows are shuffled after scoring")
+    // Exactly one hash exchange on bkey: the co-partitioning the pair
+    // kernel reads. The other hash exchanges are the block-size
+    // aggregation over the tiny key table, keyed on `key`.
+    val onBkey = "Exchange hashpartitioning\\(bkey".r.findAllIn(p).length
+    assert(onBkey == 1, s"expected one bkey co-partitioning, found $onBkey:\n$p")
+    // the pair kernel (MapPartitions) emits the pair-scale rows; the plan
+    // text lists operators top-down, so no Exchange may precede it
+    val kernel = p.indexOf("MapPartitions")
+    assert(kernel >= 0, s"expected a MapPartitions pair kernel:\n$p")
+    assert(!p.substring(0, kernel).contains("Exchange"), s"pair rows are shuffled after scoring:\n$p")
+    assert(p.indexOf("Exchange hashpartitioning(bkey") > kernel,
+      s"the bkey co-partitioning is not below the pair kernel:\n$p")
   }
 
   test("no forced broadcast hints on corpus-derived tables (linkers, target resolution)") {
