@@ -54,8 +54,8 @@ object PairEval {
     import spark.implicits._
     // fused scale path: one co-partitioning shuffle, scoring map-side,
     // each labeled pair emitted once. The pair universe is read twice
-    // (edges + eval join); its persistence is CONFIGURABLE because at web scale (10^12 pairs) a memory cache is
-    // a spill storm — callers pick DISK_ONLY (sequential spill, no GC
+    // (edges + eval join); its persistence is CONFIGURABLE because at web
+    // scale (10^12 pairs) a memory cache is a spill storm — callers pick DISK_ONLY (sequential spill, no GC
     // churn) or NONE (recompute the fused stage, often cheaper than
     // spilling) for the biggest runs.
     val keyed = Blocking.keyedWithAttrs(mentions, blockCfg)

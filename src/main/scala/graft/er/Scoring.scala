@@ -111,25 +111,24 @@ object Scoring {
   }
 
   /** A block member with its scoring attributes decoded once, not per pair;
-    * `pos` is the index of the current block in its sorted block list. */
+    * `before` holds the member's blocks that sort before the current one. */
   private final class Member(r: KeyedRow) {
     val id: Long = r.id
     val gold: String = r.gold
     val ns: UTF8String = UTF8String.fromString(r.ns)
     val ctx: ArrayData = UnsafeArrayData.fromPrimitiveArray(r.ctx)
-    val bkeys: Array[String] = r.bkeys
-    val pos: Int = bkeys.indexOf(r.bkey)
+    val before: Array[UTF8String] = r.bkeys.takeWhile(_ != r.bkey).map(UTF8String.fromString)
   }
 
   /** True iff x and y share no block ordered before the current one, i.e.
     * the current block is their least common block. A merge walk over the
-    * two list prefixes, in the order the lists were sorted in (UTF-8 byte
-    * order: sort_array's UTF8String order, which is CodePointOrdering). */
+    * two sorted prefixes, compared in the order sort_array sorted the lists
+    * in (UTF8String.binaryCompare: UTF-8 byte order, i.e. CodePointOrdering). */
   private def leastCommon(x: Member, y: Member): Boolean = {
     var i = 0
     var j = 0
-    while (i < x.pos && j < y.pos) {
-      val c = Mentions.CodePointOrdering.compare(x.bkeys(i), y.bkeys(j))
+    while (i < x.before.length && j < y.before.length) {
+      val c = x.before(i).binaryCompare(y.before(j))
       if (c == 0) return false
       if (c < 0) i += 1 else j += 1
     }
