@@ -1,7 +1,9 @@
 package graft.er
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.Mention
 
@@ -85,47 +87,46 @@ object Blocking {
 
   /** (bkey, id, ns, ctx, gold, bkeys) — the blocking relation carrying
     * scoring attributes, oversized blocks sub-bucketed, one row per
-    * (mention, block). `bkeys` is the mention's full block list, sorted in
-    * UTF-8 byte order (== Mentions.CodePointOrdering == UTF8String
-    * order): Scoring.scoreFused scores a pair only in the least block the
-    * two lists share, so each candidate pair is scored once.
+    * (mention, block). `bkeys` is the mention's full block list, sorted by
+    * Mentions.CodePointOrdering (UTF-8 byte order): Scoring.scoreFused
+    * scores a pair only in the least block the two lists share, so each
+    * candidate pair is scored once.
     *
-    * The list is derived map-side per mention, before the explode, so no
-    * shuffle of the keyed relation builds it. Only the OVERSIZED keys
-    * (block_size > maxBlock) are aggregated into a one-row key → nb map
-    * and broadcast — the skew tail, small in practice (worst case
-    * n_rows/maxBlock entries); every other key keeps nb=1. Broadcasting
-    * the FULL one-row-per-distinct-key table (as v1 did) grows linearly
-    * with mention count and OOMs at web scale. */
+    * Only the OVERSIZED keys (block_size > maxBlock) need a bucket count;
+    * that table — the skew tail, small in practice (worst case
+    * n_rows/maxBlock entries) — is aggregated and collected to the driver
+    * as a hash map, and every other key keeps nb=1. Each mention's block
+    * list is then built map-side in one pass: no shuffle of the keyed
+    * relation and one hashed lookup per (mention, key), however many keys
+    * are hot. */
   def keyedWithAttrs(mentions: Dataset[Mention], cfg: Config): DataFrame = {
     import mentions.sparkSession.implicits._
+    val nb: Map[String, Int] = keyed(mentions, cfg)
+      .groupBy("key").agg(count("*").as("block_size"))
+      .where(col("block_size") > cfg.maxBlock)
+      .select(col("key"), ceil(col("block_size") / lit(cfg.maxBlock)).cast("int"))
+      .collect().iterator.map(r => r.getString(0) -> r.getInt(1)).toMap
     // context tokens travel as SORTED 64-bit hashes: the pair kernel is
     // memory-bandwidth bound, and hashes cut row bytes ~3x vs string
     // arrays (Jaccard over them via SortedLongJaccardExpr is exact modulo
     // 64-bit collisions)
-    val m = mentions.map { m =>
+    mentions.flatMap { m =>
       val ctxHashes = m.context.map(graft.dedup.Dedup.hashString).toArray.sorted
-      (m.mention_id, m.norm_surface, ctxHashes, m.gold_entity, keysFor(m, cfg).toArray)
-    }.toDF("id", "ns", "ctx", "gold", "keys")
-    val hot = m.select(explode(col("keys")).as("key"))
-      .groupBy("key").agg(count("*").as("block_size"))
-      .where(col("block_size") > cfg.maxBlock)
-      .agg(map_from_entries(collect_list(struct(col("key"),
-        ceil(col("block_size") / lit(cfg.maxBlock)).cast("int")))).as("nb"))
-    // bucket = hash(id) mod ceil(size / maxBlock), key#bucket for hot
-    // blocks — salted by the block key: an unsalted hash(id) splits the
-    // same pair identically in EVERY oversized block with equal nb, losing
-    // it from the candidate universe even when another shared key could
-    // recover it (round-5 review; same discipline as Dedup.capBuckets)
-    def bkey(key: Column): Column = {
-      val nb = col("nb")(key)
-      when(nb.isNull, key).otherwise(concat(key, lit("#"), pmod(xxhash64(col("id"), key), nb)))
-    }
-    m.crossJoin(broadcast(hot))
-      .select(col("id"), col("ns"), col("ctx"), col("gold"),
-        sort_array(transform(col("keys"), bkey(_))).as("bkeys"))
-      .select(explode(col("bkeys")).as("bkey"), col("id"), col("ns"), col("ctx"), col("gold"),
-        col("bkeys"))
+      val bkeys = keysFor(m, cfg).map(k => nb.get(k).fold(k)(n => subBucket(k, m.mention_id, n)))
+        .sorted(Mentions.CodePointOrdering).toArray
+      bkeys.iterator.map(b => (b, m.mention_id, m.norm_surface, ctxHashes, m.gold_entity, bkeys))
+    }.toDF("bkey", "id", "ns", "ctx", "gold", "bkeys")
+  }
+
+  /** `key#bucket` of a hot key, bucket = pmod(xxhash64(id, key), nb):
+    * byte-identical to the SQL `xxhash64(id, key)` (XXH64 chained from seed 42).
+    * Salted by the block key: an unsalted hash(id) splits the same pair
+    * identically in EVERY oversized block with equal nb, losing it from
+    * the candidate universe even when another shared key could recover it
+    * (same discipline as Dedup.capBuckets). */
+  private def subBucket(key: String, id: Long, nb: Int): String = {
+    val h = XXH64.hashUTF8String(UTF8String.fromString(key), XXH64.hashLong(id, 42L))
+    key + "#" + java.lang.Math.floorMod(h, nb.toLong)
   }
 
   /** Block-size profile — the metrics surface for the skew invariant

@@ -117,18 +117,17 @@ object Scoring {
     val gold: String = r.gold
     val ns: UTF8String = UTF8String.fromString(r.ns)
     val ctx: ArrayData = UnsafeArrayData.fromPrimitiveArray(r.ctx)
-    val before: Array[UTF8String] = r.bkeys.takeWhile(_ != r.bkey).map(UTF8String.fromString)
+    val before: Array[String] = r.bkeys.takeWhile(_ != r.bkey)
   }
 
   /** True iff x and y share no block ordered before the current one, i.e.
     * the current block is their least common block. A merge walk over the
-    * two sorted prefixes, compared in the order sort_array sorted the lists
-    * in (UTF8String.binaryCompare: UTF-8 byte order, i.e. CodePointOrdering). */
+    * two sorted prefixes, in the order keyedWithAttrs sorted the lists in. */
   private def leastCommon(x: Member, y: Member): Boolean = {
     var i = 0
     var j = 0
     while (i < x.before.length && j < y.before.length) {
-      val c = x.before(i).binaryCompare(y.before(j))
+      val c = Mentions.CodePointOrdering.compare(x.before(i), y.before(j))
       if (c == 0) return false
       if (c < 0) i += 1 else j += 1
     }

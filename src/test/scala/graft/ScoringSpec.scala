@@ -66,7 +66,7 @@ class ScoringSpec extends AnyFunSuite {
 
   test("keyedWithAttrs: bkeys follow the sub-bucket formula and each list is its mention's sorted block set") {
     val mentions = Mentions.fromPages(Synth.pages(spark, 80, 11L, 6))
-    for ((name, cfg) <- configs) {
+    for ((name, cfg) <- configs :+ ("maxBlock=2" -> Blocking.Config(maxBlock = 2))) {
       val k = Blocking.keyed(mentions, cfg)
       val nb = k.groupBy("key").agg(count("*").as("block_size"))
         .where(col("block_size") > cfg.maxBlock)
@@ -86,5 +86,29 @@ class ScoringSpec extends AnyFunSuite {
       val badList = keyed.find(r => r.getSeq[String](2) != perId(r.getLong(1)))
       assert(badList.isEmpty, s"$name: block list is not the mention's sorted block set: $badList")
     }
+  }
+
+  test("keyedWithAttrs: thousands of hot keys cost one hashed lookup per key, built map-side") {
+    val mentions = Mentions.fromPages(Synth.pages(spark, 2400, 901L)).cache()
+    val hotCfg = Blocking.Config(maxBlock = 2)
+    val nHot = Blocking.keyed(mentions, hotCfg).groupBy("key").count()
+      .where(col("count") > hotCfg.maxBlock).count()
+    assert(nHot > 1000, s"fixture has only $nHot hot keys")
+    val keyed = Blocking.keyedWithAttrs(mentions, hotCfg)
+    val p = keyed.queryExecution.executedPlan.toString
+    assert(!p.contains("Join") && !p.contains("Exchange"),
+      s"block lists are not built map-side from the mentions:\n$p")
+    // Blocking time must not grow with the hot-key count: a lookup that
+    // scans the hot table per key (a map column read by a lambda) costs
+    // O(keys x hot keys), ~15x the default config's time on this fixture.
+    def secs(cfg: Blocking.Config): Double = (0 until 2).map { _ =>
+      val t0 = System.nanoTime()
+      Blocking.keyedWithAttrs(mentions, cfg)
+        .agg(sum(hash(col("bkey"), col("id"), col("bkeys")).cast("long"))).head()
+      (System.nanoTime() - t0) / 1e9
+    }.min
+    val (cold, hot) = (secs(Blocking.Config()), secs(hotCfg))
+    assert(hot <= 3 * cold + 2, f"$nHot hot keys: $hot%.2f s vs $cold%.2f s with the default config")
+    mentions.unpersist()
   }
 }
