@@ -95,10 +95,10 @@ object Blocking {
     * Only the OVERSIZED keys (block_size > maxBlock) need a bucket count;
     * that table — the skew tail, small in practice (worst case
     * n_rows/maxBlock entries) — is aggregated and collected to the driver
-    * as a hash map, and every other key keeps nb=1. Each mention's block
-    * list is then built map-side in one pass: no shuffle of the keyed
-    * relation and one hashed lookup per (mention, key), however many keys
-    * are hot. */
+    * as a hash map (one job, run when this is called), and every other
+    * key keeps nb=1. Each mention's block list is then built map-side in
+    * one pass: no shuffle of the keyed relation and one hashed lookup per
+    * (mention, key), however many keys are hot. */
   def keyedWithAttrs(mentions: Dataset[Mention], cfg: Config): DataFrame = {
     import mentions.sparkSession.implicits._
     val nb: Map[String, Int] = keyed(mentions, cfg)
