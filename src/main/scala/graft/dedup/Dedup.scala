@@ -3,16 +3,20 @@ package graft.dedup
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
+import graft.er.BlockPairs
 import graft.synth.Synth.splitmix64
 
 /** Large-scale deduplication operators for training-data pipelines.
   *
   * All tiers follow the same scale discipline as the ER pipeline: a cheap
-  * per-row signature (map-side, no shuffle), one co-partitioning shuffle on
-  * the signature bucket, then verification inside the bucket. No stage ever
-  * shuffles the full pair space.
+  * per-row signature (map-side, no shuffle), then the BlockPairs
+  * operator — one co-partitioning shuffle on the signature bucket, and
+  * verification inside the bucket, once per pair in its least common
+  * bucket. No stage ever shuffles the full pair space.
   *
   *   - exact:    content-hash groupBy (keep-min survivor)
   *   - MinHash:  char-shingle minhash signatures, banded LSH buckets,
@@ -22,9 +26,10 @@ import graft.synth.Synth.splitmix64
   */
 object Dedup {
 
-  /** Default skew cap for every banded self-join in this module (and the
-    * value the bench/driver surface passes explicitly): bounds any bucket
-    * task at ~maxBucket²/2 candidate pairs. The web-scale-safe default for
+  /** Default skew cap for every banded pair site in this module (and the
+    * value the bench/driver surface passes explicitly): BlockPairs
+    * sub-buckets any bucket above it, bounding a bucket task at
+    * ~maxBucket²/2 candidate pairs. The web-scale-safe default for
     * ALL pair tiers, including simhashPairs — exhaustive bucket scans are
     * opt-in (`maxBucket = Int.MaxValue`), never the default. */
   val DefaultMaxBucket: Int = 4096
@@ -72,41 +77,6 @@ object Dedup {
       val d = q.pollLast()
       try d.unpersist(false) catch { case NonFatal(_) => () }
     }
-  }
-
-  /** Skew cap for the banded self-joins (same discipline as
-    * er.Blocking): buckets larger than `maxBucket` are deterministically
-    * sub-bucketed by hash(id, bucket), bounding every task at
-    * ~maxBucket²/2 pairs even when boilerplate text creates a mega-bucket.
-    * Only the OVERSIZED buckets' sizes are broadcast (the skew tail —
-    * bounded regardless of corpus size). The sub-bucket hash is salted
-    * with the bucket key so each BAND splits independently: a true
-    * duplicate pair separated in one band's sub-buckets still collides in
-    * another band with probability 1-(1-1/nb)^(bands-1) — recall loss is
-    * negligible for banded schemes (and exactly zero when no bucket
-    * exceeds the cap). */
-  private[graft] def capBuckets(banded: DataFrame, maxBucket: Int): DataFrame =
-    capBucketsWith(banded,
-      banded.groupBy("bucket").agg(count(lit(1)).as("bsz")), maxBucket)
-
-  /** [[capBuckets]] against a CALLER-SUPPLIED census (bucket, bsz) — the
-    * index-at-rest shape: [[survivorsIncrementalDelta]] maintains the
-    * standing bucket sizes incrementally and derives the union census
-    * from the batch's band deltas alone, so the cap never re-counts the
-    * corpus.
-    * Rows whose bucket is absent from `sizes` pass through uncapped
-    * (left join → nb = 1), so a census restricted to the buckets a probe
-    * can reach is sufficient. */
-  private[graft] def capBucketsWith(
-      banded: DataFrame, sizes: DataFrame, maxBucket: Int): DataFrame = {
-    val hot = sizes.where(col("bsz") > maxBucket).select("bucket", "bsz")
-    banded.join(broadcast(hot), Seq("bucket"), "left")
-      .withColumn("nb", coalesce(ceil(col("bsz") / lit(maxBucket)).cast("int"), lit(1)))
-      .withColumn("bucket",
-        when(col("nb") <= 1, col("bucket"))
-          .otherwise(concat(col("bucket"), lit("#"),
-            pmod(xxhash64(col("id"), col("bucket")), col("nb")))))
-      .drop("bsz", "nb")
   }
 
   /** A caller-materialized MinHash pair table TOGETHER WITH the exact
@@ -211,45 +181,31 @@ object Dedup {
       rowsPerBand: Int = 8,
       minJaccard: Double = 0.5,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    // persisted: the plan references the signature map 4 times (hot-bucket
-    // agg + both self-join sides + verification) and Spark does NOT reuse
-    // the exchange across them — without persist every reference
-    // re-shingles and re-hashes the whole corpus (measured: 4x
-    // SerializeFromObject scans). Signature rows are compact (id + 64
-    // longs), MEMORY_AND_DISK spills if not.
+    // persisted: the BlockPairs census job and the pair plan both read
+    // the signature map — without persist each re-shingles and re-hashes
+    // the whole corpus. Signature rows are compact (id + 64 longs),
+    // MEMORY_AND_DISK spills if not.
     val sigs = persistSig(minhashSigs(df, idCol, textCol, shingleK, nHashes))
-    minhashPairsFromSigs(sigs, nHashes, rowsPerBand, minJaccard, maxBucket)
+    val rows = minhashRows(sigs, nHashes, rowsPerBand)
+    minhashPairsFromRows(rows, BlockPairs.census(rows, maxBucket), nHashes, minJaccard)
   }
 
-  /** The banded self-join half of [[minhashPairs]], over a caller-persisted
-    * signature table (the index-at-rest shape
-    * [[survivorsIncrementalDelta]]'s standing state uses). */
-  private[graft] def minhashPairsFromSigs(
-      sigs: DataFrame,
-      nHashes: Int,
-      rowsPerBand: Int,
-      minJaccard: Double,
-      maxBucket: Int): DataFrame = {
-    val nBands = nHashes / rowsPerBand
-    minhashPairsFromBanded(
-      capBuckets(bandedSigs(sigs, nBands, rowsPerBand), maxBucket),
-      nHashes, minJaccard)
-  }
+  /** (id, keys, sig): each signature with its band buckets. */
+  private def minhashRows(sigs: DataFrame, nHashes: Int, rowsPerBand: Int): DataFrame =
+    sigs.select(col("id"), minhashBands(nHashes / rowsPerBand, rowsPerBand).as("keys"), col("sig"))
 
-  /** The within-bucket verify half over an ALREADY-CAPPED banded table —
-    * shared by the sig-table path above and the index-at-rest bootstrap
-    * ([[buildSurvivorIndex]] reuses its persisted banded frame here
-    * instead of re-exploding the signatures). */
-  private[graft] def minhashPairsFromBanded(
-      banded: DataFrame, nHashes: Int, minJaccard: Double): DataFrame = {
-    val l = banded.select(col("bucket"), col("id").as("id_a"), col("sig").as("sig_a"))
-    val r = banded.select(col("bucket"), col("id").as("id_b"), col("sig").as("sig_b"))
-    l.join(r, Seq("bucket"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("est_jaccard", sigAgreement(nHashes))
-      .where(col("est_jaccard") >= minJaccard)
-      .select(col("id_a"), col("id_b"), col("est_jaccard"))
-      .dropDuplicates("id_a", "id_b")
+  /** The within-bucket verify over [[minhashRows]] with the census `hot`
+    * (key → sub-bucket count) — shared by [[minhashPairs]] and the
+    * index-at-rest bootstrap, which passes its standing bucket census
+    * instead of counting again. */
+  private def minhashPairsFromRows(
+      rows: DataFrame, hot: Map[String, Int], nHashes: Int, minJaccard: Double): DataFrame = {
+    import rows.sparkSession.implicits._
+    BlockPairs.pairs[Array[Long], Array[Long], (Long, Long, Double)](
+      BlockPairs.bucketed(rows, hot), col("sig"))(identity) { (a, b) =>
+      val j = agreement(a.payload, b.payload, nHashes)
+      if (j >= minJaccard) Some((a.id, b.id, j)) else None
+    }.toDF("id_a", "id_b", "est_jaccard")
   }
 
   /** (id, sig) MinHash signature table — the LSH index relation a
@@ -266,21 +222,29 @@ object Dedup {
       .toDF("id", "sig")
   }
 
-  /** Explode a signature table into per-band bucket keys (pre-cap). */
-  private[graft] def bandedSigs(
-      sigs: DataFrame, nBands: Int, rowsPerBand: Int): DataFrame =
-    sigs.select(
-      col("id"), col("sig"),
-      explode(expr(
-        s"transform(sequence(0, ${nBands - 1}), b -> " +
-          s"concat(cast(b as string), ':', cast(xxhash64(slice(sig, b * $rowsPerBand + 1, $rowsPerBand)) as string)))"))
-        .as("bucket"))
+  /** The band buckets of a `sig` column: "b:xxhash64(band b)". */
+  private[graft] def minhashBands(nBands: Int, rowsPerBand: Int): Column =
+    expr(s"transform(sequence(0, ${nBands - 1}), b -> " +
+      s"concat(cast(b as string), ':', cast(xxhash64(slice(sig, b * $rowsPerBand + 1, $rowsPerBand)) as string)))")
 
-  /** The exact verification expression shared by the batch pair join and
-    * the incremental fold: fraction of agreeing minhash components over
-    * sig_a/sig_b (identical double arithmetic on both paths). */
+  /** Explode a signature table into per-band bucket keys (pre-cap). */
+  private def bandedSigs(
+      sigs: DataFrame, nBands: Int, rowsPerBand: Int): DataFrame =
+    sigs.select(col("id"), col("sig"), explode(minhashBands(nBands, rowsPerBand)).as("bucket"))
+
+  /** The incremental fold's verify expression: fraction of agreeing
+    * minhash components over sig_a/sig_b — the same double as
+    * [[agreement]], the batch kernel's verify. */
   private def sigAgreement(nHashes: Int) =
     expr(s"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)) / cast($nHashes as double)")
+
+  /** Fraction of agreeing minhash components (an unbiased Jaccard estimate). */
+  private def agreement(a: Array[Long], b: Array[Long], nHashes: Int): Double = {
+    var eq = 0
+    var k = 0
+    while (k < a.length && k < b.length) { if (a(k) == b(k)) eq += 1; k += 1 }
+    eq / nHashes.toDouble
+  }
 
   // ---------- simhash --------------------------------------------------------
 
@@ -322,9 +286,7 @@ object Dedup {
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val nBands = maxHamming + 1
-    val width = 64 / nBands
-    // persisted: referenced 4x in the plan with no exchange reuse (see
+    // persisted: read by the census job and the pair plan (see
     // minhashPairs)
     val sigs = persistSig(df
       .select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
@@ -336,25 +298,26 @@ object Dedup {
     // guarantee is per-band, so the cap trades the exact-recall guarantee
     // for bounded tasks ONLY on oversized buckets (identical-band floods,
     // which are overwhelmingly true near-dup cliques anyway).
-    val banded = capBuckets(sigs.select(
-      col("id"), col("sim"),
-      explode(expr(
-        // UNSIGNED band extraction: simhash64 uses all 64 bits, so ~half
-        // the signatures are negative and signed div/% would make every
-        // band's bucket depend on the SIGN and low-bit borrows — two
-        // signatures agreeing bitwise on a band could land in different
-        // buckets, silently dropping within-radius pairs (round-5 review).
-        s"transform(sequence(0, ${nBands - 1}), b -> " +
-          s"concat(cast(b as string), ':', cast((shiftrightunsigned(sim, b * $width) & ${(1L << width) - 1}L) as string)))"))
-        .as("bucket")), maxBucket)
-    val l = banded.select(col("bucket"), col("id").as("id_a"), col("sim").as("sim_a"))
-    val r = banded.select(col("bucket"), col("id").as("id_b"), col("sim").as("sim_b"))
-    l.join(r, Seq("bucket"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("hamming", bit_count(expr("sim_a ^ sim_b")))
-      .where(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-      .dropDuplicates("id_a", "id_b")
+    val rows = sigs.select(col("id"), simhashBands(maxHamming).as("keys"), col("sim"))
+    BlockPairs.pairs[Long, Long, (Long, Long, Int)](BlockPairs.bucketed(
+      rows, BlockPairs.census(rows, maxBucket)), col("sim"))(identity) { (a, b) =>
+      val hamming = java.lang.Long.bitCount(a.payload ^ b.payload)
+      if (hamming <= maxHamming) Some((a.id, b.id, hamming)) else None
+    }.toDF("id_a", "id_b", "hamming")
+  }
+
+  /** The band buckets of a `sim` column: "b:bits of band b", over
+    * maxHamming + 1 bands (the pigeonhole split). UNSIGNED extraction:
+    * simhash64 uses all 64 bits, so ~half the signatures are negative and
+    * signed div/% would make every band's bucket depend on the SIGN and
+    * low-bit borrows — two signatures agreeing bitwise on a band could
+    * land in different buckets, silently dropping within-radius pairs
+    * (round-5 review). */
+  private[graft] def simhashBands(maxHamming: Int): Column = {
+    val nBands = maxHamming + 1
+    val width = 64 / nBands
+    expr(s"transform(sequence(0, ${nBands - 1}), b -> " +
+      s"concat(cast(b as string), ':', cast((shiftrightunsigned(sim, b * $width) & ${(1L << width) - 1}L) as string)))")
   }
 
   // ---------- survivor decision table ----------------------------------------
@@ -585,29 +548,29 @@ object Dedup {
       banded.groupBy("bucket").agg(count(lit(1)).as("bsz")))
     val groups = cache(hashed.groupBy("content_hash")
       .agg(min("id").as("gmin"), count(lit(1)).as("gsz")))
-    val (clusters, decisions) = clusterAndDecide(spark, hashed, groups, banded,
-      bucketSizes, nHashes, minJaccard, maxBucket, cache, extraEdges, victims)
+    val (clusters, decisions) = clusterAndDecide(spark, hashed, groups, sigs,
+      bucketSizes, nHashes, rowsPerBand, minJaccard, maxBucket, cache, extraEdges, victims)
     SurvivorIndex(hashed, sigs, banded, bucketSizes, groups, clusters,
       shingleK, nHashes, rowsPerBand, minJaccard, maxBucket, decisions)
   }
 
   /** An index's cluster state from its at-rest frames: CC over the exact
     * and near edges plus `extraEdges` (the containment tier), and the
-    * decision table assembled against `victims`. The near edges reuse the
-    * at-rest banded frame + its census, so no second shingling/banding
-    * pass runs; the clusters contract the SAME edge classes every later
-    * fold adds. */
+    * decision table assembled against `victims`. The near edges read the
+    * at-rest signatures with the at-rest bucket census, so no second
+    * shingling pass or bucket count runs; the clusters contract the SAME
+    * edge classes every later fold adds. */
   private def clusterAndDecide(spark: SparkSession,
-      hashed: DataFrame, groups: DataFrame, banded: DataFrame, bucketSizes: DataFrame,
-      nHashes: Int, minJaccard: Double, maxBucket: Int, cache: DataFrame => DataFrame,
+      hashed: DataFrame, groups: DataFrame, sigs: DataFrame, bucketSizes: DataFrame,
+      nHashes: Int, rowsPerBand: Int, minJaccard: Double, maxBucket: Int,
+      cache: DataFrame => DataFrame,
       extraEdges: Option[DataFrame], victims: Option[DataFrame]): (DataFrame, DataFrame) = {
     val exactEdges = hashed.join(groups, Seq("content_hash"))
       .where(col("id") =!= col("gmin"))
       .select(col("id").as("a"), col("gmin").as("b"))
-    val nearEdges =
-      minhashPairsFromBanded(
-        capBucketsWith(banded, bucketSizes, maxBucket), nHashes, minJaccard)
-        .select(col("id_a").as("a"), col("id_b").as("b"))
+    val nearEdges = minhashPairsFromRows(minhashRows(sigs, nHashes, rowsPerBand),
+      BlockPairs.hotKeys(bucketSizes, maxBucket), nHashes, minJaccard)
+      .select(col("id_a").as("a"), col("id_b").as("b"))
     val clusters = cache(graft.er.Clustering.connectedComponents(
       spark, extraEdges.foldLeft(exactEdges.unionByName(nearEdges))(_ unionByName _)))
     (clusters, cache(assembleDecisions(hashed, groups, clusters, victims)))
@@ -753,16 +716,12 @@ object Dedup {
     val touchedFull = delta.join(idx.bucketSizes, Seq("bucket"), "left")
       .select(col("bucket"), coalesce(col("bsz"), lit(0L)).as("sbz"), col("dsz"))
       .select(col("bucket"), col("sbz"), (col("sbz") + col("dsz")).as("bsz"))
-    // Only the OVERSIZED touched buckets matter downstream — both
-    // capBucketsWith sides broadcast exactly the above-cap rows, and the
-    // crossing guard below reads the same rows. Collect them ONCE (the
-    // skew tail of the BATCH's touched buckets — batch-scale bounded,
-    // the same magnitude as the touched-bucket broadcast this fold
-    // already ships) and serve the guard plus both cap joins from a
-    // local relation: one job instead of a checkpoint + a guard action +
-    // two broadcast evaluations of the census plan.
-    val spark2 = batch.sparkSession
-    import spark2.implicits._
+    // Only the OVERSIZED touched buckets matter downstream — both sides'
+    // sub-bucketing and the crossing guard below read exactly the
+    // above-cap rows. Collect them ONCE (the skew tail of the BATCH's
+    // touched buckets — batch-scale bounded, the same magnitude as the
+    // touched-bucket broadcast this fold already ships): one job serves
+    // the guard and both sides.
     val hotRows = touchedFull.where(col("bsz") > idx.maxBucket)
       .select(col("bucket"), col("sbz"), col("bsz"))
       .collect()
@@ -780,15 +739,15 @@ object Dedup {
           "standing cluster state and exact batch equality is not guaranteed " +
           "for pairs in the flooded bucket; re-bootstrap the index " +
           "(buildSurvivorIndex) on the union to restore the exact regime")
-    // rows under the cap are never read by capBucketsWith (left join →
-    // nb = 1), so the hot set IS a sufficient census
-    val touched = hotRows.map(r => (r.getString(0), r.getLong(2)))
-      .toSeq.toDF("bucket", "bsz")
+    // rows under the cap keep their bucket, so the hot set IS a
+    // sufficient census; both sides apply the one BlockPairs formula
+    val cap = BlockPairs.capped(hotRows.iterator
+      .map(r => r.getString(0) -> BlockPairs.nb(r.getLong(2), idx.maxBucket)).toMap)
+    def capped(banded: DataFrame) = banded.withColumn("bucket", cap(col("bucket"), col("id")))
     val standingTouched = idx.banded
       .join(broadcast(delta.select("bucket")), Seq("bucket"), "left_semi")
-    val probeSide = capBucketsWith(bBanded, touched, idx.maxBucket)
-    val buildSide = capBucketsWith(
-      standingTouched.unionByName(bBanded), touched, idx.maxBucket)
+    val probeSide = capped(bBanded)
+    val buildSide = capped(standingTouched.unionByName(bBanded))
     val near = probeSide
       .select(col("bucket"), col("id").as("id_a"), col("sig").as("sig_a"))
       .join(buildSide.select(col("bucket"), col("id").as("id_b"), col("sig").as("sig_b")),
@@ -916,7 +875,7 @@ object Dedup {
             s"minJaccard=$minJaccard, maxBucket=$maxBucket)")
         // re-cluster the core's at-rest frames with containment in
         val (clusters, decisions) = clusterAndDecide(df.sparkSession, c.hashed,
-          c.groups, c.banded, c.bucketSizes, c.nHashes, c.minJaccard, c.maxBucket,
+          c.groups, c.sigs, c.bucketSizes, c.nHashes, c.rowsPerBand, c.minJaccard, c.maxBucket,
           cache, extraEdges = Some(contEdges), victims = Some(victimsFrame))
         c.copy(clusters = clusters, decisions = decisions)
       case None =>
@@ -1134,25 +1093,23 @@ object Dedup {
       col(vecCol).cast("array<double>").as("v"))
     val dim = base.select(size(col("v"))).head().getInt(0)
     val planesB = spark.sparkContext.broadcast(hyperplanes(seed, nBits, dim))
-    // persisted: referenced 4x in the plan with no exchange reuse (see
+    // persisted: read by the census job and the pair plan (see
     // minhashPairs)
     val signed = persistSig(base.as[(Long, Seq[Double])].map { case (id, v) =>
       (id, v, signSignature(planesB.value, v))
     }.toDF("id", "v", "sig"))
-    val nBands = nBits / bandBits
-    val banded = capBuckets(signed.select(
-      col("id"), col("v"),
-      explode(expr(
-        s"transform(sequence(0, ${nBands - 1}), b -> " +
-          s"concat(cast(b as string), ':', cast((sig div shiftleft(1L, b * $bandBits)) % shiftleft(1L, $bandBits) as string)))"))
-        .as("bucket")), maxBucket)
-    val l = banded.select(col("bucket"), col("id").as("id_a"), col("v").as("v_a"))
-    val r = banded.select(col("bucket"), col("id").as("id_b"), col("v").as("v_b"))
-    l.join(r, Seq("bucket"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("cosine", cosineCol(col("v_a"), col("v_b")))
-      .where(col("cosine") >= minCosine)
-      .select(col("id_a"), col("id_b"), col("cosine"))
-      .dropDuplicates("id_a", "id_b")
+    val rows = signed.select(col("id"), embeddingBands(nBits, bandBits).as("keys"), col("v"))
+    BlockPairs.pairs[Array[Double], ArrayData, (Long, Long, Double)](BlockPairs.bucketed(
+      rows, BlockPairs.census(rows, maxBucket)), col("v"))(UnsafeArrayData.fromPrimitiveArray) {
+      (a, b) =>
+        val cosine = graft.functions.CosineExpr.cosine(a.payload, b.payload)
+        if (cosine >= minCosine) Some((a.id, b.id, cosine)) else None
+    }.toDF("id_a", "id_b", "cosine")
   }
+
+  /** The band buckets of a `sig` sign-signature column, `bandBits` bits
+    * per band — shared by [[embeddingDupPairs]] and Ann.lshTopK. */
+  private[graft] def embeddingBands(nBits: Int, bandBits: Int): Column =
+    expr(s"transform(sequence(0, ${nBits / bandBits - 1}), b -> " +
+      s"concat(cast(b as string), ':', cast((sig div shiftleft(1L, b * $bandBits)) % shiftleft(1L, $bandBits) as string)))")
 }

@@ -1,9 +1,7 @@
 package graft.er
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.Mention
 
@@ -12,16 +10,14 @@ import graft.model.Mention
   * Datasets").
   *
   * Each mention emits a small set of blocking keys; candidate pairs are the
-  * within-block id pairs. Skew discipline (§4.3):
-  *   1. block sizes are profiled first (one cheap count aggregation);
-  *   2. blocks larger than `maxBlock` are deterministically sub-bucketed
-  *      (`key#bucket`, bucket = hash(id) mod ceil(size/maxBlock)) — this
-  *      caps the per-block pair count at ~maxBlock²/2 instead of silently
-  *      dropping hot keys, and the dropped cross-bucket pairs are excluded
-  *      from the labeled-pair universe (pairs-completeness tradeoff, logged
-  *      in the stage metrics, never silent);
-  *   3. the pair kernel (Scoring.scoreFused) walks one sub-bucketed block
-  *      at a time, so a task holds ~maxBlock rows however hot a key is.
+  * within-block id pairs. Skew discipline (§4.3) is the BlockPairs
+  * operator's: blocks larger than `maxBlock` are deterministically
+  * sub-bucketed (`key#b`, b = pmod(xxhash64(id, key), ceil(size/maxBlock))),
+  * which caps the per-block pair count at ~maxBlock²/2 instead of dropping
+  * hot keys. A pair whose shared blocks are all split apart this way is
+  * not a candidate; no counter records those pairs yet (ROADMAP item 5).
+  * Scoring.scoreFused then walks one sub-bucketed block at a time, so a
+  * task holds ~maxBlock rows however hot a key is.
   */
 object Blocking {
 
@@ -86,47 +82,23 @@ object Blocking {
   }
 
   /** (bkey, id, ns, ctx, gold, bkeys) — the blocking relation carrying
-    * scoring attributes, oversized blocks sub-bucketed, one row per
-    * (mention, block). `bkeys` is the mention's full block list, sorted by
-    * Mentions.CodePointOrdering (UTF-8 byte order): Scoring.scoreFused
-    * scores a pair only in the least block the two lists share, so each
-    * candidate pair is scored once.
+    * scoring attributes, one row per (mention, block): BlockPairs.bucketed
+    * over the mentions' keys, so oversized blocks are sub-bucketed and
+    * `bkeys` is the mention's sorted block list (Scoring.scoreFused scores
+    * a pair only in the least block the two lists share). Runs the
+    * BlockPairs census (one job) when called.
     *
-    * Only the OVERSIZED keys (block_size > maxBlock) need a bucket count;
-    * that table — the skew tail, small in practice (worst case
-    * n_rows/maxBlock entries) — is aggregated and collected to the driver
-    * as a hash map (one job, run when this is called), and every other
-    * key keeps nb=1. Each mention's block list is then built map-side in
-    * one pass: no shuffle of the keyed relation and one hashed lookup per
-    * (mention, key), however many keys are hot. */
+    * Context tokens travel as SORTED 64-bit hashes: the pair kernel is
+    * memory-bandwidth bound, and hashes cut row bytes ~3x vs string
+    * arrays (Jaccard over them via SortedLongJaccardExpr is exact modulo
+    * 64-bit collisions). */
   def keyedWithAttrs(mentions: Dataset[Mention], cfg: Config): DataFrame = {
     import mentions.sparkSession.implicits._
-    val nb: Map[String, Int] = keyed(mentions, cfg)
-      .groupBy("key").agg(count("*").as("block_size"))
-      .where(col("block_size") > cfg.maxBlock)
-      .select(col("key"), ceil(col("block_size") / lit(cfg.maxBlock)).cast("int"))
-      .collect().iterator.map(r => r.getString(0) -> r.getInt(1)).toMap
-    // context tokens travel as SORTED 64-bit hashes: the pair kernel is
-    // memory-bandwidth bound, and hashes cut row bytes ~3x vs string
-    // arrays (Jaccard over them via SortedLongJaccardExpr is exact modulo
-    // 64-bit collisions)
-    mentions.flatMap { m =>
-      val ctxHashes = m.context.map(graft.dedup.Dedup.hashString).toArray.sorted
-      val bkeys = keysFor(m, cfg).map(k => nb.get(k).fold(k)(n => subBucket(k, m.mention_id, n)))
-        .sorted(Mentions.CodePointOrdering).toArray
-      bkeys.iterator.map(b => (b, m.mention_id, m.norm_surface, ctxHashes, m.gold_entity, bkeys))
-    }.toDF("bkey", "id", "ns", "ctx", "gold", "bkeys")
-  }
-
-  /** `key#bucket` of a hot key, bucket = pmod(xxhash64(id, key), nb):
-    * byte-identical to the SQL `xxhash64(id, key)` (XXH64 chained from seed 42).
-    * Salted by the block key: an unsalted hash(id) splits the same pair
-    * identically in EVERY oversized block with equal nb, losing it from
-    * the candidate universe even when another shared key could recover it
-    * (same discipline as Dedup.capBuckets). */
-  private def subBucket(key: String, id: Long, nb: Int): String = {
-    val h = XXH64.hashUTF8String(UTF8String.fromString(key), XXH64.hashLong(id, 42L))
-    key + "#" + java.lang.Math.floorMod(h, nb.toLong)
+    val rows = mentions.map { m =>
+      (m.mention_id, keysFor(m, cfg), m.norm_surface,
+        m.context.map(graft.dedup.Dedup.hashString).toArray.sorted, m.gold_entity)
+    }.toDF("id", "keys", "ns", "ctx", "gold")
+    BlockPairs.bucketed(rows, BlockPairs.census(rows, cfg.maxBlock))
   }
 
   /** Block-size profile — the metrics surface for the skew invariant

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.er.BlockPairs
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -408,49 +409,31 @@ object Ann extends Serializable {
     import spark.implicits._
     val dim = corpus.select(size(col(vecCol))).head().getInt(0)
     val planesB = spark.sparkContext.broadcast(Dedup.hyperplanes(seed, nBits, dim))
-    val nBands = nBits / bandBits
 
     def banded(df: DataFrame, ident: String): DataFrame =
       df.select(col(idCol).cast("long").as(ident), col(vecCol).cast("array<double>").as(ident + "_v"))
         .as[(Long, Seq[Double])]
         .map { case (id, v) => (id, v, Dedup.signSignature(planesB.value, v)) }
         .toDF(ident, ident + "_v", "sig")
-        .select(
-          col(ident), col(ident + "_v"),
-          explode(expr(
-            s"transform(sequence(0, ${nBands - 1}), b -> " +
-              s"concat(cast(b as string), ':', cast((sig div shiftleft(1L, b * $bandBits)) % shiftleft(1L, $bandBits) as string)))"))
-            .as("bucket"))
+        .select(col(ident), col(ident + "_v"),
+          explode(Dedup.embeddingBands(nBits, bandBits)).as("bucket"))
 
     // HOT-BUCKET cap (round-5 review): a flooded band bucket (boilerplate
     // near-identical embeddings) would otherwise land in ONE join task.
-    // Corpus side sub-buckets oversized buckets (salted, as in
-    // Dedup.capBuckets); the QUERY side fans out over every sub-bucket of
-    // its bucket, so the candidate SET — and the top-k result — is
-    // IDENTICAL to the uncapped plan; only the task granularity changes.
+    // The corpus side sub-buckets oversized buckets with the BlockPairs
+    // formula; the QUERY side fans out over every sub-bucket of its
+    // bucket, so the candidate SET — and the top-k result — is IDENTICAL
+    // to the uncapped plan; only the task granularity changes.
     val maxBucket = Dedup.DefaultMaxBucket
     // persistSig: the hot-bucket census below AND the candidate join both
     // read this table — without the persist each call would run the
     // corpus-scale nBits×dim signature map twice (released per query via
     // Dedup.releaseSignatures, same discipline as the dedup tiers)
     val cb0 = Dedup.persistSig(banded(corpus, "nbr_id"))
-    val hot = cb0.groupBy("bucket").agg(count(lit(1)).as("bsz"))
-      .where(col("bsz") > maxBucket)
-    val cb = cb0.join(broadcast(hot), Seq("bucket"), "left")
-      .withColumn("nb", coalesce(ceil(col("bsz") / lit(maxBucket)).cast("int"), lit(1)))
-      .withColumn("bucket",
-        when(col("nb") <= 1, col("bucket"))
-          .otherwise(concat(col("bucket"), lit("#"),
-            pmod(xxhash64(col("nbr_id"), col("bucket")), col("nb")))))
-      .drop("bsz", "nb")
+    val hot = BlockPairs.hotKeys(cb0.groupBy("bucket").count(), maxBucket)
+    val cb = cb0.withColumn("bucket", BlockPairs.capped(hot)(col("bucket"), col("nbr_id")))
     val qb = banded(queries, "query_id")
-      .join(broadcast(hot), Seq("bucket"), "left")
-      .withColumn("nb", coalesce(ceil(col("bsz") / lit(maxBucket)).cast("int"), lit(1)))
-      .withColumn("sub", explode(expr("sequence(0, nb - 1)")))
-      .withColumn("bucket",
-        when(col("nb") <= 1, col("bucket"))
-          .otherwise(concat(col("bucket"), lit("#"), col("sub"))))
-      .drop("bsz", "nb", "sub")
+      .withColumn("bucket", explode(BlockPairs.fanOut(hot)(col("bucket"))))
     val cand = qb.join(cb, Seq("bucket"))
       .where(col("nbr_id") =!= col("query_id"))
       .select(col("query_id"), col("query_id_v"), col("nbr_id"), col("nbr_id_v"))

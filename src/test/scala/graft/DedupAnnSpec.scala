@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
+import graft.er.BlockPairs
 import graft.sim.Ann
 
 class DedupAnnSpec extends AnyFunSuite {
@@ -114,12 +115,24 @@ class DedupAnnSpec extends AnyFunSuite {
     // sub-buckets: every found boiler pair is a true duplicate
     val boilerPairs = capped.filter(_._1 >= 5000L)
     assert(boilerPairs.nonEmpty, "mega-bucket pairs entirely lost")
-    // bounded tasks: no sub-bucket may exceed the cap (checked via the
-    // capped blocking relation is internal; assert indirectly — pair count
-    // per boiler doc is far below the uncapped 399)
-    val maxDeg = boilerPairs.toSeq.flatMap(p => Seq(p._1, p._2))
-      .groupBy(identity).map(_._2.size).max
-    assert(maxDeg < 400, s"cap had no effect (degree $maxDeg)")
+    // bounded tasks, read off the bucketed relation the pair kernel
+    // reads: every bucket above the cap is split into ceil(size / cap)
+    // sub-buckets. The split is a hash, so a sub-bucket holds ~cap rows,
+    // not at most cap (the largest here holds 65 of the 400), and never
+    // the whole mega-bucket.
+    val rows = Dedup.minhashSigs(d, "doc_id", "text", 5, 64)
+      .select(col("id"), Dedup.minhashBands(8, 8).as("keys"))
+    val sizes = BlockPairs.bucketed(rows, BlockPairs.census(rows, 50))
+      .groupBy("bkey").count().collect().map(r => r.getString(0) -> r.getLong(1))
+    val unsplit = sizes.filter { case (b, n) => n > 50 && !b.contains("#") }
+    assert(unsplit.isEmpty, s"buckets above the cap were not split: ${unsplit.toSeq}")
+    val split = sizes.filter(_._1.contains("#")).groupBy(_._1.takeWhile(_ != '#'))
+    assert(split.size == 8, s"expected the 8 boilerplate band buckets split, got ${split.keys}")
+    split.foreach { case (key, subs) =>
+      val n = subs.map(_._2).sum
+      assert(subs.length <= BlockPairs.nb(n, 50), s"$key: ${subs.length} sub-buckets for $n rows")
+      assert(subs.map(_._2).max <= 2 * 50, s"$key: a sub-bucket holds ${subs.map(_._2).max} of $n rows")
+    }
   }
 
   test("simhashPairs pigeonhole contract: EVERY within-radius pair found, incl. negative signatures") {

@@ -47,25 +47,40 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("fused scoring plan shuffles the keyed table exactly once at pair scale") {
+    val spark2 = spark
+    import spark2.implicits._
     val mentions = Mentions.fromPages(Synth.pages(spark, 50, 42L, 5))
-    val keyed = Blocking.keyedWithAttrs(mentions, Blocking.Config())
-    val scored = Scoring.scoreFused(keyed)
-    val p = plan(scored)
-    // Exactly one hash exchange, on bkey: the co-partitioning the pair
-    // kernel reads. The hot-key table is aggregated and collected before
-    // this plan, and the block lists are built map-side, so the keyed
-    // relation is shuffled nowhere else.
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
-    assert(exchanges == 1, s"expected one hash exchange, found $exchanges:\n$p")
-    val onBkey = "Exchange hashpartitioning\\(bkey".r.findAllIn(p).length
-    assert(onBkey == 1, s"expected one bkey co-partitioning, found $onBkey:\n$p")
-    // the pair kernel (MapPartitions) emits the pair-scale rows; the plan
-    // text lists operators top-down, so no Exchange may precede it
-    val kernel = p.indexOf("MapPartitions")
-    assert(kernel >= 0, s"expected a MapPartitions pair kernel:\n$p")
-    assert(!p.substring(0, kernel).contains("Exchange"), s"pair rows are shuffled after scoring:\n$p")
-    assert(p.indexOf("Exchange hashpartitioning(bkey") > kernel,
-      s"the bkey co-partitioning is not below the pair kernel:\n$p")
+    val docs = spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
+    val vecs = (0 until 200).map(i => (i.toLong, Seq.fill(8)((i % 7).toDouble + i * 1e-3)))
+      .toDF("vec_id", "embedding")
+    val plans = Seq(
+      "scoreFused" -> Scoring.scoreFused(Blocking.keyedWithAttrs(mentions, Blocking.Config())),
+      "minhashPairs" -> graft.dedup.Dedup.minhashPairs(docs, "doc_id", "text"),
+      "simhashPairs" -> graft.dedup.Dedup.simhashPairs(docs, "doc_id", "text"),
+      "embeddingDupPairs" -> graft.dedup.Dedup.embeddingDupPairs(vecs, "vec_id", "embedding"))
+    for ((name, df) <- plans) {
+      val p = plan(df)
+      // Exactly one hash exchange, on bkey: the co-partitioning the
+      // BlockPairs kernel reads. The census is aggregated and collected
+      // before this plan, and the bucket lists are built map-side, so the
+      // bucketed relation is shuffled nowhere else.
+      val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
+      assert(exchanges == 1, s"$name: expected one hash exchange, found $exchanges:\n$p")
+      val onBkey = "Exchange hashpartitioning\\(bkey".r.findAllIn(p).length
+      assert(onBkey == 1, s"$name: expected one bkey co-partitioning, found $onBkey:\n$p")
+      // the pair kernel (MapPartitions) emits the pair-scale rows; the plan
+      // text lists operators top-down, so no Exchange may precede it
+      val kernel = p.indexOf("MapPartitions")
+      assert(kernel >= 0, s"$name: expected a MapPartitions pair kernel:\n$p")
+      assert(!p.substring(0, kernel).contains("Exchange"), s"$name: pair rows are shuffled after the kernel:\n$p")
+      assert(p.indexOf("Exchange hashpartitioning(bkey") > kernel,
+        s"$name: the bkey co-partitioning is not below the pair kernel:\n$p")
+      // no banded self-join and no pair-id dedupe
+      assert(!p.contains("SortMergeJoin"), s"$name: banded self-join in the plan:\n$p")
+      assert(!"HashAggregate\\(keys=\\[(id_a|a)#".r.findFirstIn(p).isDefined,
+        s"$name: an aggregate keyed on the pair ids:\n$p")
+    }
+    graft.dedup.Dedup.releaseSignatures()
   }
 
   test("no forced broadcast hints on corpus-derived tables (linkers, target resolution)") {

@@ -64,30 +64,6 @@ class ScoringSpec extends AnyFunSuite {
     }
   }
 
-  test("keyedWithAttrs: bkeys follow the sub-bucket formula and each list is its mention's sorted block set") {
-    val mentions = Mentions.fromPages(Synth.pages(spark, 80, 11L, 6))
-    for ((name, cfg) <- configs :+ ("maxBlock=2" -> Blocking.Config(maxBlock = 2))) {
-      val k = Blocking.keyed(mentions, cfg)
-      val nb = k.groupBy("key").agg(count("*").as("block_size"))
-        .where(col("block_size") > cfg.maxBlock)
-        .select(col("key"), ceil(col("block_size") / lit(cfg.maxBlock)).cast("int").as("nb"))
-      val want = k.join(broadcast(nb), Seq("key"), "left")
-        .select(when(col("nb").isNull, col("key"))
-          .otherwise(concat(col("key"), lit("#"), pmod(xxhash64(col("id"), col("key")), col("nb"))))
-          .as("bkey"), col("id"))
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-      val keyed = Blocking.keyedWithAttrs(mentions, cfg).select("bkey", "id", "bkeys").collect()
-      val got = keyed.map(r => (r.getString(0), r.getLong(1)))
-      val exact = got.length == got.toSet.size && got.toSet == want
-      assert(exact, s"$name: bkeys differ from the formula")
-      val perId = got.groupBy(_._2).map { case (id, rs) =>
-        id -> rs.map(_._1).sorted(Mentions.CodePointOrdering).toSeq
-      }
-      val badList = keyed.find(r => r.getSeq[String](2) != perId(r.getLong(1)))
-      assert(badList.isEmpty, s"$name: block list is not the mention's sorted block set: $badList")
-    }
-  }
-
   test("keyedWithAttrs: thousands of hot keys cost one hashed lookup per key, built map-side") {
     val mentions = Mentions.fromPages(Synth.pages(spark, 2400, 901L)).cache()
     val hotCfg = Blocking.Config(maxBlock = 2)
