@@ -86,7 +86,7 @@ object Blocking {
     * over the mentions' keys, so oversized blocks are sub-bucketed and
     * `bkeys` is the mention's sorted block list (Scoring.scoreFused scores
     * a pair only in the least block the two lists share). Runs the
-    * BlockPairs census (one job) when called.
+    * hot-key census (one job) when called.
     *
     * Context tokens travel as SORTED 64-bit hashes: the pair kernel is
     * memory-bandwidth bound, and hashes cut row bytes ~3x vs string
@@ -98,7 +98,10 @@ object Blocking {
       (m.mention_id, keysFor(m, cfg), m.norm_surface,
         m.context.map(graft.dedup.Dedup.hashString).toArray.sorted, m.gold_entity)
     }.toDF("id", "keys", "ns", "ctx", "gold")
-    BlockPairs.bucketed(rows, BlockPairs.census(rows, cfg.maxBlock))
+    // census over the bare (key, id) relation: the keying pass alone,
+    // without the context hashing the rows carry
+    val hot = BlockPairs.hotKeys(keyed(mentions, cfg).groupBy("key").count(), cfg.maxBlock)
+    BlockPairs.bucketed(rows, hot)
   }
 
   /** Block-size profile — the metrics surface for the skew invariant
