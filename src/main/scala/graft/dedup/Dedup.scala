@@ -272,10 +272,10 @@ object Dedup {
     * CONTRACT CAVEAT: the pigeonhole guarantee is exact only while no band
     * bucket exceeds `maxBucket`. Oversized buckets (identical-band floods,
     * overwhelmingly boilerplate/near-identical cliques) are sub-bucketed
-    * for bounded task sizes, which can split a pair whose ONLY agreeing
-    * band is the flooded one. The DEFAULT is the capped, web-scale-safe
-    * behavior ([[DefaultMaxBucket]], the same value the driver surface
-    * uses) — a new caller gets bounded task sizes out of the box;
+    * by BlockPairs for bounded task sizes, which can split a pair whose
+    * ONLY agreeing band is the flooded one. The DEFAULT is the capped,
+    * web-scale-safe behavior ([[DefaultMaxBucket]], the same value the
+    * driver surface uses) — a new caller gets bounded task sizes out of the box;
     * exhaustive recall on flooded buckets is OPT-IN via
     * `maxBucket = Int.MaxValue`. */
   def simhashPairs(
