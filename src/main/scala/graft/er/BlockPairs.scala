@@ -101,48 +101,31 @@ object BlockPairs {
       .repartition(parts, col("bkey"))
       .sortWithinPartitions("bkey", "id")
       .as(Encoders.product[Row[P]])
-      .mapPartitions(rows => new Pairs(rows.buffered, decode, verify))
+      .mapPartitions(rows => blocks(rows, decode).flatMap { b =>
+        for {
+          i <- b.indices.iterator
+          j <- (i + 1 until b.length).iterator
+          if b(i).id < b(j).id && leastCommon(b(i), b(j))
+          o <- verify(b(i), b(j))
+        } yield o
+      })
   }
 
-  /** Streams the verified pairs of a (bkey, id)-sorted partition, holding
-    * one bucket at a time, each member decoded once. A hand-written loop,
-    * not nested iterators: it runs once per candidate pair. */
-  private final class Pairs[P, D, O](in: BufferedIterator[Row[P]], decode: P => D,
-      verify: (Member[D], Member[D]) => Option[O]) extends Iterator[O] {
-    private val b = ArrayBuffer.empty[Member[D]]
-    private var i = 0
-    private var j = 0
-    private var pending: Option[O] = None
-
-    def hasNext: Boolean = {
-      while (pending.isEmpty && (j < b.length || i + 2 < b.length || in.hasNext)) {
-        if (j < b.length) {
-          val x = b(i)
-          val y = b(j)
-          j += 1
-          if (x.id < y.id && leastCommon(x, y)) pending = verify(x, y)
-        } else if (i + 2 < b.length) {
-          i += 1
-          j = i + 1
-        } else {
-          b.clear()
-          val key = in.head.bkey
-          while (in.hasNext && in.head.bkey == key) {
-            val r = in.next()
-            b += new Member(r.id, r.bkeys.takeWhile(_ != r.bkey), decode(r.payload))
-          }
-          i = 0
-          j = 1
+  /** The buckets of a (bkey, id)-sorted partition, one at a time, each
+    * member decoded once. */
+  private def blocks[P, D](rows: Iterator[Row[P]], decode: P => D): Iterator[ArrayBuffer[Member[D]]] = {
+    val in = rows.buffered
+    new Iterator[ArrayBuffer[Member[D]]] {
+      def hasNext: Boolean = in.hasNext
+      def next(): ArrayBuffer[Member[D]] = {
+        val key = in.head.bkey
+        val b = ArrayBuffer.empty[Member[D]]
+        while (in.hasNext && in.head.bkey == key) {
+          val r = in.next()
+          b += new Member(r.id, r.bkeys.takeWhile(_ != r.bkey), decode(r.payload))
         }
+        b
       }
-      pending.isDefined
-    }
-
-    def next(): O = {
-      if (!hasNext) throw new NoSuchElementException("no more pairs")
-      val o = pending.get
-      pending = None
-      o
     }
   }
 
