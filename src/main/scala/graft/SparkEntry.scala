@@ -124,7 +124,7 @@ object SparkEntry {
     "aux_extract_synonyms" -> (ErQueries.auxExtractSynonyms(_, _)),
     "aux_extract_sections" -> (ErQueries.auxExtractSections(_, _)),
     "aux_block_keys" -> ((s, d) =>
-      graft.er.Blocking.keyed(ErQueries.mentions(s, d), graft.er.Blocking.Config())),
+      graft.er.Blocking.keyed(ErQueries.mentions(s, d))),
     "aux_oracle_counter_rows" -> (EvalQueries.auxOracleCounterRows(_, _)),
     "aux_label_spans" -> (EvalQueries.auxLabelSpans(_, _)),
     "aux_baseline_counter_rows" -> (EvalQueries.auxBaselineCounterRows(_, _)),

@@ -94,20 +94,17 @@ object Decontam {
     * (occurrences inside the same doc don't count — that is
     * intra-document repetition, the Gopher counters' job). Callers
     * derive the duplicate fraction n_dup_grams / n_grams; docs shorter
-    * than `n` tokens emit (0, 0). */
+    * than `n` tokens emit (0, 0). The stats of an uncached
+    * [[buildDupNgramIndex]]: one gram-hash shuffle (map-side partial
+    * aggregation) and an id-scale rollup. */
   def dupNgramStats(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 8): DataFrame = {
-    val grams = docGrams(df, idCol, textCol, n)
-    // gram frequency across docs = distinct-doc count per gram (the
-    // docGrams dedup makes count(*) exactly that); map-side partial agg,
-    // one gram-hash shuffle
-    val freq = grams.groupBy("gram").agg(count(lit(1)).as("gf"))
-    statsOver(df.select(col(idCol).as("doc_id")), grams, freq)
-  }
+      n: Int = 8): DataFrame =
+    buildDupNgramIndex(df, idCol, textCol, n).stats
 
-  /** The (doc_id, n_grams, n_dup_grams) rollup shared by the one-shot
-    * query and the index bootstrap — ONE copy of the dup rule, so the
-    * two can never drift apart silently. */
+  /** The (doc_id, n_grams, n_dup_grams) rollup of `grams` against the
+    * gram frequencies `freq` (gram, gf), one row per id of `ids` — the
+    * ONE copy of the dup rule: the bootstrap applies it to the corpus,
+    * the fold to the batch's grams under their union frequencies. */
   private def statsOver(ids: DataFrame, grams: DataFrame,
       freq: DataFrame): DataFrame = {
     val perDoc = grams.join(freq, Seq("gram"))
@@ -120,9 +117,13 @@ object Decontam {
         coalesce(col("n_dup_grams"), lit(0L)).as("n_dup_grams"))
   }
 
+  /** Distinct-doc count per gram (the [[docGrams]] dedup makes count(*) that). */
+  private def gramFreq(grams: DataFrame, as: String): DataFrame =
+    grams.groupBy("gram").agg(count(lit(1)).as(as))
+
   // ---------- incremental maintenance ----------------------------------------
 
-  /** The standing state behind [[dupNgramStatsIncremental]] — the
+  /** The standing state behind [[foldDupNgramIndex]] — the
     * maintenance-family shape (Dedup.SurvivorIndex discipline: persist
     * all frames, parameters carried so drifted folds fail loudly):
     *   - `grams` (doc_id, gram): the distinct doc-gram relation at rest
@@ -130,6 +131,9 @@ object Decontam {
     *     fold's flipped-gram semi-join is a pruned read);
     *   - `freq` (gram, gf): distinct-doc count per gram;
     *   - `stats` (doc_id, n_grams, n_dup_grams): the standing answer.
+    * Bootstrap and fold share their steps: [[docGrams]] explodes the
+    * grams, one frequency count serves the corpus and the batch delta,
+    * and [[statsOver]] applies the dup rule to both.
     * Dup status is MONOTONE — gram frequencies only grow as the corpus
     * appends, so a fold only ever flips grams from unique to dup, never
     * back. That monotonicity is what makes the fold batch-scale: only
@@ -144,80 +148,13 @@ object Decontam {
   }
 
   /** Bootstrap the standing n-gram duplication index (one-time; every
-    * later increment goes through [[dupNgramStatsIncremental]]). */
+    * later increment goes through [[foldDupNgramIndex]]). */
   def buildDupNgramIndex(df: DataFrame, idCol: String, textCol: String,
       n: Int = 8, cache: DataFrame => DataFrame = identity): DupNgramIndex = {
     val grams = cache(docGrams(df, idCol, textCol, n))
-    val freq = cache(grams.groupBy("gram").agg(count(lit(1)).as("gf")))
+    val freq = cache(gramFreq(grams, "gf"))
     val stats = cache(statsOver(df.select(col(idCol).as("doc_id")), grams, freq))
     DupNgramIndex(grams, freq, stats, n)
-  }
-
-  /** Fold a batch of NEW documents into the standing index and return
-    * the refreshed (doc_id, n_grams, n_dup_grams) table over the union —
-    * equal to [[dupNgramStats]] over the union exactly, without
-    * re-counting the standing corpus:
-    *   - batch grams (batch-scale) join the TOUCHED union frequencies
-    *     (standing gf + batch delta — no corpus re-count);
-    *   - a standing doc's stats change ONLY when one of its unique grams
-    *     (standing gf = 1) gains a batch occurrence — the flipped-gram
-    *     set is batch-derived, so the standing holders are reached
-    *     through a broadcast semi-join (a pruned partition read when
-    *     `grams` is stored gram-partitioned; batch ≪ corpus premise).
-    * Like the survivor folds, the full table is re-emitted (output
-    * contract: one row per doc); at 10^12 docs partition the rewrite by
-    * touched ranges. */
-  def dupNgramStatsIncremental(idx: DupNgramIndex, batch: DataFrame,
-      idCol: String, textCol: String): DataFrame =
-    dupNgramStatsIncrementalFrom(idx, batch.select(col(idCol).as("doc_id")),
-      docGrams(batch, idCol, textCol, idx.n).localCheckpoint(true))
-
-  /** The fold body over an ALREADY-materialized batch gram relation —
-    * shared with [[foldDupNgramIndex]] so a streaming commit pays the
-    * gram explode once, not once per state part. `bGrams` must be the
-    * checkpointed/persisted `docGrams` of the batch. */
-  private def dupNgramStatsIncrementalFrom(idx: DupNgramIndex,
-      bIds: DataFrame, bGrams: DataFrame): DataFrame =
-    dupNgramStatsIncrementalPieces(idx, bIds, bGrams)._1
-
-  /** (full refreshed stats, CHANGED stats rows): a standing doc's row
-    * changes ONLY when it holds a flipped gram (inc > 0) — the changed
-    * set is therefore batch-scale (batch rows + flip holders), the
-    * relation a touched-range state writer persists per fold (round-7). */
-  private def dupNgramStatsIncrementalPieces(idx: DupNgramIndex,
-      bIds: DataFrame, bGrams: DataFrame): (DataFrame, DataFrame) = {
-    val delta = bGrams.groupBy("gram").agg(count(lit(1)).as("dgf"))
-    // touched grams' union freq; localCheckpoint: feeds batch stats +
-    // the flip detection
-    val touched = delta.join(idx.freq, Seq("gram"), "left")
-      .select(col("gram"),
-        (coalesce(col("gf"), lit(0L)) + col("dgf")).as("ugf"),
-        coalesce(col("gf"), lit(0L)).as("sgf"))
-      .localCheckpoint(true)
-    val bStats = bGrams.join(touched, Seq("gram"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_grams"),
-        sum(when(col("ugf") > 1, 1L).otherwise(0L)).as("n_dup_grams"))
-    val bAll = bIds
-      .join(bStats, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-        coalesce(col("n_dup_grams"), lit(0L)).as("n_dup_grams"))
-    // unique standing grams the batch just made dup: their (single)
-    // standing holders gain one dup gram each
-    val flips = touched.where(col("sgf") === 1 && col("ugf") > 1)
-      .select("gram")
-    val holders = idx.grams.join(broadcast(flips), Seq("gram"), "left_semi")
-      .groupBy("doc_id").agg(count(lit(1)).as("inc"))
-    val sStats = idx.stats.join(holders, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_grams"),
-        (col("n_dup_grams") + coalesce(col("inc"), lit(0L))).as("n_dup_grams"))
-    // changed standing rows = exactly the flip holders (inner join —
-    // every other standing row is bit-unchanged by monotonicity)
-    val sChanged = idx.stats.join(holders, Seq("doc_id"))
-      .select(col("doc_id"), col("n_grams"),
-        (col("n_dup_grams") + col("inc")).as("n_dup_grams"))
-    (sStats.unionByName(bAll), sChanged.unionByName(bAll))
   }
 
   /** Span-level decontamination (the GPT-3-appendix removal unit: cut
@@ -262,38 +199,60 @@ object Decontam {
       .select("doc_id", "span_start", "span_end")
   }
 
-  /** [[foldDupNgramIndex]]'s result plus the two BATCH-SCALE relations a
-    * delta state writer persists instead of the corpus-scale rewrites:
-    * `batchGrams` (the grams the fold appends — the grams relation is
-    * append-only) and `changedStats` (batch rows + flip holders — every
-    * other stats row is unchanged by monotonicity). */
+  /** [[foldDupNgramIndex]]'s refreshed index plus the two BATCH-SCALE
+    * relations a delta state writer persists instead of the corpus-scale
+    * rewrites: `batchGrams` (the grams the fold appends — the grams
+    * relation is append-only) and `changedStats` (batch rows + flip
+    * holders — every other stats row is unchanged by monotonicity). */
   final case class DupNgramFold(
       index: DupNgramIndex, batchGrams: DataFrame, changedStats: DataFrame)
 
-  /** The refreshed index AFTER folding `batch` — what a streaming sink
-    * persists as the next version: grams unioned, frequencies merged
-    * from the batch delta (touched grams only change), stats = the
-    * incremental fold's output. */
+  /** Fold a batch of NEW documents into the standing index: `index` is
+    * what a streaming sink persists as the next version, and its `stats`
+    * equal [[dupNgramStats]] over the union exactly, without re-counting
+    * the standing corpus:
+    *   - batch grams (batch-scale) join the TOUCHED union frequencies
+    *     (standing gf + batch delta — no corpus re-count);
+    *   - a standing doc's stats change ONLY when one of its unique grams
+    *     (standing gf = 1) gains a batch occurrence — the flipped-gram
+    *     set is batch-derived, so the standing holders are reached
+    *     through a broadcast semi-join (a pruned partition read when
+    *     `grams` is stored gram-partitioned; batch ≪ corpus premise).
+    * `index.stats` re-emits the full table (output contract: one row per
+    * doc); `changedStats` is the batch-scale part of it that differs. */
   def foldDupNgramIndex(idx: DupNgramIndex, batch: DataFrame,
-      idCol: String, textCol: String): DupNgramIndex =
-    foldDupNgramIndexDelta(idx, batch, idCol, textCol).index
-
-  /** The fold with its delta relations exposed (round-7 state-at-rest
-    * shape). */
-  def foldDupNgramIndexDelta(idx: DupNgramIndex, batch: DataFrame,
       idCol: String, textCol: String): DupNgramFold = {
     // ONE gram explode per fold: the checkpointed relation feeds all
     // three refreshed parts (grams union, freq merge, stats fold)
     val bGrams = docGrams(batch, idCol, textCol, idx.n).localCheckpoint(true)
-    val freq2 = idx.freq
-      .join(bGrams.groupBy("gram").agg(count(lit(1)).as("dgf")),
-        Seq("gram"), "full_outer")
+    val delta = gramFreq(bGrams, "dgf")
+    val freq = idx.freq.join(delta, Seq("gram"), "full_outer")
       .select(col("gram"),
         (coalesce(col("gf"), lit(0L)) + coalesce(col("dgf"), lit(0L))).as("gf"))
-    val (full, changed) = dupNgramStatsIncrementalPieces(idx,
-      batch.select(col(idCol).as("doc_id")), bGrams)
+    // touched grams' union freq gf beside the standing sgf;
+    // localCheckpoint: feeds the batch stats + the flip detection
+    val touched = delta.join(idx.freq.withColumnRenamed("gf", "sgf"), Seq("gram"), "left")
+      .select(col("gram"),
+        (coalesce(col("sgf"), lit(0L)) + col("dgf")).as("gf"),
+        coalesce(col("sgf"), lit(0L)).as("sgf"))
+      .localCheckpoint(true)
+    val bStats = statsOver(batch.select(col(idCol).as("doc_id")), bGrams, touched)
+    // every touched gram gains ≥ 1 batch occurrence, so a unique standing
+    // gram (sgf = 1) the batch touches becomes dup: its single standing
+    // holder gains one dup gram
+    val flips = touched.where(col("sgf") === 1).select("gram")
+    val holders = idx.grams.join(broadcast(flips), Seq("gram"), "left_semi")
+      .groupBy("doc_id").agg(count(lit(1)).as("inc"))
+    val sStats = idx.stats.join(holders, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_grams"),
+        (col("n_dup_grams") + coalesce(col("inc"), lit(0L))).as("n_dup_grams"))
+    // changed standing rows = exactly the flip holders (inner join —
+    // every other standing row is bit-unchanged by monotonicity)
+    val sChanged = idx.stats.join(holders, Seq("doc_id"))
+      .select(col("doc_id"), col("n_grams"),
+        (col("n_dup_grams") + col("inc")).as("n_dup_grams"))
     DupNgramFold(
-      DupNgramIndex(idx.grams.unionByName(bGrams), freq2, full, idx.n),
-      bGrams, changed)
+      DupNgramIndex(idx.grams.unionByName(bGrams), freq, sStats.unionByName(bStats), idx.n),
+      bGrams, sChanged.unionByName(bStats))
   }
 }

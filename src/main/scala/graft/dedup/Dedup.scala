@@ -128,8 +128,22 @@ object Dedup {
   /** Exact dedup decision table: one row per distinct content hash with the
     * canonical survivor (minimum id) and the duplicate count. */
   def exactGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(md5(col(textCol).cast("binary")).as("content_hash"))
-      .agg(count(lit(1)).as("dup_count"), min(col(idCol)).as("keep_id"))
+    hashGroups(contentHash(df, idCol, textCol))
+      .select(col("content_hash"), col("gsz").as("dup_count"), col("gmin").as("keep_id"))
+
+  /** (id, content_hash): the ONE content hash (md5 of the text bytes) of
+    * the batch table, the index bootstrap and the folds. */
+  private def contentHash(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol).cast("long").as("id"), md5(col(textCol).cast("binary")).as("content_hash"))
+
+  /** (content_hash, gmin, gsz): each hash group's survivor and size. */
+  private def hashGroups(hashed: DataFrame): DataFrame =
+    hashed.groupBy("content_hash").agg(min("id").as("gmin"), count(lit(1)).as("gsz"))
+
+  /** Exact edges (a, b): every doc of `hashed` to its group's survivor. */
+  private def exactEdges(hashed: DataFrame, groups: DataFrame): DataFrame =
+    hashed.join(groups, Seq("content_hash")).where(col("id") =!= col("gmin"))
+      .select(col("id").as("a"), col("gmin").as("b"))
 
   // ---------- minhash --------------------------------------------------------
 
@@ -238,8 +252,10 @@ object Dedup {
   private def sigAgreement(nHashes: Int) =
     expr(s"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)) / cast($nHashes as double)")
 
-  /** Fraction of agreeing minhash components (an unbiased Jaccard estimate). */
-  private def agreement(a: Array[Long], b: Array[Long], nHashes: Int): Double = {
+  /** Fraction of agreeing minhash components (an unbiased Jaccard
+    * estimate): the verify of the batch kernel and of the streaming
+    * bucket state (graft.streaming.Streaming.streamingMinhashPairs). */
+  private[graft] def agreement(a: Array[Long], b: Array[Long], nHashes: Int): Double = {
     var eq = 0
     var k = 0
     while (k < a.length && k < b.length) { if (a(k) == b(k)) eq += 1; k += 1 }
@@ -381,25 +397,15 @@ object Dedup {
           s"minJaccard=$minJaccard, maxBucket=$maxBucket) — a mismatched table would change " +
           "survivor clusters silently")
     }
-    val spark = df.sparkSession
-    val hashed = df.select(
-      col(idCol).cast("long").as("id"),
-      md5(col(textCol).cast("binary")).as("content_hash"))
-    val grp = hashed.groupBy("content_hash")
-      .agg(min("id").as("gmin"), count(lit(1)).as("gsz"))
-    val withG = hashed.join(grp, Seq("content_hash"))
-      .select(col("id"), col("gmin"), (col("gsz") > 1).as("has_exact"))
-    val exactEdges = withG.where(col("id") =!= col("gmin"))
-      .select(col("id").as("a"), col("gmin").as("b"))
+    val hashed = contentHash(df, idCol, textCol)
     // `nearPairs`: a caller that has ALREADY materialized the minhash pair
     // table for the same (input, shingleK, nHashes, rowsPerBand,
     // minJaccard, maxBucket) can pass it in to skip the second signature
     // computation — the catalog surfaces one pair table to two queries
     // this way. The parameter equality is ENFORCED above.
-    val nearEdges = nearPairs.map(_.pairs)
+    val near = nearPairs.map(_.pairs)
       .getOrElse(minhashPairs(df, idCol, textCol, shingleK, nHashes,
         rowsPerBand, minJaccard, maxBucket))
-      .select(col("id_a").as("a"), col("id_b").as("b"))
     // containmentPairs: (doc_a = the CONTAINED doc, doc_b = its container)
     // — e.g. graft.queries.Queries.containmentPairs. Edges join the two
     // into one family; the victim flag drives the "contained" tier.
@@ -417,14 +423,14 @@ object Dedup {
         .join(hashed.select(col("id").as("doc_a")), Seq("doc_a"), "left_semi")
         .join(hashed.select(col("id").as("doc_b")), Seq("doc_b"), "left_semi")
         .localCheckpoint(true))
-    val contEdges = cont.map(
-      _.select(col("doc_a").as("a"), col("doc_b").as("b")))
-    val edges = contEdges.foldLeft(exactEdges.unionByName(nearEdges))(_ unionByName _)
-    val cc = graft.er.Clustering.connectedComponents(spark, edges)
-    // containment victims: pair-table scale, distinct doc ids ≤ corpus
-    withTiers(withG.join(cc, Seq("id"), "left"),
-      cont.map(_.select(col("doc_a").as("id")).distinct()))
+    // the bootstrap's cluster-and-decide step, uncached
+    clusterAndDecide(df.sparkSession, hashed, hashGroups(hashed), near, identity,
+      containment = cont, victims = cont.map(victimsOf))._2
   }
+
+  /** (id): the contained docs of a (doc_a, doc_b) containment pair table. */
+  private def victimsOf(cont: DataFrame): DataFrame =
+    cont.select(col("doc_a").as("id")).distinct()
 
   /** The tier policy, written once for the batch table, the index
     * bootstrap and both folds: survivor_id = coalesce(cluster, id), tier
@@ -518,10 +524,10 @@ object Dedup {
       maxBucket: Int = DefaultMaxBucket,
       cache: DataFrame => DataFrame = identity): SurvivorIndex =
     buildIndex(df, idCol, textCol, shingleK, nHashes, rowsPerBand,
-      minJaccard, maxBucket, cache, extraEdges = None, victims = None)
+      minJaccard, maxBucket, cache, containment = None, victims = None)
 
   /** [[buildSurvivorIndex]] with the containment tier of
-    * [[buildFullSurvivorIndex]] folded in: `extraEdges` (a, b) are
+    * [[buildFullSurvivorIndex]] folded in: the `containment` pairs are
     * contracted into the standing clusters with the exact and near edges,
     * and the standing decisions are assembled against `victims` — so the
     * one decision table the bootstrap persists is the one it returns. */
@@ -535,44 +541,43 @@ object Dedup {
       minJaccard: Double,
       maxBucket: Int,
       cache: DataFrame => DataFrame,
-      extraEdges: Option[DataFrame],
+      containment: Option[DataFrame],
       victims: Option[DataFrame]): SurvivorIndex = {
-    val spark = df.sparkSession
     val nBands = nHashes / rowsPerBand
-    val hashed = cache(df.select(
-      col(idCol).cast("long").as("id"),
-      md5(col(textCol).cast("binary")).as("content_hash")))
+    val hashed = cache(contentHash(df, idCol, textCol))
     val sigs = cache(minhashSigs(df, idCol, textCol, shingleK, nHashes))
     val banded = cache(bandedSigs(sigs, nBands, rowsPerBand))
     val bucketSizes = cache(
       banded.groupBy("bucket").agg(count(lit(1)).as("bsz")))
-    val groups = cache(hashed.groupBy("content_hash")
-      .agg(min("id").as("gmin"), count(lit(1)).as("gsz")))
-    val (clusters, decisions) = clusterAndDecide(spark, hashed, groups, sigs,
-      bucketSizes, nHashes, rowsPerBand, minJaccard, maxBucket, cache, extraEdges, victims)
+    val groups = cache(hashGroups(hashed))
+    val (clusters, decisions) = clusterAndDecide(df.sparkSession, hashed, groups,
+      restNearPairs(sigs, bucketSizes, nHashes, rowsPerBand, minJaccard, maxBucket),
+      cache, containment, victims)
     SurvivorIndex(hashed, sigs, banded, bucketSizes, groups, clusters,
       shingleK, nHashes, rowsPerBand, minJaccard, maxBucket, decisions)
   }
 
-  /** An index's cluster state from its at-rest frames: CC over the exact
-    * and near edges plus `extraEdges` (the containment tier), and the
-    * decision table assembled against `victims`. The near edges read the
-    * at-rest signatures with the at-rest bucket census, so no second
-    * shingling pass or bucket count runs; the clusters contract the SAME
-    * edge classes every later fold adds. */
-  private def clusterAndDecide(spark: SparkSession,
-      hashed: DataFrame, groups: DataFrame, sigs: DataFrame, bucketSizes: DataFrame,
-      nHashes: Int, rowsPerBand: Int, minJaccard: Double, maxBucket: Int,
-      cache: DataFrame => DataFrame,
-      extraEdges: Option[DataFrame], victims: Option[DataFrame]): (DataFrame, DataFrame) = {
-    val exactEdges = hashed.join(groups, Seq("content_hash"))
-      .where(col("id") =!= col("gmin"))
-      .select(col("id").as("a"), col("gmin").as("b"))
-    val nearEdges = minhashPairsFromRows(minhashRows(sigs, nHashes, rowsPerBand),
+  /** The near pairs of an index's at-rest signatures under its at-rest
+    * bucket census: no second shingling pass or bucket count. */
+  private def restNearPairs(sigs: DataFrame, bucketSizes: DataFrame,
+      nHashes: Int, rowsPerBand: Int, minJaccard: Double, maxBucket: Int): DataFrame =
+    minhashPairsFromRows(minhashRows(sigs, nHashes, rowsPerBand),
       BlockPairs.hotKeys(bucketSizes, maxBucket), nHashes, minJaccard)
-      .select(col("id_a").as("a"), col("id_b").as("b"))
-    val clusters = cache(graft.er.Clustering.connectedComponents(
-      spark, extraEdges.foldLeft(exactEdges.unionByName(nearEdges))(_ unionByName _)))
+
+  /** The cluster-and-decide step written once for the batch table
+    * ([[survivors]]) and the index bootstraps: CC over the exact edges of
+    * `hashed`/`groups`, the near pairs (id_a, id_b) and the `containment`
+    * pairs (doc_a, doc_b), then the decision table assembled against
+    * `victims`. The index clusters contract the SAME edge classes every
+    * later fold adds. */
+  private def clusterAndDecide(spark: SparkSession,
+      hashed: DataFrame, groups: DataFrame, nearPairs: DataFrame,
+      cache: DataFrame => DataFrame,
+      containment: Option[DataFrame], victims: Option[DataFrame]): (DataFrame, DataFrame) = {
+    val nearEdges = nearPairs.select(col("id_a").as("a"), col("id_b").as("b"))
+    val contEdges = containment.map(_.select(col("doc_a").as("a"), col("doc_b").as("b")))
+    val clusters = cache(graft.er.Clustering.connectedComponents(spark,
+      contEdges.foldLeft(exactEdges(hashed, groups).unionByName(nearEdges))(_ unionByName _)))
     (clusters, cache(assembleDecisions(hashed, groups, clusters, victims)))
   }
 
@@ -660,9 +665,7 @@ object Dedup {
       idCol: String,
       textCol: String): IncrCore = {
     val nBands = idx.nHashes / idx.rowsPerBand
-    val bHashed = batch.select(
-      col(idCol).cast("long").as("id"),
-      md5(col(textCol).cast("binary")).as("content_hash"))
+    val bHashed = contentHash(batch, idCol, textCol)
     val bSigs = persistSig(
       minhashSigs(batch, idCol, textCol, idx.shingleK, idx.nHashes))
 
@@ -674,8 +677,8 @@ object Dedup {
     // (blocks reclaimed by the ContextCleaner, the EvalParagraphs
     // pattern; at deployment this materialization IS the next index
     // version being written anyway)
-    val bGroups = bHashed.groupBy("content_hash")
-      .agg(min("id").as("bmin"), count(lit(1)).as("bsz"))
+    val bGroups = hashGroups(bHashed)
+      .select(col("content_hash"), col("gmin").as("bmin"), col("gsz").as("bsz"))
     val sGroups = idx.groups.select(col("content_hash"),
       col("gmin").as("smin"), col("gsz").as("ssz"))
     val merged = sGroups.join(bGroups, Seq("content_hash"), "full_outer")
@@ -689,9 +692,7 @@ object Dedup {
     // new exact edges: every batch doc to its union group min, plus a
     // relink edge when a batch doc took over a standing group's min (the
     // standing members already connect to the OLD min in idx.clusters)
-    val eBatch = bHashed.join(merged, Seq("content_hash"))
-      .where(col("id") =!= col("gmin"))
-      .select(col("id").as("a"), col("gmin").as("b"))
+    val eBatch = exactEdges(bHashed, merged)
     val eRelink = merged
       .where(col("smin").isNotNull && col("smin") =!= col("gmin"))
       .select(col("smin").as("a"), col("gmin").as("b"))
@@ -783,8 +784,12 @@ object Dedup {
     *   - `victims` (id): standing containment victims. Monotone — docs
     *     never leave the corpus, so a standing victim stays one.
     * `core.clusters` is CC over exact ∪ near ∪ CONTAINMENT edges (built
-    * via buildIndex's extraEdges hook), matching the edge classes
-    * every fold adds. */
+    * via buildIndex's containment hook), matching the edge classes
+    * every fold adds. Bootstrap and fold run the batch table's steps:
+    * `Queries.sortedToks`, `containmentPrune` and `containmentVerify` for
+    * the containment tier; [[contentHash]], [[hashGroups]] and, at
+    * bootstrap, [[clusterAndDecide]] (shared with [[survivors]]) for the
+    * core. */
   final case class FullSurvivorIndex(
       core: SurvivorIndex,
       tokFreq: DataFrame,
@@ -849,16 +854,13 @@ object Dedup {
     import graft.queries.Queries
     val d = df.select(col(idCol).cast("long").as("doc_id"),
       col("lang"), col("source"), col(textCol).as("text"))
-    val tokFreq = cache(
-      d.select(explode(array_distinct(split(col("text"), " "))).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("tf")))
-    val toks = cache(Queries.sortedToksFrozen(d, tokFreq))
+    val tokFreq = cache(Queries.tokFreq(d))
+    val toks = cache(Queries.sortedToks(d, tokFreq))
     // the bootstrap's own containment pairs (standing-standing), feeding
     // edges + victims; localCheckpoint = the two-consumer survivors() rule
     val cp = Queries.containmentPairsFrom(toks)
       .select("doc_a", "doc_b").localCheckpoint(true)
-    val contEdges = cp.select(col("doc_a").as("a"), col("doc_b").as("b"))
-    val victimsFrame = cache(cp.select(col("doc_a").as("id")).distinct())
+    val victimsFrame = cache(victimsOf(cp))
     // the FULL index's standing decisions are CONTAINMENT-AWARE (victims
     // flagged, clusters over all three edge tiers) — they must not share
     // the plain core's decision table (two cluster states, two decision
@@ -874,14 +876,14 @@ object Dedup {
             s"runs with (shingleK=$shingleK, nHashes=$nHashes, rowsPerBand=$rowsPerBand, " +
             s"minJaccard=$minJaccard, maxBucket=$maxBucket)")
         // re-cluster the core's at-rest frames with containment in
-        val (clusters, decisions) = clusterAndDecide(df.sparkSession, c.hashed,
-          c.groups, c.sigs, c.bucketSizes, c.nHashes, c.rowsPerBand, c.minJaccard, c.maxBucket,
-          cache, extraEdges = Some(contEdges), victims = Some(victimsFrame))
+        val (clusters, decisions) = clusterAndDecide(df.sparkSession, c.hashed, c.groups,
+          restNearPairs(c.sigs, c.bucketSizes, c.nHashes, c.rowsPerBand, c.minJaccard, c.maxBucket),
+          cache, containment = Some(cp), victims = Some(victimsFrame))
         c.copy(clusters = clusters, decisions = decisions)
       case None =>
         buildIndex(df, idCol, textCol, shingleK, nHashes,
           rowsPerBand, minJaccard, maxBucket, cache,
-          extraEdges = Some(contEdges), victims = Some(victimsFrame))
+          containment = Some(cp), victims = Some(victimsFrame))
     }
     // posting-list cap at rest (round-6 verdict): census the inverted
     // index, trim above-cap keys to the maxPosting hash-smallest
@@ -930,7 +932,7 @@ object Dedup {
     * the banded probe; a pruned partition read when the index is stored
     * token-partitioned). Standing-standing pairs are already contracted
     * in core.clusters / victims, so untouched keys cannot contribute. */
-  private def incrContainmentPairs(
+  private[graft] def incrContainmentPairs(
       fidx: FullSurvivorIndex,
       batch: DataFrame,
       idCol: String,
@@ -940,7 +942,7 @@ object Dedup {
       col("lang"), col("source"), col(textCol).as("text"))
     // batch tokens under the FROZEN order; localCheckpoint: feeds four
     // consumers (both explodes + the union verification relation)
-    val bToks = Queries.sortedToksFrozen(b, fidx.tokFreq).localCheckpoint(true)
+    val bToks = Queries.sortedToks(b, fidx.tokFreq).localCheckpoint(true)
     val bPref = Queries.contPrefixExplode(bToks)
     val bFull = Queries.contFullExplode(bToks)
     // capped-regime accounting (no silent truncation): when the standing
@@ -969,23 +971,11 @@ object Dedup {
       broadcast(bFull.select("lang", "source", "tok").distinct()),
       Seq("lang", "source", "tok"), "left_semi")
     val cand2 = standingPref.join(bFull, Seq("lang", "source", "tok"))
-    // the same impossible-candidate pruning as containmentCandidates,
-    // BEFORE the dedup shuffle
-    val cands = cand1.unionByName(cand2)
-      .where(col("doc_a") =!= col("doc_b") &&
-        col("nb") * lit(5) >= col("na") * lit(4))
-      .select("doc_a", "doc_b").distinct()
-    // integer verification against the union token relation (candidates
-    // are batch-scale; AQE broadcasts them into the corpus-scale fetches)
-    val allToks = fidx.toks.unionByName(bToks)
-    cands
-      .join(allToks.select(col("doc_id").as("doc_a"),
-        col("stoks").as("toks_a"), col("n").as("n_a")), Seq("doc_a"))
-      .join(allToks.select(col("doc_id").as("doc_b"),
-        col("stoks").as("toks_b")), Seq("doc_b"))
-      .withColumn("inter",
-        size(array_intersect(col("toks_a"), col("toks_b"))).cast("bigint"))
-      .where(col("inter") * lit(5) >= col("n_a") * lit(4))
+    // the batch table's candidate prune (before the dedup shuffle) and
+    // verify, against the union token relation (candidates are
+    // batch-scale; AQE broadcasts them into the corpus-scale fetches)
+    Queries.containmentVerify(Queries.containmentPrune(cand1.unionByName(cand2)),
+      fidx.toks.unionByName(bToks))
       .select("doc_a", "doc_b")
   }
 
@@ -1014,7 +1004,7 @@ object Dedup {
       .localCheckpoint(true)
     val ccd = graft.er.Clustering.incrementalClustersWithDelta(
       batch.sparkSession, idx.clusters, newEdges)
-    val newVictims = newCont.select(col("doc_a").as("id")).distinct()
+    val newVictims = victimsOf(newCont)
     val victims = fidx.victims.unionByName(newVictims).distinct()
     incrAssembleDelta(idx, c, ccd,
       unionVictims = Some(victims), newVictims = Some(newVictims))

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Mention
 
-/** Candidate blocking (SURVEY.md §2.4 J1/J9, north_star: "normalized-mention
-  * + URL-domain + MinHash-LSH keys materialized as salted, repartitioned
-  * Datasets").
+/** Candidate blocking (SURVEY.md §2.4 J1/J9): normalized-surface,
+  * surface-prefix and context MinHash-LSH keys, sub-bucketed and
+  * repartitioned by the BlockPairs operator.
   *
   * Each mention emits a small set of blocking keys; candidate pairs are the
   * within-block id pairs. Skew discipline (§4.3) is the BlockPairs
@@ -21,14 +21,12 @@ import graft.model.Mention
   */
 object Blocking {
 
-  final case class Config(
-      useSurfaceKey: Boolean = true,
-      usePrefixKey: Boolean = true,
-      useDomainKey: Boolean = false, // off by default: domain blocks are huge; enable with a tight cap
-      useMinhashKey: Boolean = true,
-      minhashHashes: Int = 8,
-      minhashBandRows: Int = 2,
-      maxBlock: Int = 512)
+  /** `maxBlock`: the sub-bucketing cap (BlockPairs). */
+  final case class Config(maxBlock: Int = 512)
+
+  /** The context MinHash key: 8 hashes in bands of 2 rows. */
+  private val MinhashHashes = 8
+  private val MinhashBandRows = 2
 
   /** Prefix key: first 4 chars of the first token + first 2 of the second —
     * invariant under the tail-of-word typo class that pair scoring is meant
@@ -66,19 +64,20 @@ object Blocking {
     }.toSeq
   }
 
-  def keysFor(m: Mention, cfg: Config): Seq[String] = {
+  def keysFor(m: Mention): Seq[String] = {
     val b = Seq.newBuilder[String]
-    if (cfg.useSurfaceKey && m.norm_surface.nonEmpty) b += ("s:" + m.norm_surface)
-    if (cfg.usePrefixKey && m.norm_surface.nonEmpty) b += prefixKey(m.norm_surface)
-    if (cfg.useDomainKey) b += ("d:" + m.domain)
-    if (cfg.useMinhashKey) b ++= bandKeys(m.context, cfg.minhashHashes, cfg.minhashBandRows)
+    if (m.norm_surface.nonEmpty) {
+      b += ("s:" + m.norm_surface)
+      b += prefixKey(m.norm_surface)
+    }
+    b ++= bandKeys(m.context, MinhashHashes, MinhashBandRows)
     b.result().distinct
   }
 
   /** (key, id) exploded table — the blocking relation. */
-  def keyed(mentions: Dataset[Mention], cfg: Config): DataFrame = {
+  def keyed(mentions: Dataset[Mention]): DataFrame = {
     import mentions.sparkSession.implicits._
-    mentions.flatMap(m => keysFor(m, cfg).map(k => (k, m.mention_id))).toDF("key", "id")
+    mentions.flatMap(m => keysFor(m).map(k => (k, m.mention_id))).toDF("key", "id")
   }
 
   /** (bkey, id, ns, ctx, gold, bkeys) — the blocking relation carrying
@@ -95,12 +94,12 @@ object Blocking {
   def keyedWithAttrs(mentions: Dataset[Mention], cfg: Config): DataFrame = {
     import mentions.sparkSession.implicits._
     val rows = mentions.map { m =>
-      (m.mention_id, keysFor(m, cfg), m.norm_surface,
+      (m.mention_id, keysFor(m), m.norm_surface,
         m.context.map(graft.dedup.Dedup.hashString).toArray.sorted, m.gold_entity)
     }.toDF("id", "keys", "ns", "ctx", "gold")
     // census over the bare (key, id) relation: the keying pass alone,
     // without the context hashing the rows carry
-    val hot = BlockPairs.hotKeys(keyed(mentions, cfg).groupBy("key").count(), cfg.maxBlock)
+    val hot = BlockPairs.hotKeys(keyed(mentions).groupBy("key").count(), cfg.maxBlock)
     BlockPairs.bucketed(rows, hot)
   }
 
@@ -114,7 +113,7 @@ object Blocking {
     * bounded non-equi self-join, NOT a partition-less global window and
     * NOT percentile_approx (whose sketch boundaries no other engine
     * reproduces). */
-  def blockProfile(mentions: Dataset[Mention], cfg: Config = Config()): DataFrame = {
+  def blockProfile(mentions: Dataset[Mention]): DataFrame = {
     // ONE pass over the corpus-scale keyed relation: block sizes → the
     // distinct-size histogram, materialized once (lazy localCheckpoint)
     // so the downstream branches (totals, the cumulative self-join, p99)
@@ -125,9 +124,9 @@ object Blocking {
     // persist(): checkpointed RDD blocks are reclaimed by the
     // ContextCleaner when the plan becomes unreachable, whereas a
     // cacheManager persist would pin one session-lifetime entry per
-    // distinct (mentions, cfg) input with no release point in this
+    // distinct mentions input with no release point in this
     // single-expression API.
-    val g = keyed(mentions, cfg)
+    val g = keyed(mentions)
       .groupBy("key")
       .agg(count("*").as("block_size"))
       .groupBy("block_size")

@@ -46,24 +46,14 @@ object PairEval {
     * cluster assignment, eval). */
   def runPipeline(
       spark: SparkSession,
-      mentions: Dataset[Mention],
-      blockCfg: Blocking.Config = Blocking.Config(),
-      scoreCfg: Scoring.Config = Scoring.Config(),
-      pairStorage: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): (DataFrame, DataFrame, PairwiseEval) = {
+      mentions: Dataset[Mention]): (DataFrame, DataFrame, PairwiseEval) = {
     import spark.implicits._
     // fused scale path: one co-partitioning shuffle, scoring map-side,
     // each labeled pair emitted once. The pair universe is read twice
-    // (edges + eval join); its persistence is CONFIGURABLE because at web
-    // scale (10^12 pairs) a memory cache is a spill storm — callers pick DISK_ONLY (sequential spill, no GC
-    // churn) or NONE (recompute the fused stage, often cheaper than
-    // spilling) for the biggest runs.
-    val keyed = Blocking.keyedWithAttrs(mentions, blockCfg)
-    val scored0 = Scoring.scoreFused(keyed, scoreCfg)
+    // (edges + eval join), so it is persisted (spilling to disk)
+    val scored = Scoring.scoreFused(Blocking.keyedWithAttrs(mentions, Blocking.Config()))
       .select("a", "b", "gold_a", "gold_b", "is_match")
-    val scored =
-      if (pairStorage == org.apache.spark.storage.StorageLevel.NONE) scored0
-      else scored0.persist(pairStorage)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val edges = scored.where(col("is_match")).select(col("a"), col("b"))
     val ids = mentions.select(col("mention_id").as("id"))
     val clusters = Clustering.assign(spark, ids, edges).cache()

@@ -22,12 +22,12 @@ import graft.functions.{FastLevenshteinExpr, JaroWinklerExpr, SortedLongJaccardE
   */
 object Scoring {
 
-  final case class Config(
-      jwThreshold: Double = 0.92,
-      scoreThreshold: Double = 0.80,
-      jaccardOnlyThreshold: Double = 0.60,
-      wJw: Double = 0.6,
-      wJaccard: Double = 0.4)
+  // the match rule's thresholds and weights (see score)
+  private val JwThreshold = 0.92
+  private val ScoreThreshold = 0.80
+  private val JaccardOnlyThreshold = 0.60
+  private val WJw = 0.6
+  private val WJaccard = 0.4
 
   /** Standard Jaro-Winkler similarity (public algorithm; Winkler prefix
     * boost p=0.1 over at most 4 chars). */
@@ -87,10 +87,10 @@ object Scoring {
     * jw, lev, jaccard, score, is_match), one row per candidate pair
     * (a < b, sharing at least one block), scored once in its least common
     * block by the BlockPairs kernel — consumers need no pair-id dedupe. */
-  def scoreFused(keyed: DataFrame, cfg: Config = Config()): DataFrame = {
+  def scoreFused(keyed: DataFrame): DataFrame = {
     import keyed.sparkSession.implicits._
     BlockPairs.pairs[Attrs, Decoded, ScoredPair](keyed, struct("ns", "ctx", "gold"))(
-      new Decoded(_))((x, y) => Some(score(x, y, cfg))).toDF()
+      new Decoded(_))((x, y) => Some(score(x, y))).toDF()
   }
 
   /** A mention's scoring attributes, decoded once per block, not per pair. */
@@ -101,13 +101,13 @@ object Scoring {
   }
 
   private def score(
-      mx: BlockPairs.Member[Decoded], my: BlockPairs.Member[Decoded], cfg: Config): ScoredPair = {
+      mx: BlockPairs.Member[Decoded], my: BlockPairs.Member[Decoded]): ScoredPair = {
     val (x, y) = (mx.payload, my.payload)
     val jw = JaroWinklerExpr.similarity(x.ns, y.ns)
     val jaccard = SortedLongJaccardExpr.jaccard(x.ctx, y.ctx)
-    val score = cfg.wJw * jw + cfg.wJaccard * jaccard
-    val isMatch = (jw >= cfg.jwThreshold && score >= cfg.scoreThreshold) ||
-      jaccard >= cfg.jaccardOnlyThreshold
+    val score = WJw * jw + WJaccard * jaccard
+    val isMatch = (jw >= JwThreshold && score >= ScoreThreshold) ||
+      jaccard >= JaccardOnlyThreshold
     // levenshtein is informational (not part of the match rule) — computed
     // for matches only, -1 elsewhere. FastLevenshteinExpr, not the
     // built-in: matched pairs are overwhelmingly identical or

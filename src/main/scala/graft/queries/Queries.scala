@@ -172,9 +172,9 @@ object Queries {
   // standard keep-min dedup decision table (non-trivial even when the test
   // corpus has no exact dups; real corpora have many).
   def q10ExactDupDocs(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "documents")
-      .groupBy(md5(col("text").cast("binary")).as("text_md5"))
-      .agg(count(lit(1)).as("dup_count"), min(col("doc_id")).as("keep_doc_id"))
+    graft.dedup.Dedup.exactGroups(t(spark, dir, "documents"), "doc_id", "text")
+      .select(col("content_hash").as("text_md5"), col("dup_count"),
+        col("keep_id").as("keep_doc_id"))
 
   val q10Sql: String =
     """SELECT md5(text) AS text_md5, count(*) AS dup_count, min(doc_id) AS keep_doc_id
@@ -271,23 +271,32 @@ object Queries {
   // stage shuffles linear data (token explode, pair-id dedup, two id
   // joins), so the plan survives blocks that grow with the corpus.
 
-  /** Per-doc globally-sorted distinct-token table:
-    * (doc_id, lang, source, n, stoks) with stoks rare-first. */
-  private[graft] def q15SortedToks(docs: DataFrame): DataFrame = {
+  /** [[sortedToks]] rare-first under the frequencies of `docs` itself. */
+  private[graft] def q15SortedToks(docs: DataFrame): DataFrame =
+    sortedToks(docs, tokFreq(docs))
+
+  /** (tok, tf): docs per token. An aggregate joined back, NOT a window by
+    * tok: map-side partial (tiny shuffle), and AQE can broadcast the
+    * vocab-sized dim or split a skewed join partition, whereas a per-token
+    * window pins every occurrence of a hot token into one task. */
+  private[graft] def tokFreq(docs: DataFrame): DataFrame =
+    docs.select(explode(array_distinct(split(col("text"), " "))).as("tok"))
+      .groupBy("tok").agg(count(lit(1)).as("tf"))
+
+  /** The ONE token sort: (doc_id, lang, source, n, stoks), each doc's
+    * distinct tokens ordered by (tf, tok) under `tokFreq`. The containment
+    * index (Dedup.FullSurvivorIndex) passes its FROZEN bootstrap table, so
+    * every fold sorts under the same order (any consistent total order
+    * keeps the prefix filter lossless); unseen tokens get tf = 0. */
+  private[graft] def sortedToks(docs: DataFrame, tokFreq: DataFrame): DataFrame = {
     val d = docs.select(col("doc_id"), col("lang"), col("source"),
       array_distinct(split(col("text"), " ")).as("toks"))
-    // token frequency via aggregate + equi-join, NOT a window partitioned
-    // by tok: the aggregate is map-side partial (tiny shuffle) and AQE can
-    // broadcast the vocab-sized dim or split a skewed join partition,
-    // whereas a per-token window would pin every occurrence of a hot
-    // token ("the") into one task with no skew remedy
-    val tokFreq = d.select(explode(col("toks")).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("tf"))
     d.select(col("doc_id"), col("lang"), col("source"),
         size(col("toks")).as("n"), explode(col("toks")).as("tok"))
-      .join(tokFreq, Seq("tok"))
+      .join(tokFreq, Seq("tok"), "left")
       .groupBy("doc_id", "lang", "source", "n")
-      .agg(expr("transform(array_sort(collect_list(struct(tf, tok))), s -> s.tok)")
+      .agg(expr("transform(array_sort(collect_list(named_struct(" +
+        "'tf', coalesce(tf, cast(0 as bigint)), 'tok', tok))), s -> s.tok)")
         .as("stoks"))
   }
 
@@ -337,12 +346,12 @@ object Queries {
     * q15_jaccard_pairs and dd_containment_pairs — one token-frequency
     * aggregation + sort per session instead of one per query (persisted,
     * doc-scale but narrow: (ids, n, stoks)). */
-  private def sortedToks(spark: SparkSession, dir: String): DataFrame =
+  private def memoSortedToks(spark: SparkSession, dir: String): DataFrame =
     graft.util.SessionMemo.frame(spark, s"q15.sortedToks|$dir")(
       q15SortedToks(t(spark, dir, "documents")))
 
   def q15JaccardPairs(spark: SparkSession, dir: String): DataFrame =
-    q15PairsFrom(sortedToks(spark, dir))
+    q15PairsFrom(memoSortedToks(spark, dir))
 
   /** Asymmetric containment near-dup pairs: ordered (doc_a, doc_b) where
     * |A∩B| / |A| ≥ 0.8 over distinct-token sets within a (lang, source)
@@ -362,26 +371,6 @@ object Queries {
     * construction of the rare-first order). */
   private[graft] def containmentPairs(docs: DataFrame): DataFrame =
     containmentPairsFrom(q15SortedToks(docs).localCheckpoint(true))
-
-  /** [[q15SortedToks]] under a CALLER-SUPPLIED (frozen) token-frequency
-    * table instead of frequencies recomputed from `docs` — the
-    * incremental-containment shape (Dedup.FullSurvivorIndex): the standing
-    * index freezes its corpus order at bootstrap and sorts every later
-    * batch's tokens under the SAME order, so the prefix-filter argument
-    * (any consistent total order is lossless) keeps holding across folds.
-    * Unseen tokens get tf = 0 (rarest tier — ties broken by the token
-    * string, so (coalesce(tf,0), tok) stays a total order). */
-  private[graft] def sortedToksFrozen(docs: DataFrame, tokFreq: DataFrame): DataFrame = {
-    val d = docs.select(col("doc_id"), col("lang"), col("source"),
-      array_distinct(split(col("text"), " ")).as("toks"))
-    d.select(col("doc_id"), col("lang"), col("source"),
-        size(col("toks")).as("n"), explode(col("toks")).as("tok"))
-      .join(tokFreq, Seq("tok"), "left")
-      .groupBy("doc_id", "lang", "source", "n")
-      .agg(expr("transform(array_sort(collect_list(named_struct(" +
-        "'tf', coalesce(tf, cast(0 as bigint)), 'tok', tok))), s -> s.tok)")
-        .as("stoks"))
-  }
 
   /** The contained-side prefix explode: the first n − ⌈0.8n⌉ + 1 tokens
     * of each doc in the global order (required overlap o = ⌈4n/5⌉ in
@@ -404,24 +393,28 @@ object Queries {
       col("doc_id").as("doc_b"), col("n").as("nb"),
       explode(col("stoks")).as("tok"))
 
-  private[graft] def containmentCandidates(sorted: DataFrame): DataFrame = {
-    val pref = contPrefixExplode(sorted)
-    val full = contFullExplode(sorted)
-    // container-size lower bound: inter ≤ n_b, so 5·n_b < 4·n_a can
-    // never verify — prune impossible (big contained, tiny container)
-    // candidates BEFORE the dedup shuffle and the two fetch joins
-    // (q15Candidates' analogue of its length-ratio filter)
-    pref.join(full, Seq("lang", "source", "tok"))
-      .where(col("doc_a") =!= col("doc_b") &&
+  private[graft] def containmentCandidates(sorted: DataFrame): DataFrame =
+    containmentPrune(contPrefixExplode(sorted)
+      .join(contFullExplode(sorted), Seq("lang", "source", "tok")))
+
+  /** The ONE containment candidate prune over prefix ⋈ inverted-index rows
+    * (doc_a, na, doc_b, nb), before the pair-id dedup: inter ≤ n_b, so
+    * 5·n_b < 4·n_a can never verify (q15Candidates' length-ratio analogue). */
+  private[graft] def containmentPrune(cands: DataFrame): DataFrame =
+    cands.where(col("doc_a") =!= col("doc_b") &&
         col("nb") * lit(5) >= col("na") * lit(4))
       .select("doc_a", "doc_b").distinct()
-  }
 
-  private[graft] def containmentPairsFrom(sorted: DataFrame): DataFrame = {
-    val cands = containmentCandidates(sorted)
-    val toksA = sorted.select(col("doc_id").as("doc_a"),
+  private[graft] def containmentPairsFrom(sorted: DataFrame): DataFrame =
+    containmentVerify(containmentCandidates(sorted), sorted)
+
+  /** The ONE containment verify: fetch both token lists of each candidate
+    * from `toks` (the fold passes standing ∪ batch) and keep 5·inter ≥ 4·n_a,
+    * integer-exact. Output (doc_a, doc_b, inter, n_a). */
+  private[graft] def containmentVerify(cands: DataFrame, toks: DataFrame): DataFrame = {
+    val toksA = toks.select(col("doc_id").as("doc_a"),
       col("stoks").as("toks_a"), col("n").as("n_a"))
-    val toksB = sorted.select(col("doc_id").as("doc_b"), col("stoks").as("toks_b"))
+    val toksB = toks.select(col("doc_id").as("doc_b"), col("stoks").as("toks_b"))
     cands.join(toksA, Seq("doc_a")).join(toksB, Seq("doc_b"))
       .withColumn("inter",
         size(array_intersect(col("toks_a"), col("toks_b"))).cast("bigint"))
@@ -437,7 +430,7 @@ object Queries {
     * table is pair-scale. */
   def ddContainmentPairs(spark: SparkSession, dir: String): DataFrame =
     graft.util.SessionMemo.frame(spark, s"dd.containmentPairs|$dir")(
-      containmentPairsFrom(sortedToks(spark, dir)))
+      containmentPairsFrom(memoSortedToks(spark, dir)))
 
   val ddContainmentSql: String =
     """SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,

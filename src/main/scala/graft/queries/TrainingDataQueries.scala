@@ -145,31 +145,10 @@ object TrainingDataQueries {
       .select(col("doc_id"), col("keep").as("gopher_keep"))
       .localCheckpoint(true)
     val s1 = g.where(col("gopher_keep")).select("doc_id")
-    val docs1 = dall.join(s1, Seq("doc_id"), "left_semi")
-    val aIds = s1.select(col("doc_id").as("id_a"))
-    val bIds = s1.select(col("doc_id").as("id_b"))
-    val pairs1 = ddMinhashPairs(spark, dir)
-      .join(aIds, Seq("id_a"), "left_semi").join(bIds, Seq("id_b"), "left_semi")
-    val cont1 = Queries.ddContainmentPairs(spark, dir)
-      .join(s1.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
-      .join(s1.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
-    // localCheckpoint: the stage-2 decision table feeds the cap subset
-    // AND the verdict join (node-scale rows; see the stage-1 note)
-    val surv = Dedup.survivors(docs1, "doc_id", "text",
-      shingleK = MhShingleK, nHashes = MhNHashes, rowsPerBand = MhRowsPerBand,
-      minJaccard = MhMinJaccard,
-      nearPairs = Some(Dedup.NearPairTable(pairs1,
-        MhShingleK, MhNHashes, MhRowsPerBand, MhMinJaccard, Dedup.DefaultMaxBucket)),
-      containmentPairs = Some(cont1))
-      .localCheckpoint(true)
-    val s2 = surv.where(col("tier") === "keep").select(col("id").as("doc_id"))
-    val cap = SourceCap.sourceCap(
-      dall.join(s2, Seq("doc_id"), "left_semi"), n = SourceCapN)
-      .select(col("doc_id"), col("kept").as("cap_kept"))
+    val (dedupKeep, cap) = dedupAndCap(spark, dir, dall, s1)
     dall.select("doc_id")
       .join(g, Seq("doc_id"), "left")
-      .join(surv.select(col("id").as("doc_id"),
-        (col("tier") === "keep").as("dedup_keep")), Seq("doc_id"), "left")
+      .join(dedupKeep, Seq("doc_id"), "left")
       .join(cap, Seq("doc_id"), "left")
       .select(col("doc_id"),
         // NULL keep (null text / null n_chars) must drop as 'gopher',
@@ -212,6 +191,29 @@ object TrainingDataQueries {
       .join(g, Seq("doc_id")).where(col("gopher_keep"))
       .join(dc, Seq("doc_id")).where(!col("contaminated"))
       .select("doc_id")
+    val (dedupKeep, cap) = dedupAndCap(spark, dir, dall, s1)
+    dall.select("doc_id")
+      .join(g, Seq("doc_id"), "left")
+      .join(dc, Seq("doc_id"), "left")
+      .join(dedupKeep, Seq("doc_id"), "left")
+      .join(cap, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        when(isEval, lit("eval"))
+          // the curatePipeline NULL-keep rule (oracle: keep IS NOT TRUE)
+          .when(!coalesce(col("gopher_keep"), lit(false)), lit("gopher"))
+          .when(col("contaminated"), lit("decontam"))
+          .when(!col("dedup_keep"), lit("dedup"))
+          .when(!col("cap_kept"), lit("cap"))
+          .otherwise(lit("keep")).as("verdict"))
+  }
+
+  /** The dedup-and-cap tail of both curate pipelines, over the docs
+    * `s1` (doc_id) the earlier stages kept: the session's minhash and
+    * containment pair tables restricted to `s1`, fused survivors over the
+    * `s1` docs, and the per-source cap over their keepers. Returns
+    * (doc_id, dedup_keep) and (doc_id, cap_kept). */
+  private def dedupAndCap(spark: SparkSession, dir: String, dall: DataFrame,
+      s1: DataFrame): (DataFrame, DataFrame) = {
     val docs1 = dall.join(s1, Seq("doc_id"), "left_semi")
     val aIds = s1.select(col("doc_id").as("id_a"))
     val bIds = s1.select(col("doc_id").as("id_b"))
@@ -220,6 +222,9 @@ object TrainingDataQueries {
     val cont1 = Queries.ddContainmentPairs(spark, dir)
       .join(s1.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
       .join(s1.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
+    // localCheckpoint: the stage-2 decision table feeds the cap subset
+    // AND the verdict join (node-scale rows; see curatePipeline's
+    // stage-1 note)
     val surv = Dedup.survivors(docs1, "doc_id", "text",
       shingleK = MhShingleK, nHashes = MhNHashes, rowsPerBand = MhRowsPerBand,
       minJaccard = MhMinJaccard,
@@ -231,20 +236,7 @@ object TrainingDataQueries {
     val cap = SourceCap.sourceCap(
       dall.join(s2, Seq("doc_id"), "left_semi"), n = SourceCapN)
       .select(col("doc_id"), col("kept").as("cap_kept"))
-    dall.select("doc_id")
-      .join(g, Seq("doc_id"), "left")
-      .join(dc, Seq("doc_id"), "left")
-      .join(surv.select(col("id").as("doc_id"),
-        (col("tier") === "keep").as("dedup_keep")), Seq("doc_id"), "left")
-      .join(cap, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(isEval, lit("eval"))
-          // the curatePipeline NULL-keep rule (oracle: keep IS NOT TRUE)
-          .when(!coalesce(col("gopher_keep"), lit(false)), lit("gopher"))
-          .when(col("contaminated"), lit("decontam"))
-          .when(!col("dedup_keep"), lit("dedup"))
-          .when(!col("cap_kept"), lit("cap"))
-          .otherwise(lit("keep")).as("verdict"))
+    (surv.select(col("id").as("doc_id"), (col("tier") === "keep").as("dedup_keep")), cap)
   }
 
   /** Character-fraction Gopher tier (round-6): the published rule's
@@ -453,9 +445,9 @@ object TrainingDataQueries {
     * batch dc_dup_ngrams SQL over the full table (incremental == batch
     * exactly — dup flips are monotone). */
   def dcDupNgramsIncr(spark: SparkSession, dir: String): DataFrame =
-    graft.curate.Decontam.dupNgramStatsIncremental(
+    graft.curate.Decontam.foldDupNgramIndex(
       dupNgramIndex(spark, dir),
-      docs(spark, dir).where(incrIsNewDoc), "doc_id", "text")
+      docs(spark, dir).where(incrIsNewDoc), "doc_id", "text").index.stats
 
   def taFingerprint(spark: SparkSession, dir: String): DataFrame =
     docs(spark, dir).select(

@@ -151,8 +151,8 @@ object Ann extends Serializable {
       nProbe: Int = 4,
       iters: Int = 3,
       trainSample: Int = 4096): DataFrame = {
-    val assigned = ivfAssign(spark, corpus, idCol, vecCol, nLists, iters, trainSample)
-    ivfSearch(spark, assigned, queries, idCol, vecCol, k, nProbe)
+    ivfSearchIndex(spark, ivfAssign(spark, corpus, idCol, vecCol, nLists, iters, trainSample),
+      queries, idCol, vecCol, k, nProbe)
   }
 
   /** The IVF index at rest — frozen centroids + the assigned-cell
@@ -179,9 +179,8 @@ object Ann extends Serializable {
       iters: Int = 3,
       trainSample: Int = 4096,
       cache: DataFrame => DataFrame = identity): IvfIndex = {
-    val (assigned, centB) =
-      ivfAssign(spark, corpus, idCol, vecCol, nLists, iters, trainSample)
-    IvfIndex(cache(assigned), centB)
+    val idx = ivfAssign(spark, corpus, idCol, vecCol, nLists, iters, trainSample)
+    idx.copy(assigned = cache(idx.assigned))
   }
 
   /** Fold a batch of NEW vectors into the index: map-side nearest-cell
@@ -265,21 +264,9 @@ object Ann extends Serializable {
       sizes.take(topDecile).sum * 1000000L / math.max(1L, nVecs))
   }
 
-  /** Top-k search over an [[IvfIndex]] (same probe/verify machinery as
-    * the one-shot [[ivfTopK]]). */
-  def ivfSearchIndex(
-      spark: SparkSession,
-      idx: IvfIndex,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nProbe: Int): DataFrame =
-    ivfSearch(spark, (idx.assigned, idx.centroids), queries, idCol, vecCol, k, nProbe)
-
   /** Cell assignment stage of ivfTopK, exposed so the index can be built
     * once, inspected (cell-population bounds), and searched repeatedly.
-    * Returns (cell, nbr_id, cv) plus the broadcast centroids. */
+    * Returns the index: (cell, nbr_id, cv) plus the broadcast centroids. */
   private[graft] def ivfAssign(
       spark: SparkSession,
       corpus: DataFrame,
@@ -287,8 +274,7 @@ object Ann extends Serializable {
       vecCol: String,
       nLists: Int,
       iters: Int = 3,
-      trainSample: Int = 4096):
-      (DataFrame, org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]) = {
+      trainSample: Int = 4096): IvfIndex = {
     import spark.implicits._
     // persisted via the shared signature registry: the cast corpus feeds
     // THREE jobs (the autoNLists count, the training-sample scan, and the
@@ -336,7 +322,7 @@ object Ann extends Serializable {
     val assigned = base.map { case (id, v) =>
       (nearestCell(centB.value, v.toArray), id, v)
     }.toDF("cell", "nbr_id", "cv")
-    (assigned, centB)
+    IvfIndex(assigned, centB)
   }
 
   private def nearestCell(cs: Array[Array[Double]], v: Array[Double]): Int = {
@@ -350,10 +336,11 @@ object Ann extends Serializable {
     best
   }
 
-  /** Probe + exact re-rank stage of ivfTopK over a built index. */
-  private[graft] def ivfSearch(
+  /** Top-k search over an [[IvfIndex]]: the probe + exact re-rank stage
+    * of [[ivfTopK]], and the search of every maintained index. */
+  def ivfSearchIndex(
       spark: SparkSession,
-      index: (DataFrame, org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]),
+      idx: IvfIndex,
       queries: DataFrame,
       idCol: String,
       vecCol: String,
@@ -362,7 +349,7 @@ object Ann extends Serializable {
     import spark.implicits._
     // reuse the assignment stage's broadcast -- re-broadcasting the same
     // nLists x dim doubles would ship a redundant multi-MB block per call
-    val (assigned, centB) = index
+    val IvfIndex(assigned, centB) = idx
 
     // queries probe their nProbe nearest cells
     val probes = queries.select(col(idCol).cast("long").as("query_id"),

@@ -155,10 +155,7 @@ object Streaming {
             rows.toSeq.sortBy(_._2).foreach { case (_, id, sig) =>
               if (!pool.exists(_._1 == id)) {
                 pool.foreach { case (oid, osig) =>
-                  var agree = 0
-                  var i = 0
-                  while (i < sig.length) { if (sig(i) == osig(i)) agree += 1; i += 1 }
-                  val est = agree.toDouble / sig.length
+                  val est = Dedup.agreement(sig, osig, nHashes)
                   if (est >= minJaccard) {
                     out += (if (id < oid) (id, oid, est) else (oid, id, est))
                   }
@@ -666,7 +663,7 @@ object Streaming {
         require(storedN == n,
           s"dup-ngram state at $stateDir was built with n=$storedN but this " +
             s"fold runs with n=$n — a mismatched fold corrupts the index")
-        val fold = graft.curate.Decontam.foldDupNgramIndexDelta(
+        val fold = graft.curate.Decontam.foldDupNgramIndex(
           graft.curate.Decontam.DupNgramIndex(
             vs.readPart(v, "grams"), vs.readPart(v, "freq"),
             vs.readPart(v, "stats"), n),

@@ -156,8 +156,8 @@ object MaintSf1Smoke {
     var bestDng = Double.MaxValue
     (1 to 2).foreach { _ =>
       val t0 = System.nanoTime()
-      val n = graft.curate.Decontam.dupNgramStatsIncremental(
-        didx, batch, "doc_id", "text").count()
+      val n = graft.curate.Decontam.foldDupNgramIndex(
+        didx, batch, "doc_id", "text").index.stats.count()
       bestDng = math.min(bestDng, (System.nanoTime() - t0) / 1e9)
       require(n == corpus.count(), "fold must re-emit the union stats table")
     }

@@ -32,9 +32,9 @@ class BlockPairsSpec extends AnyFunSuite {
   test("bucketed: ER block lists follow the formula, sorted per row") {
     val mentions = Mentions.fromPages(Synth.pages(spark, 80, 11L, 6))
     val configs = Seq(Blocking.Config(), Blocking.Config(maxBlock = 8),
-      Blocking.Config(useDomainKey = true), Blocking.Config(maxBlock = 2))
+      Blocking.Config(maxBlock = 2))
     for (cfg <- configs) {
-      val k = Blocking.keyed(mentions, cfg)
+      val k = Blocking.keyed(mentions)
       val nb = k.groupBy("key").agg(count("*").as("block_size"))
         .where(col("block_size") > cfg.maxBlock)
         .select(col("key"), ceil(col("block_size") / lit(cfg.maxBlock)).cast("int").as("nb"))

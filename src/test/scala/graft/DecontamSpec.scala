@@ -93,7 +93,7 @@ class DecontamSpec extends AnyFunSuite {
     val idx = Decontam.buildDupNgramIndex(standing, "doc_id", "text", n = 8)
     def table(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val got = table(Decontam.dupNgramStatsIncremental(idx, batch, "doc_id", "text"))
+    val got = table(Decontam.foldDupNgramIndex(idx, batch, "doc_id", "text").index.stats)
     val want = table(Decontam.dupNgramStats(standing.unionByName(batch), "doc_id", "text", n = 8))
     assert(got === want, s"fold != batch: $got vs $want")
     // the planted flip concretely: doc 1's gram "a..h" was unique in the
@@ -102,6 +102,48 @@ class DecontamSpec extends AnyFunSuite {
       .apply(1L) === 0L, "fixture: doc 1 had no dups standing")
     assert(got(1L)._2 === 1L, s"standing flip missed: ${got(1L)}")
     assert(got(10L)._2 >= 1L)
+  }
+
+  test("dup-ngram fold emits a batch-scale changed set; passthrough rows equal the standing stats") {
+    // standing: doc 1 holds a unique gram the batch duplicates (the flip
+    // holder), docs 2/3 share a gram that was dup already, doc 4 holds
+    // a unique gram no batch doc repeats, doc 9 is too short
+    val standing = Seq(
+      (1L, "a b c d e f g h i"),
+      (2L, "q1 q2 q3 q4 q5 q6 q7 q8"),
+      (3L, "z0 q1 q2 q3 q4 q5 q6 q7 q8"),
+      (4L, "u1 u2 u3 u4 u5 u6 u7 u8 u9"),
+      (9L, "a b"))
+      .toDF("doc_id", "text")
+    // batch: doc 10 flips doc 1's gram, doc 11 repeats the standing dup
+    // gram of docs 2/3 (no standing row changes), doc 12 is fresh
+    val batch = Seq(
+      (10L, "y0 a b c d e f g h y9"),
+      (11L, "q1 q2 q3 q4 q5 q6 q7 q8 w1"),
+      (12L, "m1 m2 m3 m4 m5 m6 m7 m8"))
+      .toDF("doc_id", "text")
+    val idx = Decontam.buildDupNgramIndex(standing, "doc_id", "text", n = 8)
+    val fold = Decontam.foldDupNgramIndex(idx, batch, "doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toSeq
+    val full = rows(fold.index.stats).toMap
+    val changedRows = rows(fold.changedStats)
+    val changed = changedRows.toMap
+    assert(changedRows.size === changed.size, s"a changed id repeats: $changedRows")
+    assert(full === rows(Decontam.dupNgramStats(
+      standing.unionByName(batch), "doc_id", "text", n = 8)).toMap,
+      "refreshed stats diverge from batch stats over the union")
+    // the changed set is a strict subset: the batch's own docs plus the
+    // flip holder, and each changed row agrees with the full table
+    assert(changed.keySet === Set(1L, 10L, 11L, 12L), s"changed ids: ${changed.keySet}")
+    assert(changed.size < full.size)
+    changed.foreach { case (k, v) => assert(full(k) === v, s"changed row $k") }
+    // every other row is the standing row verbatim
+    val standingStats = rows(idx.stats).toMap
+    (full.keySet -- changed.keySet).foreach { k =>
+      assert(standingStats(k) === full(k), s"passthrough row $k drifted")
+    }
+    assert(full(1L) === ((2L, 1L)) && standingStats(1L) === ((2L, 0L)), "planted flip")
   }
 
   test("streaming dup-ngram maintenance: two-wave fold equals batch stats; replay is a no-op") {

@@ -16,12 +16,13 @@ class ScoringSpec extends AnyFunSuite {
   private val corpora = Seq((80L, 11L, 6), (60L, 23L, 4), (100L, 37L, 8)) // (pages, seed, domains)
   private val configs = Seq(
     "default" -> Blocking.Config(),
-    "maxBlock=8" -> Blocking.Config(maxBlock = 8),
-    "domain key" -> Blocking.Config(useDomainKey = true))
+    "maxBlock=8" -> Blocking.Config(maxBlock = 8))
 
   /** The pair universe as a self-join would build it: every (a < b)
-    * sharing a block, deduplicated, scored by the SQL expressions. */
-  private def bruteForce(keyed: DataFrame, cfg: Scoring.Config): DataFrame = {
+    * sharing a block, deduplicated, scored by the SQL expressions under
+    * the match rule (jw ≥ 0.92 with 0.6·jw + 0.4·jaccard ≥ 0.80, or
+    * jaccard ≥ 0.60). */
+  private def bruteForce(keyed: DataFrame): DataFrame = {
     val l = keyed.select(col("bkey"), col("id").as("a"), col("ns").as("ns_a"),
       col("ctx").as("ctx_a"), col("gold").as("gold_a"))
     val r = keyed.select(col("bkey"), col("id").as("b"), col("ns").as("ns_b"),
@@ -29,10 +30,9 @@ class ScoringSpec extends AnyFunSuite {
     l.join(r, Seq("bkey")).where(col("a") < col("b")).dropDuplicates("a", "b")
       .withColumn("jw", JaroWinklerExpr.jaro_winkler(col("ns_a"), col("ns_b")))
       .withColumn("jaccard", SortedLongJaccardExpr.sorted_long_jaccard(col("ctx_a"), col("ctx_b")))
-      .withColumn("score", lit(cfg.wJw) * col("jw") + lit(cfg.wJaccard) * col("jaccard"))
+      .withColumn("score", lit(0.6) * col("jw") + lit(0.4) * col("jaccard"))
       .withColumn("is_match",
-        (col("jw") >= cfg.jwThreshold && col("score") >= cfg.scoreThreshold) ||
-          col("jaccard") >= cfg.jaccardOnlyThreshold)
+        (col("jw") >= 0.92 && col("score") >= 0.80) || col("jaccard") >= 0.60)
       .withColumn("lev", when(col("is_match"),
         FastLevenshteinExpr.fast_levenshtein(col("ns_a"), col("ns_b"))).otherwise(lit(-1)))
       .select("a", "b", "gold_a", "gold_b", "jw", "lev", "jaccard", "score", "is_match")
@@ -46,7 +46,7 @@ class ScoringSpec extends AnyFunSuite {
       val mentions = Mentions.fromPages(Synth.pages(spark, nPages, seed, nDomains)).cache()
       val keyed = Blocking.keyedWithAttrs(mentions, bcfg).cache()
       val got = rows(Scoring.scoreFused(keyed))
-      val want = rows(bruteForce(keyed, Scoring.Config()))
+      val want = rows(bruteForce(keyed))
       val tag = s"seed $seed, $name"
       val repeats = got.size - got.map(r => (r.getLong(0), r.getLong(1))).distinct.size
       assert(repeats == 0, s"$tag: $repeats pairs emitted more than once")
@@ -67,7 +67,7 @@ class ScoringSpec extends AnyFunSuite {
   test("keyedWithAttrs: thousands of hot keys cost one hashed lookup per key, built map-side") {
     val mentions = Mentions.fromPages(Synth.pages(spark, 2400, 901L)).cache()
     val hotCfg = Blocking.Config(maxBlock = 2)
-    val nHot = Blocking.keyed(mentions, hotCfg).groupBy("key").count()
+    val nHot = Blocking.keyed(mentions).groupBy("key").count()
       .where(col("count") > hotCfg.maxBlock).count()
     assert(nHot > 1000, s"fixture has only $nHot hot keys")
     val keyed = Blocking.keyedWithAttrs(mentions, hotCfg)
