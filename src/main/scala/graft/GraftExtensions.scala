@@ -10,8 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions
   * (or `SparkSession.builder().withExtensions(new GraftExtensions)`), and
   * plain SQL can call
-  *   jaro_winkler(s1, s2), sorted_jaccard(a, b),
-  *   sorted_long_jaccard(a, b), cosine_sim(v1, v2).
+  *   jaro_winkler(s1, s2), sorted_long_jaccard(a, b), cosine_sim(v1, v2).
   * `registerAll` applies the same registrations to an EXISTING session
   * (extensions only run at session construction).
   */
@@ -42,8 +41,6 @@ object GraftExtensions {
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
     binary("jaro_winkler", graft.functions.JaroWinklerExpr(_, _),
       "_FUNC_(s1, s2) - Jaro-Winkler similarity of two strings."),
-    binary("sorted_jaccard", graft.functions.SortedJaccardExpr(_, _),
-      "_FUNC_(a, b) - set Jaccard of two SORTED string arrays (merge pass)."),
     binary("sorted_long_jaccard", graft.functions.SortedLongJaccardExpr(_, _),
       "_FUNC_(a, b) - set Jaccard of two SORTED bigint arrays (merge pass)."),
     binary("cosine_sim", graft.functions.CosineExpr(_, _),

@@ -800,15 +800,14 @@ object Dedup {
       /** Posting keys whose AT-REST inverted-index list was trimmed to
         * `maxPosting` entries (lang, source, tok, cnt — the census kept
         * at rest; EMPTY in the exact regime). See [[DefaultMaxPosting]]. */
-      hotPostings: DataFrame = null,
-      maxPosting: Int = DefaultMaxPosting,
+      hotPostings: DataFrame,
+      maxPosting: Int,
       /** Number of trimmed posting keys, counted once at bootstrap: 0
         * means the cap never bound and every fold is exact — folds skip
         * the dropped-candidate accounting job entirely. */
-      hotPostingCount: Long = 0L) {
+      hotPostingCount: Long) {
     def frames: Seq[DataFrame] =
-      core.frames ++ Seq(tokFreq, toks, contPrefix, contFull, victims) ++
-        Option(hotPostings).toSeq
+      core.frames ++ Seq(tokFreq, toks, contPrefix, contFull, victims, hotPostings)
   }
 
   /** Cap on the containment inverted index's posting list per

@@ -95,11 +95,11 @@ object Mentions {
         // crosses the paragraph boundary; clamp instead of throwing — the
         // context window simply ends at the paragraph for such spans
         val after = if (h.end <= pe) text.substring(h.end, pe) else ""
-        // sorted by CODE POINT (== UTF-8 byte order), not UTF-16 code-unit
-        // order: SortedJaccardExpr merges via UTF8String.compareTo, and the
-        // two orders differ for supplementary-plane vs U+E000..U+FFFF tokens
-        // — a default-`sorted` array could be mis-sorted for the merge and
-        // silently undercount the intersection.
+        // sorted by CODE POINT (== UTF-8 byte order, UTF8String.compareTo's
+        // order), not UTF-16 code-unit order: this fixes the stored
+        // `context` order, and the two orders differ for supplementary-plane
+        // vs U+E000..U+FFFF tokens, so a default `sorted` would store a
+        // different array.
         val ctx = (Extract.tokenize(before) ++ Extract.tokenize(after))
           // Locale.ROOT: default-locale lowercasing would break bit-exact
           // determinism across JVMs (e.g. tr_TR dotless-i)

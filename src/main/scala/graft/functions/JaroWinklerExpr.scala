@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
@@ -95,9 +95,4 @@ object JaroWinklerExpr {
     GraftColumnBridge.column(
       JaroWinklerExpr(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
   }
-
-  /** Register as a SQL function: SELECT jaro_winkler(a, b). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinklerExpr(exprs.head, exprs(1)), "built-in")
 }

@@ -62,30 +62,21 @@ object ErQueries {
     }
 
   /** Transitive clustering over the match edges — ONE connected-components
-    * run per session AND CC MODE (G6). The `spark.graft.cc.checkpointDir`
-    * session conf (unset/empty = default in-memory localCheckpoint
-    * rounds) switches the CC loop to RELIABLE, resumable Parquet rounds
-    * under the given directory — the cluster-deployment mode, reachable
-    * from the catalog surface without code changes. Only this stage is
-    * keyed by the mode, read from the calling session: flipping the conf
-    * mid-session, or a sibling session (same application, own conf),
-    * reuses the persisted extraction/scoring stages. */
-  def erClusters(spark: SparkSession, dir: String): DataFrame = {
-    val mode = ccCheckpointDir(spark)
-    SessionMemo.frame(spark, s"er.clusters|${mode.getOrElse("")}|$dir") {
+    * run per session (G6), in-memory localCheckpoint rounds. Reliable,
+    * resumable Parquet rounds are `Clustering.assign(checkpointDir = ...)`,
+    * the path ErPipelineRunner takes. */
+  def erClusters(spark: SparkSession, dir: String): DataFrame =
+    SessionMemo.frame(spark, s"er.clusters|$dir") {
       Clustering.assign(
         spark,
         mentions(spark, dir).select(col("mention_id").as("id")),
-        erScoredPairs(spark, dir).where(col("is_match")).select(col("a"), col("b")),
-        checkpointDir = mode)
+        erScoredPairs(spark, dir).where(col("is_match")).select(col("a"), col("b")))
     }
-  }
 
   /** Standing cluster assignment for the incremental-maintenance query
     * (G7): batch CC over the "standing" 3/4 split of the match edges.
     * In a real maintenance deployment this state PRE-EXISTS — it is
-    * yesterday's converged assignment, and IncrCcProbe excludes its
-    * build cost for the same reason — so the session memo makes the
+    * yesterday's converged assignment — so the session memo makes the
     * measured er_clusters_incr cost the incremental fold itself, not
     * the one-time setup of the simulated standing world. */
   private def standingClusters(spark: SparkSession, dir: String): DataFrame =
@@ -96,11 +87,6 @@ object ErQueries {
         erScoredPairs(spark, dir).where(col("is_match") && !incrIsNewEdge)
           .select(col("a"), col("b")))
     }
-
-  /** Reliable-CC mode flag: Some(dir) when `spark.graft.cc.checkpointDir`
-    * is set non-empty in the session conf. */
-  private[graft] def ccCheckpointDir(spark: SparkSession): Option[String] =
-    Option(spark.conf.get("spark.graft.cc.checkpointDir", "")).filter(_.nonEmpty)
 
   /** Mention extraction output (E1/F1 operators), derived from the
     * shared extraction pass. */

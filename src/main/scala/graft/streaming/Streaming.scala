@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.model.{Mention, Page}
@@ -202,19 +203,44 @@ object Streaming {
     * Scale shape: per micro-batch cost = batch-scale CC + one narrow read
     * + one narrow write of the node-scale assignment (the broadcast-probe
     * relabel — no wide exchange at assignment scale, see PlanAuditSpec).
-    * The full rewrite per batch is the compaction tradeoff: at 10^12
-    * nodes, amortize by lengthening the trigger interval, or partition the
-    * assignment by id range and rewrite only touched ranges (the standard
-    * refinement; not needed at this catalog's scale). */
-  def streamingClusters(
-      edges: DataFrame,
-      stateDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    edges.writeStream
+    * The assignment is RANGED by id, so a fold rewrites only the ranges
+    * holding changed rows ([[VersionedState.rangedWrite]]). */
+  def streamingClusters(edges: DataFrame, stateDir: String, checkpointDir: String): StreamingQuery =
+    sink(edges, checkpointDir)(foldClusterBatch(_, stateDir, _))
+
+  /** The one sink skeleton of the four maintenance sinks: every
+    * micro-batch is handed, with its `batchId`, to the sink's fold. */
+  private def sink(in: DataFrame, checkpointDir: String)(
+      fold: (DataFrame, Long) => Unit): StreamingQuery =
+    in.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        foldClusterBatch(batch.toDF(), stateDir, batchId))
+      .foreachBatch((batch: Dataset[Row], batchId: Long) => fold(batch.toDF(), batchId))
       .start()
+
+  /** The one fold guard of the four sinks: runs `body` with the state and
+    * its latest committed version only for a new, non-empty batch. A
+    * replayed or out-of-order batch is already folded — reading and
+    * overwriting the SAME version dir would race, so it is skipped. */
+  private def foldNew(batch: DataFrame, stateDir: String, batchId: Long)(
+      body: (VersionedState, Option[Long]) => Unit): Unit = {
+    val vs = new VersionedState(batch.sparkSession, stateDir)
+    val prev = vs.readLatest()
+    if (prev.forall(_ < batchId) && !batch.isEmpty) body(vs, prev)
+  }
+
+  /** The one state reader: part `name` of the latest committed version,
+    * or an empty frame of `schema` before the first fold. */
+  private def currentPart(spark: SparkSession, stateDir: String, name: String,
+      schema: String): DataFrame =
+    latest(spark, stateDir)(_.readPart(_, name)).getOrElse(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], StructType.fromDDL(schema)))
+
+  /** `read` applied to the latest committed version, if any. */
+  private def latest[T](spark: SparkSession, stateDir: String)(
+      read: (VersionedState, Long) => T): Option[T] = {
+    val vs = new VersionedState(spark, stateDir)
+    vs.readLatest().map(read(vs, _))
+  }
 
   /** Manifest entry kinds for [[VersionedState]]'s `_PARTS` file. */
   private sealed trait Entry { def refs: Set[Long] }
@@ -310,7 +336,7 @@ object Streaming {
       * leaf dirs are listed — the partition-pruned read the fold's
       * passthrough needs). The part must be ranged at `v`
       * ([[isRangedWith]]). */
-    def readPartRanges(v: Long, name: String, ranges: Seq[Long]): DataFrame =
+    private def readPartRanges(v: Long, name: String, ranges: Seq[Long]): DataFrame =
       entry(v, name) match {
         case RangedE(_, holders) =>
           val paths = ranges.flatMap(k => holders.get(k).map(rangePath(_, name, k)))
@@ -322,11 +348,36 @@ object Streaming {
 
     /** Whether `name` is a RANGED part at version `v` with this range
       * count (a fold may only inherit untouched ranges when it is). */
-    def isRangedWith(v: Long, name: String, nRanges: Int): Boolean =
+    private def isRangedWith(v: Long, name: String, nRanges: Int): Boolean =
       readManifest(v).get(name) match {
         case Some(RangedE(r, _)) => r == nRanges
         case _ => false
       }
+
+    /** The one ranged-part writer: the RANGED write of part `name` (keyed
+      * by `keyCol`) for a fold on top of version `prev`. When the part is
+      * ranged at `prev` with the current range count ([[assignRanges]])
+      * and the fold names its `changed` rows, only the ranges holding them
+      * (batch-scale) are rewritten, as their previous holder rows minus
+      * the changed keys plus the changed rows — a PRUNED read of just
+      * those ranges; every other range is inherited. Otherwise — the
+      * bootstrap, a rescaled range count, or `changed = None` (a fold whose
+      * changed set is the whole relation) — `whole` lands in every range. */
+    def rangedWrite(prev: Option[Long], name: String, keyCol: String,
+        whole: => DataFrame, changed: Option[DataFrame]): RangedWrite = {
+      val nR = assignRanges(spark)
+      (prev, changed) match {
+        case (Some(v), Some(rows)) if isRangedWith(v, name, nR) =>
+          val c = withRange(rows, keyCol, nR).localCheckpoint(true)
+          val touched = c.select("_r").distinct()
+            .collect().map(_.getLong(0)).toSeq.sorted
+          val prevRows = withRange(readPartRanges(v, name, touched), keyCol, nR)
+            .join(broadcast(c.select(keyCol)), Seq(keyCol), "left_anti")
+          RangedWrite(name, prevRows.unionByName(c), nR, touched, full = false, keyCol = keyCol)
+        case _ =>
+          RangedWrite(name, withRange(whole, keyCol, nR), nR, Nil, full = true, keyCol = keyCol)
+      }
+    }
 
     // ---- the `_PARTS` manifest (round-7 delta state) --------------------
     private def manifestPath(v: Long) = new Path(new Path(versionPath(v)), "_PARTS")
@@ -461,21 +512,6 @@ object Streaming {
   private def withRange(df: DataFrame, keyCol: String, nR: Int): DataFrame =
     df.withColumn("_r", pmod(xxhash64(col(keyCol)), lit(nR.toLong)))
 
-  /** The touched-range rewrite of a RANGED part: the ranges holding the
-    * changed rows (batch-scale) are rewritten as their previous holder
-    * rows minus the changed keys, plus the changed rows — a PRUNED read
-    * of just those ranges; every other range is inherited. */
-  private def touchedRangeWrite(vs: VersionedState, v: Long, name: String,
-      changedRows: DataFrame, keyCol: String, nR: Int): RangedWrite = {
-    val changed = withRange(changedRows, keyCol, nR).localCheckpoint(true)
-    val touched = changed.select("_r").distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
-    val prevRows = withRange(vs.readPartRanges(v, name, touched), keyCol, nR)
-      .join(broadcast(changed.select(keyCol)), Seq(keyCol), "left_anti")
-    RangedWrite(name, prevRows.unionByName(changed), nR, touched,
-      full = false, keyCol = keyCol)
-  }
-
   /** One G7 fold: apply a micro-batch of (a, b) match edges to the
     * standing assignment under `stateDir`. Public so a batch backfill job
     * can reuse the exact streaming commit protocol. Writes the
@@ -483,48 +519,30 @@ object Streaming {
     * rewritten; untouched ranges are inherited from their previous
     * holder version (bootstrap / fallback-regime / rescale commits write
     * all ranges). */
-  def foldClusterBatch(batch: DataFrame, stateDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val vs = new VersionedState(spark, stateDir)
-    val prev = vs.readLatest()
-    // replayed or out-of-order batch: already folded — reading and
-    // overwriting the SAME version dir would race, so skip instead
-    if (prev.exists(_ >= batchId)) return
-    val e = batch.select(col("a").cast("long"), col("b").cast("long"))
-    if (e.isEmpty) return
-    val nR = assignRanges(spark)
-    def commitFull(assign: DataFrame): Unit =
-      vs.commitWrites(batchId,
-        Seq(RangedWrite("assign", withRange(assign, "id", nR), nR,
-          Nil, full = true, keyCol = "id")), prev)
-    prev match {
-      case None =>
-        // first batch: plain batch CC; the id universe is the batch's own
-        // endpoints (the standing universe grows with each batch's edges)
-        commitFull(graft.er.Clustering.assign(
-          spark, e.select(explode(array(col("a"), col("b"))).as("id")).distinct(), e))
-      case Some(v) =>
-        val standing = currentClusters(spark, stateDir)
-        val r = graft.er.Clustering.incrementalClustersWithDelta(spark, standing, e)
-        if (r.changedIsFull || !vs.isRangedWith(v, "assign", nR)) commitFull(r.assignment)
-        else vs.commitWrites(batchId,
-          Seq(touchedRangeWrite(vs, v, "assign", r.changed, "id", nR)), prev)
+  def foldClusterBatch(batch: DataFrame, stateDir: String, batchId: Long): Unit =
+    foldNew(batch, stateDir, batchId) { (vs, prev) =>
+      val spark = batch.sparkSession
+      val e = batch.select(col("a").cast("long"), col("b").cast("long"))
+      val assign = prev match {
+        case None =>
+          // first batch: plain batch CC; the id universe is the batch's own
+          // endpoints (the standing universe grows with each batch's edges)
+          vs.rangedWrite(prev, "assign", "id", graft.er.Clustering.assign(
+            spark, e.select(explode(array(col("a"), col("b"))).as("id")).distinct(), e), None)
+        case Some(v) =>
+          val r = graft.er.Clustering.incrementalClustersWithDelta(
+            spark, vs.readPart(v, "assign"), e)
+          vs.rangedWrite(prev, "assign", "id", r.assignment,
+            if (r.changedIsFull) None else Some(r.changed))
+      }
+      vs.commitWrites(batchId, Seq(assign), prev)
     }
-  }
 
   /** The standing assignment a [[streamingClusters]] query has built so
     * far (empty two-column frame before the first fold), resolved through
     * the manifest. */
-  def currentClusters(spark: SparkSession, stateDir: String): DataFrame = {
-    val vs = new VersionedState(spark, stateDir)
-    vs.readLatest() match {
-      case Some(v) => vs.readPart(v, "assign")
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("id", LongType), StructField("cluster", LongType))))
-    }
-  }
+  def currentClusters(spark: SparkSession, stateDir: String): DataFrame =
+    currentPart(spark, stateDir, "assign", "id BIGINT, cluster BIGINT")
 
   /** Streaming PER-SOURCE CAP MAINTENANCE — the streaming twin of
     * [[graft.curate.SourceCap.sourceCap]]: documents stream in and every
@@ -549,12 +567,8 @@ object Streaming {
       stateDir: String,
       checkpointDir: String,
       idCol: String = "doc_id",
-      srcCol: String = "source"): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        foldSourceCapBatch(batch.toDF(), n, stateDir, batchId, idCol, srcCol))
-      .start()
+      srcCol: String = "source"): StreamingQuery =
+    sink(docs, checkpointDir)(foldSourceCapBatch(_, n, stateDir, _, idCol, srcCol))
 
   /** One source-cap fold: merge a micro-batch of documents into the
     * standing kept-set under `stateDir`. Public for batch backfill. */
@@ -564,38 +578,23 @@ object Streaming {
       stateDir: String,
       batchId: Long,
       idCol: String = "doc_id",
-      srcCol: String = "source"): Unit = {
-    val spark = batch.sparkSession
-    val vs = new VersionedState(spark, stateDir)
-    val prev = vs.readLatest()
-    if (prev.exists(_ >= batchId)) return
-    if (batch.isEmpty) return
-    val partial = graft.curate.SourceCap.partialKeep(
-      graft.curate.SourceCap.keyed(batch, idCol, srcCol), n)
-    val merged = prev match {
-      case None => partial
-      case Some(v) => vs.readPart(v, "kept").unionByName(partial)
+      srcCol: String = "source"): Unit =
+    foldNew(batch, stateDir, batchId) { (vs, prev) =>
+      val partial = graft.curate.SourceCap.partialKeep(
+        graft.curate.SourceCap.keyed(batch, idCol, srcCol), n)
+      val merged = prev match {
+        case None => partial
+        case Some(v) => vs.readPart(v, "kept").unionByName(partial)
+      }
+      vs.commitWrites(batchId,
+        Seq(FullWrite("kept", graft.curate.SourceCap.topNPerSource(merged, n))), prev)
     }
-    vs.commitWrites(batchId,
-      Seq(FullWrite("kept", graft.curate.SourceCap.topNPerSource(merged, n))), prev)
-  }
 
   /** The kept set a [[streamingSourceCap]] query has built so far:
     * (id, source, h), at most n rows per source (empty before the first
     * fold). */
-  def currentSourceCap(spark: SparkSession, stateDir: String): DataFrame = {
-    val vs = new VersionedState(spark, stateDir)
-    vs.readLatest() match {
-      case Some(v) => vs.readPart(v, "kept")
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("id", LongType),
-            StructField("source", StringType),
-            StructField("h", LongType))))
-    }
-  }
+  def currentSourceCap(spark: SparkSession, stateDir: String): DataFrame =
+    currentPart(spark, stateDir, "kept", "id BIGINT, source STRING, h BIGINT")
 
   /** Streaming dup-ngram maintenance (the dc_dup_ngrams_incr fold as a
     * foreachBatch sink): documents stream in; each micro-batch folds into
@@ -609,12 +608,8 @@ object Streaming {
       stateDir: String,
       checkpointDir: String,
       idCol: String = "doc_id",
-      textCol: String = "text"): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        foldDupNgramBatch(batch.toDF(), n, stateDir, batchId, idCol, textCol))
-      .start()
+      textCol: String = "text"): StreamingQuery =
+    sink(docs, checkpointDir)(foldDupNgramBatch(_, n, stateDir, _, idCol, textCol))
 
   /** One dup-ngram fold: merge a micro-batch of documents into the
     * standing index under `stateDir`. Public for batch backfill.
@@ -638,66 +633,42 @@ object Streaming {
       stateDir: String,
       batchId: Long,
       idCol: String = "doc_id",
-      textCol: String = "text"): Unit = {
-    val spark = batch.sparkSession
-    val vs = new VersionedState(spark, stateDir)
-    val prev = vs.readLatest()
-    if (prev.exists(_ >= batchId)) return
-    if (batch.isEmpty) return
-    val nR = assignRanges(spark)
-    def withR(df: DataFrame) = withRange(df, "doc_id", nR)
-    val meta = spark.range(1).select(lit(n.toLong).as("n"))
-    prev match {
-      case None =>
-        val idx = graft.curate.Decontam.buildDupNgramIndex(batch, idCol, textCol, n)
-        vs.commitWrites(batchId, Seq(
-          FullWrite("grams", idx.grams),
-          FullWrite("freq", idx.freq),
-          RangedWrite("stats", withR(idx.stats), nR, Nil, full = true, keyCol = "doc_id"),
-          FullWrite("meta", meta)), prev)
-      case Some(v) =>
-        // parameter drift must fail loudly (the SurvivorIndex rule):
-        // folding 13-gram deltas into an 8-gram standing index would
-        // silently corrupt every count, so the state carries its n
-        val storedN = vs.readPart(v, "meta").head().getLong(0)
-        require(storedN == n,
-          s"dup-ngram state at $stateDir was built with n=$storedN but this " +
-            s"fold runs with n=$n — a mismatched fold corrupts the index")
-        val fold = graft.curate.Decontam.foldDupNgramIndex(
-          graft.curate.Decontam.DupNgramIndex(
-            vs.readPart(v, "grams"), vs.readPart(v, "freq"),
-            vs.readPart(v, "stats"), n),
-          batch, idCol, textCol)
-        // a rescaled range count lands one full ranged write, after
-        // which folds inherit untouched ranges again
-        val stats =
-          if (!vs.isRangedWith(v, "stats", nR))
-            RangedWrite("stats", withR(fold.index.stats), nR, Nil,
-              full = true, keyCol = "doc_id")
-          else touchedRangeWrite(vs, v, "stats", fold.changedStats, "doc_id", nR)
-        vs.commitWrites(batchId, Seq(
-          DeltaWrite("grams", fold.batchGrams),
-          FullWrite("freq", fold.index.freq),
-          stats,
-          FullWrite("meta", meta)), prev)
+      textCol: String = "text"): Unit =
+    foldNew(batch, stateDir, batchId) { (vs, prev) =>
+      val meta = batch.sparkSession.range(1).select(lit(n.toLong).as("n"))
+      prev match {
+        case None =>
+          val idx = graft.curate.Decontam.buildDupNgramIndex(batch, idCol, textCol, n)
+          vs.commitWrites(batchId, Seq(
+            FullWrite("grams", idx.grams),
+            FullWrite("freq", idx.freq),
+            vs.rangedWrite(prev, "stats", "doc_id", idx.stats, None),
+            FullWrite("meta", meta)), prev)
+        case Some(v) =>
+          // parameter drift must fail loudly (the SurvivorIndex rule):
+          // folding 13-gram deltas into an 8-gram standing index would
+          // silently corrupt every count, so the state carries its n
+          val storedN = vs.readPart(v, "meta").head().getLong(0)
+          require(storedN == n,
+            s"dup-ngram state at $stateDir was built with n=$storedN but this " +
+              s"fold runs with n=$n — a mismatched fold corrupts the index")
+          val fold = graft.curate.Decontam.foldDupNgramIndex(
+            graft.curate.Decontam.DupNgramIndex(
+              vs.readPart(v, "grams"), vs.readPart(v, "freq"),
+              vs.readPart(v, "stats"), n),
+            batch, idCol, textCol)
+          vs.commitWrites(batchId, Seq(
+            DeltaWrite("grams", fold.batchGrams),
+            FullWrite("freq", fold.index.freq),
+            vs.rangedWrite(prev, "stats", "doc_id", fold.index.stats, Some(fold.changedStats)),
+            FullWrite("meta", meta)), prev)
+      }
     }
-  }
 
   /** The (doc_id, n_grams, n_dup_grams) table a [[streamingDupNgrams]]
     * query has built so far (empty before the first fold). */
-  def currentDupNgrams(spark: SparkSession, stateDir: String): DataFrame = {
-    val vs = new VersionedState(spark, stateDir)
-    vs.readLatest() match {
-      case Some(v) => vs.readPart(v, "stats")
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("doc_id", LongType),
-            StructField("n_grams", LongType),
-            StructField("n_dup_grams", LongType))))
-    }
-  }
+  def currentDupNgrams(spark: SparkSession, stateDir: String): DataFrame =
+    currentPart(spark, stateDir, "stats", "doc_id BIGINT, n_grams BIGINT, n_dup_grams BIGINT")
 
   /** Streaming IVF maintenance (the ann_ivf_incr fold as a foreachBatch
     * sink): vectors stream in; the FIRST micro-batch trains the
@@ -717,12 +688,8 @@ object Streaming {
       stateDir: String,
       checkpointDir: String,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        foldIvfBatch(batch.toDF(), stateDir, batchId, idCol, vecCol))
-      .start()
+      vecCol: String = "embedding"): StreamingQuery =
+    sink(vecs, checkpointDir)(foldIvfBatch(_, stateDir, _, idCol, vecCol))
 
   private def centroidsDf(spark: SparkSession,
       cents: Array[Array[Double]]): DataFrame = {
@@ -737,49 +704,46 @@ object Streaming {
       stateDir: String,
       batchId: Long,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
-    val spark = batch.sparkSession
-    val vs = new VersionedState(spark, stateDir)
-    val prev = vs.readLatest()
-    if (prev.exists(_ >= batchId)) return
-    if (batch.isEmpty) return
-    prev match {
-      case None =>
-        // release EXACTLY the scratch ivfAssign registers during this
-        // bootstrap (mark/since pair): a batch-backfill caller invoking
-        // this fold on its own thread mid-build keeps its pending
-        // signature frames (round-6 advice)
-        val mark = graft.dedup.Dedup.sigMark()
-        val next = graft.sim.Ann.buildIvfIndex(spark, batch, idCol, vecCol)
-        vs.commitWrites(batchId, Seq(
-          FullWrite("assigned", next.assigned),
-          FullWrite("centroids", centroidsDf(spark, next.centroids.value))), prev)
-        graft.dedup.Dedup.releaseSignaturesSince(mark)
-      case Some(v) =>
-        // the assigned relation is APPEND-ONLY (a fold never touches
-        // standing rows) — land just the batch's rows as a delta
-        // (round-7: the same full-rewrite class the cluster/dup-ngram
-        // sinks shed); centroids are frozen and tiny, re-landed full
-        val (next, assignedB) = graft.sim.Ann.ivfAppendDelta(
-          spark, readIvfIndex(spark, vs, v), batch, idCol, vecCol)
-        vs.commitWrites(batchId, Seq(
-          DeltaWrite("assigned", assignedB),
-          FullWrite("centroids", centroidsDf(spark, next.centroids.value))), prev)
-        // drift monitor (round-6 verdict item 5): cell-population skew
-        // per fold, against the committed (just-written) relation — one
-        // bounded aggregation; the re-index threshold is documented on
-        // Ann.IvfDrift
-        val drift = graft.sim.Ann.ivfDriftStats(
-          graft.sim.Ann.IvfIndex(vs.readPart(batchId, "assigned"), next.centroids))
-        System.err.println(
-          s"[graft.streaming] ivf state $stateDir v=$batchId drift: " +
-            s"cells=${drift.nCells} vecs=${drift.nVecs} maxCell=${drift.maxCell} " +
-            s"meanCellPpm=${drift.meanCellPpm} topDecileFracPpm=${drift.topDecileFracPpm}" +
-            (if (drift.reindexSuggested)
-               " REINDEX-SUGGESTED (skew past the documented threshold)"
-             else ""))
+      vecCol: String = "embedding"): Unit =
+    foldNew(batch, stateDir, batchId) { (vs, prev) =>
+      val spark = batch.sparkSession
+      prev match {
+        case None =>
+          // release EXACTLY the scratch ivfAssign registers during this
+          // bootstrap (mark/since pair): a batch-backfill caller invoking
+          // this fold on its own thread mid-build keeps its pending
+          // signature frames (round-6 advice)
+          val mark = graft.dedup.Dedup.sigMark()
+          val next = graft.sim.Ann.buildIvfIndex(spark, batch, idCol, vecCol)
+          vs.commitWrites(batchId, Seq(
+            FullWrite("assigned", next.assigned),
+            FullWrite("centroids", centroidsDf(spark, next.centroids.value))), prev)
+          graft.dedup.Dedup.releaseSignaturesSince(mark)
+        case Some(v) =>
+          // the assigned relation is APPEND-ONLY (a fold never touches
+          // standing rows) — land just the batch's rows as a delta
+          // (round-7: the same full-rewrite class the cluster/dup-ngram
+          // sinks shed); centroids are frozen and tiny, re-landed full
+          val (next, assignedB) = graft.sim.Ann.ivfAppendDelta(
+            spark, readIvfIndex(spark, vs, v), batch, idCol, vecCol)
+          vs.commitWrites(batchId, Seq(
+            DeltaWrite("assigned", assignedB),
+            FullWrite("centroids", centroidsDf(spark, next.centroids.value))), prev)
+          // drift monitor (round-6 verdict item 5): cell-population skew
+          // per fold, against the committed (just-written) relation — one
+          // bounded aggregation; the re-index threshold is documented on
+          // Ann.IvfDrift
+          val drift = graft.sim.Ann.ivfDriftStats(
+            graft.sim.Ann.IvfIndex(vs.readPart(batchId, "assigned"), next.centroids))
+          System.err.println(
+            s"[graft.streaming] ivf state $stateDir v=$batchId drift: " +
+              s"cells=${drift.nCells} vecs=${drift.nVecs} maxCell=${drift.maxCell} " +
+              s"meanCellPpm=${drift.meanCellPpm} topDecileFracPpm=${drift.topDecileFracPpm}" +
+              (if (drift.reindexSuggested)
+                 " REINDEX-SUGGESTED (skew past the documented threshold)"
+               else ""))
+      }
     }
-  }
 
   private def readIvfIndex(spark: SparkSession, vs: VersionedState,
       v: Long): graft.sim.Ann.IvfIndex = {
@@ -792,10 +756,8 @@ object Streaming {
 
   /** The standing IVF index a [[streamingIvf]] query has built so far
     * (None before the first fold); search it with Ann.ivfSearchIndex. */
-  def currentIvfIndex(spark: SparkSession, stateDir: String): Option[graft.sim.Ann.IvfIndex] = {
-    val vs = new VersionedState(spark, stateDir)
-    vs.readLatest().map(readIvfIndex(spark, vs, _))
-  }
+  def currentIvfIndex(spark: SparkSession, stateDir: String): Option[graft.sim.Ann.IvfIndex] =
+    latest(spark, stateDir)(readIvfIndex(spark, _, _))
 
   val counterRowSchema: StructType = StructType(Seq(
     StructField("mode", StringType),

@@ -220,40 +220,6 @@ class ClusteringSpec extends AnyFunSuite {
     assert(clusterMap(again) == want)
   }
 
-  test("spark.graft.cc.checkpointDir conf flag routes the catalog CC through reliable checkpoints") {
-    val dir = java.nio.file.Files.createTempDirectory("cc_conf").toString
-    val sf = "/root/testdata/sf0.001"
-    spark.conf.set("spark.graft.cc.checkpointDir", dir)
-    try {
-      assert(graft.queries.ErQueries.ccCheckpointDir(spark).contains(dir))
-      val n = graft.queries.ErQueries.erClusters(spark, sf).count()
-      assert(n > 0)
-      val kids = new java.io.File(dir).listFiles()
-      assert(kids != null && kids.exists(_.getName.startsWith("cc_")),
-        s"no cc_ namespace materialized under $dir")
-    } finally spark.conf.unset("spark.graft.cc.checkpointDir")
-    assert(graft.queries.ErQueries.ccCheckpointDir(spark).isEmpty)
-  }
-
-  test("a SIBLING session's CC conf is honored (active-session read, not constructor capture)") {
-    // sibling sessions share the applicationId and therefore the Shared
-    // memo instance; the clusters stage must read the checkpoint-dir conf
-    // from the ACTIVE session at call time (round-5 review finding)
-    val spark2 = spark
-    val sib = spark2.newSession()
-    val dir = java.nio.file.Files.createTempDirectory("cc_conf_sib").toString
-    sib.conf.set("spark.graft.cc.checkpointDir", dir)
-    org.apache.spark.sql.SparkSession.setActiveSession(sib)
-    try {
-      assert(graft.queries.ErQueries.ccCheckpointDir(sib).contains(dir))
-      val n = graft.queries.ErQueries.erClusters(sib, "/root/testdata/sf0.001").count()
-      assert(n > 0)
-      val kids = new java.io.File(dir).listFiles()
-      assert(kids != null && kids.exists(_.getName.startsWith("cc_")),
-        s"sibling session's checkpoint mode was ignored: no cc_ namespace under $dir")
-    } finally org.apache.spark.sql.SparkSession.setActiveSession(spark2)
-  }
-
   test("maxIter exhaustion logs a loud non-convergence warning instead of silent under-merge") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -423,5 +424,44 @@ class StreamingSpec extends AnyFunSuite {
     assert(redelivered.length === redelivered.toSet.size, "duplicate state rows")
     val vDirs = new java.io.File(stateDir).listFiles().filter(_.getName.startsWith("v_"))
     assert(vDirs.length <= 2, s"stale versions not pruned: ${vDirs.mkString(",")}")
+  }
+
+  test("every maintenance sink skips a replayed batch and an empty batch") {
+    import spark.implicits._
+    val edges = Seq(Seq((1L, 2L), (3L, 4L), (10L, 11L)), Seq((2L, 3L)), Seq((4L, 10L), (30L, 31L)))
+    def docs(w: Int) = (0 until 4).map(i => (w * 10L + i,
+      (0 until 6).map(t => s"t${(w + i + t) % 5}").mkString(" "), s"s${i % 2}"))
+      .toDF("doc_id", "text", "source")
+    def vecs(w: Int) = (0 until 12).map(i => (w * 100L + i,
+      Seq.tabulate(4)(d => ((w * 12 + i) * (d + 3) % 17).toDouble))).toDF("vec_id", "embedding")
+    val sinks = Seq[(String, Int => DataFrame, (DataFrame, String, Long) => Unit, Seq[String])](
+      ("clusters", w => edges(w).toDF("a", "b"), Streaming.foldClusterBatch, Seq("assign")),
+      ("dup-ngrams", w => docs(w).select("doc_id", "text"),
+        Streaming.foldDupNgramBatch(_, 3, _, _), Seq("grams", "freq", "stats", "meta")),
+      ("source cap", w => docs(w).select("doc_id", "source"),
+        Streaming.foldSourceCapBatch(_, 2, _, _), Seq("kept")),
+      ("ivf", vecs, Streaming.foldIvfBatch(_, _, _), Seq("assigned", "centroids")))
+    sinks.foreach { case (name, batch, fold, parts) =>
+      val dir = Files.createTempDirectory("sink_guard").toString
+      Seq(0, 1).foreach(w => fold(batch(w), dir, w.toLong))
+      // the latest version and every part's rows, order-independent
+      def state(): (Option[Long], Seq[Seq[String]]) = {
+        val vs = new Streaming.VersionedState(spark, dir)
+        val v = vs.readLatest()
+        v -> parts.map(p => vs.readPart(v.get, p).collect().map(_.toString).sorted.toSeq)
+      }
+      val before = state()
+      assert(before._1.contains(1L), s"$name: two folds did not commit v=1")
+      // a replayed and an out-of-order batchId carrying NEW rows
+      fold(batch(2), dir, 1L)
+      fold(batch(2), dir, 0L)
+      assert(state() == before, s"$name: a replayed batchId refolded")
+      // an empty batch under a new batchId commits no version
+      fold(batch(2).limit(0), dir, 2L)
+      assert(state() == before, s"$name: an empty batch changed the state")
+      // the guard passes the next new, non-empty batch
+      fold(batch(2), dir, 2L)
+      assert(state()._1.contains(2L), s"$name: a new batch was skipped")
+    }
   }
 }
