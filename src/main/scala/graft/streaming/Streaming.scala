@@ -364,7 +364,7 @@ object Streaming {
       * bootstrap, a rescaled range count, or `changed = None` (a fold whose
       * changed set is the whole relation) — `whole` lands in every range. */
     def rangedWrite(prev: Option[Long], name: String, keyCol: String,
-        whole: => DataFrame, changed: Option[DataFrame]): RangedWrite = {
+        whole: DataFrame, changed: Option[DataFrame]): RangedWrite = {
       val nR = assignRanges(spark)
       (prev, changed) match {
         case (Some(v), Some(rows)) if isRangedWith(v, name, nR) =>
@@ -523,19 +523,18 @@ object Streaming {
     foldNew(batch, stateDir, batchId) { (vs, prev) =>
       val spark = batch.sparkSession
       val e = batch.select(col("a").cast("long"), col("b").cast("long"))
-      val assign = prev match {
+      val (whole, changed): (DataFrame, Option[DataFrame]) = prev match {
         case None =>
           // first batch: plain batch CC; the id universe is the batch's own
           // endpoints (the standing universe grows with each batch's edges)
-          vs.rangedWrite(prev, "assign", "id", graft.er.Clustering.assign(
+          (graft.er.Clustering.assign(
             spark, e.select(explode(array(col("a"), col("b"))).as("id")).distinct(), e), None)
         case Some(v) =>
           val r = graft.er.Clustering.incrementalClustersWithDelta(
             spark, vs.readPart(v, "assign"), e)
-          vs.rangedWrite(prev, "assign", "id", r.assignment,
-            if (r.changedIsFull) None else Some(r.changed))
+          (r.assignment, if (r.changedIsFull) None else Some(r.changed))
       }
-      vs.commitWrites(batchId, Seq(assign), prev)
+      vs.commitWrites(batchId, Seq(vs.rangedWrite(prev, "assign", "id", whole, changed)), prev)
     }
 
   /** The standing assignment a [[streamingClusters]] query has built so
